@@ -195,31 +195,6 @@ def _bind(value: Column, f) -> Column:
     return F.element_at(F.transform(F.array(value), f), 1)
 
 
-def stopword_ratio(text: Column) -> Column:
-    return _bind(
-        tokens(text),
-        lambda w: F.size(F.filter(w, lambda t: t.isin(*STOPWORDS)))
-        / F.greatest(F.size(w), F.lit(1)),
-    )
-
-
-def distinct_ratio(text: Column) -> Column:
-    """Lexical diversity: distinct tokens / tokens. Low values flag
-    boilerplate/repetition — a standard pretraining quality signal."""
-    return _bind(
-        tokens(text),
-        lambda w: F.size(F.array_distinct(w)) / F.greatest(F.size(w), F.lit(1)),
-    )
-
-
-def mean_token_len(text: Column) -> Column:
-    return _bind(
-        tokens(text),
-        lambda w: F.aggregate(w, F.lit(0), lambda acc, t: acc + F.length(t))
-        / F.greatest(F.size(w), F.lit(1)),
-    )
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality score: length saturation + lexical diversity
     + stopword presence. The weights are illustrative; the shape (cheap
@@ -246,13 +221,6 @@ def _marker_ratio(markers: tuple[str, ...]):
         )
 
     return _ratio
-
-
-def lang_scores(text: Column) -> list[tuple[str, Column]]:
-    return [
-        (lang, _bind(tokens(text), _marker_ratio(markers)))
-        for lang, markers in LANG_MARKERS.items()
-    ]
 
 
 def lang_id(text: Column) -> Column:

@@ -32,11 +32,6 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm2(a) * norm2(b))
 
 
-def cosine_dist(a: Column, b: Column) -> Column:
-    """1 - cosine similarity (the reference's vector delta metric)."""
-    return F.lit(1.0) - cosine_sim(a, b)
-
-
 def quantize_scale(a: Column) -> Column:
     """Symmetric int8 scale: max(|x|)/127 (1.0 for all-zero vectors so
     dequantization is well-defined)."""

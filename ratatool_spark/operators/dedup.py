@@ -1,7 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Five strategies, all expressed as DataFrame plans (no Python in the data
-path except nothing — every one is built-in expressions):
+Five strategies, expressed as DataFrame plans:
 
   - **exact**: fingerprint group-by — one shuffle on a 60-bit hash.
   - **minhash LSH**: shingle → k minhash sigs → band → bucket self-join.
@@ -9,11 +8,19 @@ path except nothing — every one is built-in expressions):
     O(pairs-sharing-a-band), not O(n^2) — the standard scale path.
   - **simhash**: 32-bit sign-of-weighted-sum fingerprint; near-dup pairs by
     Hamming distance over bucketed prefixes.
-  - **ngram jaccard**: exact Jaccard over shingle sets via explode +
-    self-join on shingle + group count — the verifier for minhash, and
+  - **ngram jaccard**: exact Jaccard over shingle sets via an inverted
+    index (shingle → posting list) — the verifier for minhash, and
     usable alone at moderate scale.
   - **embedding cosine**: near-dup by cosine over embedding vectors (see
     operators/similarity.py for the ANN machinery it shares).
+
+The inverted-index pair operators (n-gram Jaccard, ROUGE-n, winnowing
+fingerprints) share one candidate stage, :func:`_posting_pairs`: posting
+lists → every i<j pair, enumerated by a vectorized numpy kernel inside
+``mapInPandas`` (:func:`_pairs_kernel`) → ``groupBy(id_a, id_b).sum``.
+Each operator keeps only its own index build and score. Python also runs
+in the Bloom filter build/probe and the embedding GEMM blocks; everything
+else is built-in expressions.
 
 At 100 TB the shape that matters: every strategy reduces to
 (shuffle-by-small-key, aggregate) or (explode, shuffle-by-token, count) —
@@ -422,11 +429,11 @@ def ngram_jaccard_pairs(
     threshold: float = 0.1,
     hasher: str = "portable",
     max_doc_freq: int | None = 1000,
-    kernel: str = "numpy",
 ) -> DataFrame:
     """Exact Jaccard similarity pairs (a < b) over distinct word-n-gram
-    sets: explode shingles, self-join on shingle, |A∩B| from the join,
-    |A|+|B| from per-doc counts, keep J ≥ threshold.
+    sets: invert shingle → posting list, |A∩B| = the number of posting
+    lists a pair shares (:func:`_posting_pairs`), |A|+|B| from per-doc
+    counts, keep J ≥ threshold.
 
     Cost is Σ_shingle df(shingle)² — inverted-index join, the exact-verify
     companion to minhash. ``max_doc_freq`` is the skew guard for the df²
@@ -435,25 +442,12 @@ def ngram_jaccard_pairs(
     index before pair generation, capping any posting list's contribution
     at max_doc_freq². It DEFAULTS ON (1000): one boilerplate shingle in a
     100 TB corpus otherwise collects a posting array of millions of ids —
-    a single executor-killing row whose in-array pair expansion is df²/2
-    structs (at the default cap: ≤ 500k structs ≈ 8 MB, executor-sized).
+    a single executor-killing row whose pair expansion is df²/2 pairs.
     Pass ``None`` only for small corpora where exactness on stopword
     shingles matters more than skew. Jaccard slightly *underestimates* on
     the affected pairs (per-doc sizes still count pruned shingles as
     non-shared), so it never promotes a pair across the threshold —
-    pruning can only drop candidates, never invent them.
-
-    ``kernel="numpy"`` (default) enumerates the Σ df² in-array i<j pair
-    combinations with vectorized ``triu`` gathers inside ``mapInPandas``
-    (see :func:`_pairs_kernel`) after round-robining the posting lists
-    across the cluster — the posting table is metadata-small after its
-    aggregation, so AQE's byte-based coalescing would otherwise pack the
-    whole quadratic pair workload onto ONE task regardless of cluster
-    width, and the interpreted nested-``transform`` expression costs
-    ~µs/pair. Pair counts are integers summed order-independently, so
-    both kernels are bit-identical (``test_jaccard_kernel_matches_expr``);
-    ``kernel="expr"`` keeps the pure-expression twin."""
-    _check_kernel(kernel)
+    pruning can only drop candidates, never invent them."""
     sh = df.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
@@ -465,9 +459,8 @@ def ngram_jaccard_pairs(
     # One inverted index (shingle → sorted posting list) through a single
     # exchange feeds BOTH the per-doc sizes and the pair counts — the text
     # is shingled exactly once, where a naive self-join + sizes branch
-    # re-evaluates the (expensive) shingling per branch. Pairs come from
-    # in-array i<j combinations: identical multiset to the equi-self-join,
-    # and the shuffle carries one row per shingle, not one per posting.
+    # re-evaluates the (expensive) shingling per branch. The shuffle
+    # carries one row per shingle, not one per posting.
     posting = F.array_sort(F.collect_list("id"))
     # persist both intermediates: `grouped` feeds the pair branch AND the
     # sizes branch, and `sizes` is broadcast twice (na, nb) — unpersisted,
@@ -480,51 +473,11 @@ def ngram_jaccard_pairs(
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    pair_source = grouped.where(F.size("ids") >= 2)
-    if max_doc_freq is not None:
-        # Sizes above were already computed from the unpruned index, so
-        # pruning here only removes intersection evidence (conservative).
-        pair_source = pair_source.where(F.size("ids") <= max_doc_freq)
-    if kernel == "numpy":
-        id_type = df.schema[id_col].dataType.simpleString()
-        pairs = _pairs_kernel(pair_source, id_type, counted=False)
-        # sum of the kernel's partial pair counts == the expression
-        # path's count(1) over the exploded combos: same integer.
-        inter = pairs.groupBy("id_a", "id_b").agg(
-            F.sum("m").alias("common")
-        )
-    else:
-        combos = F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
-        inter = (
-            pair_source.select(F.explode(combos).alias("p"))
-            .groupBy(
-                F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-            )
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-    j = (
-        inter.join(F.broadcast(sizes.withColumnRenamed("n", "na")), F.col("id_a") == F.col("id"))
-        .drop("id")
-        .join(F.broadcast(sizes.withColumnRenamed("n", "nb")), F.col("id_b") == F.col("id"))
-        .drop("id")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("common")
-                / (F.col("na") + F.col("nb") - F.col("common")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-    return j.where(F.col("jaccard") >= threshold)
+    # sizes come from the unpruned index, so the max_doc_freq prune only
+    # removes intersection evidence (conservative)
+    common = _posting_pairs(grouped, max_doc_freq, counted=False)
+    jaccard = F.col("m") / (F.col("na") + F.col("nb") - F.col("m")).cast("double")
+    return _scored_pairs(common, sizes, "jaccard", jaccard, threshold)
 
 
 def rouge_ngram_pairs(
@@ -535,7 +488,6 @@ def rouge_ngram_pairs(
     threshold: float = 0.35,
     hasher: str = "portable",
     max_doc_freq: int | None = 1000,
-    kernel: str = "numpy",
 ) -> DataFrame:
     """ROUGE-n F1 similarity pairs (a < b) over word n-gram MULTISETS —
     the overlap criterion instruction-tuning pipelines use to filter
@@ -549,26 +501,13 @@ def rouge_ngram_pairs(
 
     Same scale shape as the Jaccard index: ONE exchange builds the
     inverted index (gram → posting list of (id, count) structs), pairs
-    come from in-array i<j combinations carrying min(c_i, c_j), and
+    come from :func:`_posting_pairs` carrying min(c_i, c_j), and
     ``max_doc_freq`` caps any posting list's df² contribution
     (clipping only loses intersection evidence for pruned grams, so a
     pruned pair can only score lower — never promoted past the
-    threshold). Returns (id_a, id_b, rouge_f).
-
-    ``kernel="numpy"`` (default) enumerates the Σ df² in-array pair
-    combinations with one vectorized ``triu_indices`` gather per
-    posting list inside ``mapInPandas`` — the nested-``transform``
-    expression form is interpreted (no codegen) at ~µs/pair, and the
-    posting table is metadata-small after its aggregation so AQE
-    coalesces it to one task regardless of pair volume; the kernel path
-    round-robins posting lists across the cluster first (a #grams-row
-    shuffle, not data-scale). Clip sums are integer and
-    order-independent, so both kernels produce bit-identical scores
-    (pinned by ``test_rouge_kernel_matches_expr``). ``kernel="expr"``
-    keeps the pure-expression twin."""
+    threshold). Returns (id_a, id_b, rouge_f)."""
     from ratatool_spark.functions.text import word_ngrams
 
-    _check_kernel(kernel)
     gr = df.select(
         F.col(id_col).alias("id"),
         F.explode(word_ngrams(F.col(text_col), n)).alias("__g"),
@@ -584,34 +523,41 @@ def rouge_ngram_pairs(
         .groupBy(F.col("e.id").alias("id"))
         .agg(F.sum("e.c").alias("n"))
     )
-    pair_source = grouped.where(F.size("ids") >= 2)
+    clip = _posting_pairs(grouped, max_doc_freq, counted=True)
+    rouge_f = F.lit(2) * F.col("m") / (F.col("na") + F.col("nb")).cast("double")
+    return _scored_pairs(clip, sizes, "rouge_f", rouge_f, threshold)
+
+
+def _posting_pairs(
+    grouped: DataFrame, max_doc_freq: int | None, counted: bool
+) -> DataFrame:
+    """(id_a, id_b, m): the candidate stage shared by the inverted-index
+    pair operators. ``grouped`` holds one posting list per term in
+    column ``ids``; every i<j pair of a list is emitted by
+    :func:`_pairs_kernel` and m is summed over the lists the pair
+    shares. Lists shorter than 2 yield no pair; lists longer than
+    ``max_doc_freq`` (the df² skew guard, skipped when ``None``) are
+    dropped before enumeration."""
+    src = grouped.where(F.size("ids") >= 2)
     if max_doc_freq is not None:
-        pair_source = pair_source.where(F.size("ids") <= max_doc_freq)
-    id_type = df.schema[id_col].dataType.simpleString()
-    if kernel == "numpy":
-        pairs = _rouge_pairs_kernel(pair_source, id_type)
-    else:
-        combos = F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"),
-                        y["id"].alias("id_b"),
-                        F.least(x["c"], y["c"]).alias("m"),
-                    ),
-                ),
-            )
-        )
-        pairs = pair_source.select(F.explode(combos).alias("p")).select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.col("p.m").alias("m"),
-        )
-    inter = pairs.groupBy("id_a", "id_b").agg(F.sum("m").alias("clip"))
+        src = src.where(F.size("ids") <= max_doc_freq)
+    return (
+        _pairs_kernel(src, counted)
+        .groupBy("id_a", "id_b")
+        .agg(F.sum("m").alias("m"))
+    )
+
+
+def _scored_pairs(
+    pairs: DataFrame, sizes: DataFrame, name: str, score: Column,
+    threshold: float,
+) -> DataFrame:
+    """Broadcast-join the per-doc sizes ``(id, n)`` onto both ends of
+    ``pairs`` as ``na``/``nb``, then keep (id_a, id_b, ``name``) rows
+    where ``score`` — an expression over ``m``, ``na`` and ``nb`` — is
+    ≥ threshold."""
     scored = (
-        inter.join(
+        pairs.join(
             F.broadcast(sizes.withColumnRenamed("n", "na")),
             F.col("id_a") == F.col("id"))
         .drop("id")
@@ -619,16 +565,9 @@ def rouge_ngram_pairs(
             F.broadcast(sizes.withColumnRenamed("n", "nb")),
             F.col("id_b") == F.col("id"))
         .drop("id")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.lit(2) * F.col("clip")
-                / (F.col("na") + F.col("nb")).cast("double")
-            ).alias("rouge_f"),
-        )
+        .select("id_a", "id_b", score.alias(name))
     )
-    return scored.where(F.col("rouge_f") >= threshold)
+    return scored.where(F.col(name) >= threshold)
 
 
 # Bounds for the pair-enumeration kernel. _TRI_CACHE_MAX caps the
@@ -647,18 +586,25 @@ def _triu_blocks(length: int, budget: int):
     """Yield (iu, ju) int arrays covering every i<j index pair of a
     ``length``-entry list, each block at most ~``budget`` pairs (one
     i-row's j-range is further split when it alone exceeds the budget).
-    Same pair multiset as ``np.triu_indices(length, 1)``, streamed."""
+    Same pair multiset as ``np.triu_indices(length, 1)``, streamed.
+
+    A split row's i-array is a view of one budget-sized buffer that is
+    refilled for the next split row, so consume each block before
+    advancing the generator."""
     import numpy as np
 
+    i_buf = None
     s = 0
     while s < length - 1:
         c0 = length - 1 - s
         if c0 > budget:
             # a single i-row exceeds the budget: stream its j-range
-            i_arr = np.full(budget, s, dtype=np.int64)
+            if i_buf is None:
+                i_buf = np.empty(budget, dtype=np.int64)
+            i_buf.fill(s)
             for j0 in range(s + 1, length, budget):
                 j_arr = np.arange(j0, min(j0 + budget, length))
-                yield i_arr[: len(j_arr)], j_arr
+                yield i_buf[: len(j_arr)], j_arr
             s += 1
             continue
         e, acc = s, 0
@@ -678,20 +624,19 @@ def _triu_blocks(length: int, budget: int):
         s = e
 
 
-def _pairs_kernel(
-    pair_source: DataFrame, id_type: str, counted: bool
-) -> DataFrame:
+def _pairs_kernel(pair_source: DataFrame, counted: bool) -> DataFrame:
     """i<j pair enumeration over posting lists, vectorized: one
     ``triu_indices`` gather per list (index pairs cached per list length
     up to ``_TRI_CACHE_MAX``; longer lists stream through
     :func:`_triu_blocks` so no single list materializes C(df, 2) pairs
     at once), buffered to ~``_FLUSH_PAIRS`` pairs, partially aggregated
     with a pandas groupby before crossing Arrow — the caller's
-    ``groupBy(id_a, id_b).sum(m)`` finishes the integer sums, so the
-    result is bit-identical to the nested-``transform`` expression twin
+    ``groupBy(id_a, id_b).sum(m)`` finishes the integer sums
     (``counted=True``: lists are (id, c) structs and m = min(c_i, c_j),
     the ROUGE clip; ``counted=False``: lists are bare ids and m ≡ 1, so
-    sum(m) = the pair count the set-based callers aggregate). Posting
+    sum(m) = the pair count the set-based callers aggregate). The
+    interpreted nested-``transform`` expression enumerates the same
+    multiset at ~µs/pair; tests keep it as the reference. Posting
     lists are round-robined across the cluster first: the posting table
     is #grams rows (metadata-scale — the repartition shuffle is tiny)
     but carries Σ df² pair work, which AQE's size-based coalescing would
@@ -699,6 +644,10 @@ def _pairs_kernel(
     import numpy as np
     import pandas as pd
 
+    id_field = pair_source.schema["ids"].dataType.elementType
+    if counted:
+        id_field = id_field["id"].dataType
+    id_type = id_field.simpleString()
     out_schema = f"id_a {id_type}, id_b {id_type}, m long"
 
     def gen(batches):
@@ -712,8 +661,8 @@ def _pairs_kernel(
             m = np.concatenate([t[2] for t in bufs])
             pdf = pd.DataFrame({"id_a": a, "id_b": b, "m": m})
             # dropna=False: NULL doc ids must survive the partial
-            # aggregation exactly as Spark's groupBy keeps them on the
-            # expression path (pandas drops NaN group keys by default)
+            # aggregation exactly as Spark's groupBy keeps them (pandas
+            # drops NaN group keys by default)
             return pdf.groupby(
                 ["id_a", "id_b"], as_index=False, sort=False, dropna=False
             )["m"].sum()
@@ -756,16 +705,6 @@ def _pairs_kernel(
         .repartition(n_parts)
         .mapInPandas(gen, schema=out_schema)
     )
-
-
-def _rouge_pairs_kernel(pair_source: DataFrame, id_type: str) -> DataFrame:
-    """Clipped-count pair kernel — see :func:`_pairs_kernel`."""
-    return _pairs_kernel(pair_source, id_type, counted=True)
-
-
-def _check_kernel(kernel: str) -> None:
-    if kernel not in ("numpy", "expr"):
-        raise ValueError(f"kernel must be 'numpy' or 'expr', got {kernel!r}")
 
 
 def jaccard_verify(
@@ -1975,7 +1914,6 @@ def winnow_candidate_pairs(
     window: int = 4,
     min_shared: int = 2,
     max_fp_freq: int | None = 1000,
-    kernel: str = "numpy",
 ) -> DataFrame:
     """Shared-winnowing-fingerprint candidate pairs (a < b) — the MOSS
     pipeline (Schleimer et al. SIGMOD'03) distributed: winnow each
@@ -1988,20 +1926,12 @@ def winnow_candidate_pairs(
     pairs for position-level span alignment.
 
     100 TB shape: identical discipline to :func:`ngram_jaccard_pairs` —
-    ONE posting-list exchange feeds pair generation, winnowing keeps only
-    ~1/window of gram hashes in the index, and ``max_fp_freq`` caps any
-    posting's df² contribution (boilerplate fingerprints dropped BEFORE
-    pair expansion). Never all-pairs.
-
-    ``kernel="numpy"`` (default) enumerates the i<j pair combinations
-    with vectorized ``triu`` gathers inside ``mapInPandas`` (see
-    :func:`_pairs_kernel`; same rationale and bit-identical counts as
-    :func:`ngram_jaccard_pairs` — pinned by
-    ``test_winnow_kernel_matches_expr``); ``kernel="expr"`` keeps the
-    pure-expression twin."""
+    ONE posting-list exchange feeds :func:`_posting_pairs`, winnowing
+    keeps only ~1/window of gram hashes in the index, and
+    ``max_fp_freq`` caps any posting's df² contribution (boilerplate
+    fingerprints dropped BEFORE pair expansion). Never all-pairs."""
     from ratatool_spark.functions.text import winnow_fingerprints
 
-    _check_kernel(kernel)
     fps = (
         df.select(
             F.col(id_col).alias("id"),
@@ -2012,36 +1942,13 @@ def winnow_candidate_pairs(
         .select("id", F.col("__f.fp").alias("fp"))
         .distinct()
     )
-    grouped = _persist(
-        fps.groupBy("fp").agg(F.array_sort(F.collect_list("id")).alias("ids"))
-    )
-    pair_source = grouped.where(F.size("ids") >= 2)
-    if max_fp_freq is not None:
-        pair_source = pair_source.where(F.size("ids") <= max_fp_freq)
-    if kernel == "numpy":
-        id_type = df.schema[id_col].dataType.simpleString()
-        shared = (
-            _pairs_kernel(pair_source, id_type, counted=False)
-            .groupBy("id_a", "id_b")
-            .agg(F.sum("m").alias("n_shared"))
-        )
-    else:
-        combos = F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
-        shared = (
-            pair_source.select(F.explode(combos).alias("p"))
-            .select("p.id_a", "p.id_b")
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
-    return shared.where(F.col("n_shared") >= min_shared)
+    # not persisted: the pair stage is the index's only consumer
+    grouped = fps.groupBy("fp").agg(
+        F.array_sort(F.collect_list("id")).alias("ids"))
+    shared = _posting_pairs(grouped, max_fp_freq, counted=False)
+    return shared.select(
+        "id_a", "id_b", F.col("m").alias("n_shared")
+    ).where(F.col("n_shared") >= min_shared)
 
 
 def pair_recall_by_band(

@@ -152,10 +152,12 @@ def _delta_expr(path: str, dtype: T.DataType, cfg: DiffConfig) -> Column:
         dtype_col = F.when(both, F.lit(STRING)).otherwise(F.lit(UNKNOWN))
         delta = F.when(both, F.levenshtein(l, r).cast("double"))
     elif isinstance(dtype, (T.TimestampType, T.DateType)):
-        # epoch-seconds numeric delta; Avro encodes these as longs so the
-        # reference diffs them numerically too
+        # numeric delta in Avro's encoding of each type, which the
+        # reference diffs numerically: epoch seconds for TIMESTAMP, days
+        # since epoch for DATE (Spark rejects a DATE → DOUBLE cast)
+        enc = F.unix_date if isinstance(dtype, T.DateType) else (lambda c: c)
         dtype_col = F.when(both, F.lit(NUMERIC)).otherwise(F.lit(UNKNOWN))
-        delta = F.when(both, r.cast("double") - l.cast("double"))
+        delta = F.when(both, enc(r).cast("double") - enc(l).cast("double"))
     elif isinstance(dtype, T.ArrayType) and isinstance(dtype.elementType, _NUMERIC_TYPES):
         # numeric vectors: cosine distance when same length, else UNKNOWN
         # (AvroDiffy.scala:117-142: size mismatch ⇒ UNKNOWN)

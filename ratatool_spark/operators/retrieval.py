@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -342,21 +343,38 @@ def save_bm25_index(
     from their original plans — as separate actions those re-ran the
     tokenize + posting shuffle per output (three full corpus passes).
     Exactness: postings hold one row per (doc_id, term) with ``dl``
-    riding every row, so ``count by term`` = dfreq and the distinct
-    (doc_id, dl) aggregate = (n_docs, total_dl), integer-identical to
-    the single-pass values."""
+    riding every row, so ``count by term`` = dfreq and the per-doc_id
+    aggregate = (n_docs, total_dl), integer-identical to the
+    single-pass values.
+
+    Raises ``ValueError`` when ``docs`` holds more than one row for a
+    ``doc_id`` (the stats would silently count it wrong). The guard rides
+    the same stats aggregate: a document's term counts sum to its
+    length, so a per-id ``sum(tf) != dl`` means two rows shared the id.
+    No postings are left at ``path`` when it fires."""
     postings, _, _ = build_bm25_postings(docs, id_col, text_col, lowercase)
-    postings.write.mode("overwrite").parquet(os.path.join(path, "postings"))
-    stored = docs.sparkSession.read.parquet(os.path.join(path, "postings"))
+    post_path = os.path.join(path, "postings")
+    postings.write.mode("overwrite").parquet(post_path)
+    stored = docs.sparkSession.read.parquet(post_path)
+    row = (
+        stored.groupBy("doc_id")
+        .agg(F.max("dl").alias("dl"), F.sum("tf").alias("__len"))
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dl").alias("total_dl"),
+            F.count(F.when(F.col("__len") != F.col("dl"), 1)).alias("n_dup"),
+        )
+        .collect()[0]
+    )
+    if row["n_dup"]:
+        shutil.rmtree(post_path, ignore_errors=True)
+        raise ValueError(
+            f"save_bm25_index: {row['n_dup']} doc_id value(s) appear in more "
+            "than one input row; BM25 stats need one row per document"
+        )
     stored.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq")).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "dfreq"))
-    row = (
-        stored.select("doc_id", "dl")
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl"))
-        .collect()[0]
-    )
     side = {
         "n_docs": row["n_docs"],
         "total_dl": int(row["total_dl"]),

@@ -104,25 +104,6 @@ def _word_freq_syms(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def wordpiece_pair_scores(
-    df: DataFrame, text_col: str = "text", top_k: int | None = None
-) -> DataFrame:
-    """Round-1 WordPiece merge candidates over the corpus: (a, b,
-    cnt_pair, cnt_a, cnt_b, score) with ``score = cnt_pair /
-    (cnt_a * cnt_b)`` over BERT-marked symbols — the statistic one
-    training round ranks. Distributed: distinct-word collapse, one
-    pair-count aggregate, one symbol-count aggregate, an
-    aggregate-sized ranking join."""
-    wf = _word_freq_syms(df, text_col)
-    pc, sc = _round_stats(wf)
-    out = _score_join(pc, sc)
-    if top_k is not None:
-        out = out.orderBy(
-            F.col("score").desc(), F.col("a").asc(), F.col("b").asc()
-        ).limit(top_k)
-    return out
-
-
 def _round_stats(wf: DataFrame) -> tuple[DataFrame, DataFrame]:
     z = F.arrays_zip(
         F.slice(

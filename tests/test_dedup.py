@@ -1435,13 +1435,54 @@ def test_rouge_ngram_pairs_matches_bruteforce_random(spark):
         assert abs(got[k] - v) < 1e-9, k
 
 
-def test_rouge_kernel_matches_expr(spark):
-    """The numpy pair-enumeration kernel (r11: triu_indices gather +
-    in-task partial aggregation instead of the interpreted nested
-    transform) is bit-identical to the expression twin — integer clip
-    sums are order-independent, so the double F1s match exactly. Also
-    covers non-integer ids (the kernel gathers object arrays) and the
-    max_doc_freq prune interacting with both paths identically."""
+def _expr_pairs(pair_source, counted):
+    """Reference pair enumerator: the interpreted nested-``transform``
+    form of ``dedup._pairs_kernel``. Every i<j pair of each posting
+    list becomes one (id_a, id_b, m) row, m = min(c_i, c_j) for (id, c)
+    struct lists, else 1."""
+    from pyspark.sql import functions as F
+
+    ids = F.col("ids")
+
+    def pair(x, y):
+        if counted:
+            return F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
+                            F.least(x["c"], y["c"]).alias("m"))
+        return F.struct(x.alias("id_a"), y.alias("id_b"),
+                        F.lit(1).cast("long").alias("m"))
+
+    combos = F.flatten(F.transform(
+        ids,
+        lambda x, i: F.transform(F.slice(ids, i + 2, F.size(ids)),
+                                 lambda y: pair(x, y)),
+    ))
+    return pair_source.select(F.explode(combos).alias("p")).select(
+        "p.id_a", "p.id_b", "p.m")
+
+
+def _kernel_and_reference(monkeypatch, build):
+    """Rows of ``build()`` as shipped, and with the numpy pair kernel
+    swapped for :func:`_expr_pairs`, each sorted (by repr: ids may be
+    NULL). Pair sums are integers summed order-independently, so the
+    two must be bit-identical."""
+    from ratatool_spark.operators import dedup
+
+    def rows():
+        return sorted(map(tuple, build().collect()), key=repr)
+
+    fast = rows()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_pairs_kernel", _expr_pairs)
+        ref = rows()
+    return fast, ref
+
+
+def test_rouge_kernel_matches_expr(spark, monkeypatch):
+    """The numpy pair-enumeration kernel (triu_indices gather + in-task
+    partial aggregation) matches the nested-transform reference bit for
+    bit — integer clip sums are order-independent, so the double F1s
+    match exactly. Also covers non-integer ids (the kernel gathers
+    object arrays) and the max_doc_freq prune."""
     import random
 
     from ratatool_spark.operators.dedup import rouge_ngram_pairs
@@ -1455,25 +1496,16 @@ def test_rouge_kernel_matches_expr(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     for kwargs in ({"threshold": 0.0}, {"threshold": 0.0, "max_doc_freq": 8}):
-        fast = sorted(
-            map(tuple, rouge_ngram_pairs(
-                docs, kernel="numpy", **kwargs).collect())
-        )
-        expr = sorted(
-            map(tuple, rouge_ngram_pairs(
-                docs, kernel="expr", **kwargs).collect())
-        )
-        assert fast == expr
+        fast, ref = _kernel_and_reference(
+            monkeypatch, lambda: rouge_ngram_pairs(docs, **kwargs))
+        assert fast == ref
         assert len(fast) > 0
 
 
-def test_jaccard_kernel_matches_expr(spark):
-    """The numpy pair-enumeration kernel (r12: ported from rouge — the
-    posting table is metadata-small, so AQE packed the Σ df² pair work
-    onto one task on the expression path) must be bit-identical to the
-    expression twin: pair counts are integers summed order-independently,
-    so the double Jaccards match exactly. Covers the max_doc_freq prune
-    on both paths."""
+def test_jaccard_kernel_matches_expr(spark, monkeypatch):
+    """Jaccard pairs: numpy kernel ≡ nested-transform reference (pair
+    counts are integers summed order-independently, so the double
+    Jaccards match exactly), with long ids and the max_doc_freq prune."""
     import random
 
     from ratatool_spark.operators.dedup import ngram_jaccard_pairs
@@ -1487,21 +1519,16 @@ def test_jaccard_kernel_matches_expr(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for kwargs in ({"threshold": 0.0}, {"threshold": 0.0, "max_doc_freq": 8}):
-        fast = sorted(
-            map(tuple, ngram_jaccard_pairs(
-                docs, kernel="numpy", **kwargs).collect())
-        )
-        expr = sorted(
-            map(tuple, ngram_jaccard_pairs(
-                docs, kernel="expr", **kwargs).collect())
-        )
-        assert fast == expr
+        fast, ref = _kernel_and_reference(
+            monkeypatch, lambda: ngram_jaccard_pairs(docs, **kwargs))
+        assert fast == ref
         assert len(fast) > 0
 
 
-def test_winnow_kernel_matches_expr(spark):
-    """Winnow candidate pairs: numpy kernel ≡ expression twin, including
-    string ids (object-array gathers) and the max_fp_freq prune."""
+def test_winnow_kernel_matches_expr(spark, monkeypatch):
+    """Winnow candidate pairs: numpy kernel ≡ nested-transform
+    reference, including string ids (object-array gathers) and the
+    max_fp_freq prune."""
     import random
 
     from ratatool_spark.operators.dedup import winnow_candidate_pairs
@@ -1519,29 +1546,21 @@ def test_winnow_kernel_matches_expr(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     for kwargs in ({"min_shared": 1}, {"min_shared": 1, "max_fp_freq": 6}):
-        fast = sorted(
-            map(tuple, winnow_candidate_pairs(
-                docs, kernel="numpy", **kwargs).collect())
-        )
-        expr = sorted(
-            map(tuple, winnow_candidate_pairs(
-                docs, kernel="expr", **kwargs).collect())
-        )
-        assert fast == expr
+        fast, ref = _kernel_and_reference(
+            monkeypatch, lambda: winnow_candidate_pairs(docs, **kwargs))
+        assert fast == ref
         assert len(fast) > 0
 
 
-def test_pairs_kernel_null_ids_match_expr(spark):
+def test_pairs_kernel_null_ids_match_expr(spark, monkeypatch):
     """NULL doc ids reach rouge postings (struct(id, c) is non-null even
     when id is) and must survive the kernel's pandas partial aggregation
-    exactly as Spark's null-safe groupBy keeps them on the expression
-    path (dropna=False — r12 ADVICE fix). Downstream the sizes equi-join
-    drops null-id pairs on BOTH paths, so the kernel itself is pinned
-    here, plus the end-to-end agreement."""
-    from pyspark.sql import functions as F
-
+    exactly as Spark's null-safe groupBy keeps them (dropna=False).
+    Downstream the sizes equi-join drops null-id pairs, so the shared
+    pair primitive itself is pinned here, plus the end-to-end agreement
+    with the reference."""
     from ratatool_spark.operators.dedup import (
-        _pairs_kernel,
+        _posting_pairs,
         rouge_ngram_pairs,
     )
 
@@ -1553,16 +1572,12 @@ def test_pairs_kernel_null_ids_match_expr(spark):
         ],
         "ids array<struct<id string, c long>>",
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["m"]
-        for r in _pairs_kernel(src, "string", counted=True)
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("m").alias("m"))
-        .collect()
-    }
+    fast, ref = _kernel_and_reference(
+        monkeypatch, lambda: _posting_pairs(src, None, counted=True))
     # null ids participate with clip = min(c_i, c_j); the (None, a) pair
-    # aggregates ACROSS lists (1 + 4) — dropped entirely before the fix
-    assert got == {(None, "a"): 5, (None, "b"): 2, ("a", "b"): 1}
+    # aggregates ACROSS lists (1 + 4)
+    assert fast == ref
+    assert set(fast) == {(None, "a", 5), (None, "b", 2), ("a", "b", 1)}
 
     docs = spark.createDataFrame(
         [
@@ -1572,15 +1587,9 @@ def test_pairs_kernel_null_ids_match_expr(spark):
         ],
         "doc_id string, text string",
     )
-    fast = sorted(
-        map(tuple, rouge_ngram_pairs(
-            docs, threshold=0.0, kernel="numpy").collect())
-    )
-    expr = sorted(
-        map(tuple, rouge_ngram_pairs(
-            docs, threshold=0.0, kernel="expr").collect())
-    )
-    assert fast == expr and len(fast) > 0
+    fast, ref = _kernel_and_reference(
+        monkeypatch, lambda: rouge_ngram_pairs(docs, threshold=0.0))
+    assert fast == ref and len(fast) > 0
 
 
 def test_triu_blocks_cover_all_pairs():
@@ -1604,25 +1613,6 @@ def test_triu_blocks_cover_all_pairs():
         want = list(zip(iu.tolist(), ju.tolist()))
         assert sorted(got) == sorted(want)
         assert len(got) == len(want)  # no duplicates
-
-
-def test_pair_kernel_arg_validated(spark):
-    """kernel= must be 'numpy' or 'expr' — a typo silently changing the
-    execution plan is the r12 ADVICE fix."""
-    import pytest as _pt
-
-    from ratatool_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        rouge_ngram_pairs,
-        winnow_candidate_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [("a", "x y z")], "doc_id string, text string")
-    for fn in (ngram_jaccard_pairs, rouge_ngram_pairs,
-               winnow_candidate_pairs):
-        with _pt.raises(ValueError, match="kernel"):
-            fn(docs, kernel="np")
 
 
 def test_cos_scored_entries_bit_identical_to_composition(spark):

@@ -167,6 +167,30 @@ def test_ignore_nan(spark):
     assert d_without.field_stats.collect()[0]["mean"] == pytest.approx(3.0)
 
 
+def test_date_field_numeric_delta_in_days(spark):
+    """A DATE field diffs as a NUMERIC delta in days since epoch (Avro's
+    ``date`` encoding); the rendered sides stay ISO dates."""
+    import datetime as dt
+
+    day0 = dt.date(2024, 1, 1)
+    lhs = spark.createDataFrame(
+        [(i, day0 + dt.timedelta(days=i)) for i in range(10)], "id int, d date"
+    )
+    rhs = lhs.withColumn(
+        "d", F.when(F.col("id") % 2 == 0, F.date_add("d", 3)).otherwise(F.col("d"))
+    )
+    d = diff(lhs, rhs, ["id"])
+    rows = d.deltas.where(F.col("key") == "0").collect()
+    assert (rows[0]["field"], rows[0]["delta_type"]) == ("d", "NUMERIC")
+    assert rows[0]["delta"] == 3.0
+    assert (rows[0]["left"], rows[0]["right"]) == ("2024-01-01", "2024-01-04")
+    fs = {r["field"]: r for r in d.field_stats.collect()}
+    assert set(fs) == {"d"}
+    assert fs["d"]["delta_type"] == "NUMERIC"
+    assert fs["d"]["count"] == 5
+    assert fs["d"]["mean"] == pytest.approx(3.0)
+
+
 def test_save_stats_tsv(spark, base, tmp_path):
     rhs = base.withColumn("x", F.col("x") + 10.0)
     d = diff(base, rhs, ["id"])

@@ -193,6 +193,15 @@ def test_dedup_shared_subplans_cached(spark, q, max_scans):
     assert "InMemoryTableScan" in plan
 
 
+def test_winnow_pairs_index_not_cached(spark):
+    """winnow_candidate_pairs: the fingerprint posting index has one
+    consumer (the pair stage), so nothing is persisted — a cache there
+    would only hold executor memory until the session's next release."""
+    p = plan_of(spark, "winnow_candidate_pairs")
+    assert "InMemoryTableScan" not in p
+    assert "MapInPandas" in p
+
+
 def test_mixture_sample_fact_never_shuffles(spark):
     """mixture_sample: rates reach the fact table via BroadcastHashJoin;
     the only nested-loop is the deliberate 1-row global-K broadcast. The

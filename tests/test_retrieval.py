@@ -201,6 +201,23 @@ def test_bm25_incremental_update_rejects_duplicate_ids(spark):
         update_bm25_index(spark, idx, docs.where("doc_id = 1"))
 
 
+def test_bm25_save_rejects_duplicate_ids(spark):
+    """Two input rows sharing a doc_id fail the build by name, whether
+    the rows differ in length or not, and leave no postings behind."""
+    from ratatool_spark.operators.retrieval import save_bm25_index
+
+    for rows in (
+        [(1, "red fox"), (1, "blue whale swims"), (2, "red whale")],
+        [(1, "red fox"), (1, "red fox"), (2, "red whale")],
+    ):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        idx = os.path.join(tempfile.mkdtemp(), "dup_build")
+        with pytest.raises(ValueError, match="more than one input row"):
+            save_bm25_index(docs, idx)
+        assert not os.path.exists(os.path.join(idx, "postings"))
+        assert not os.path.exists(os.path.join(idx, "stats.json"))
+
+
 def test_bm25_incremental_update_restores_orphaned_snapshot(spark):
     import shutil
 
