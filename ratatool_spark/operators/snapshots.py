@@ -113,6 +113,7 @@ import os
 import re
 import shutil
 import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -196,6 +197,19 @@ def _remove_published(path: str) -> None:
     os.remove(path)
     if os.path.exists(path + ".claim"):
         os.remove(path + ".claim")
+
+
+def _replace_json(path: str, payload) -> None:
+    """Atomically replace a metadata JSON file: write a tmp sibling,
+    fsync it (the write is durable before it becomes visible), then
+    ``os.replace`` — a concurrent reader sees the old content or the
+    new, never a truncated file."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def _remove_branch_manifest(table_path: str, name: str, i: int) -> None:
@@ -415,12 +429,7 @@ def evolve_partition_spec(table_path: str, spec: list[dict]) -> int:
         wrote_file = False
     else:
         spec_id = len(specs)
-        tmp = p + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"specs": specs + [norm]}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
+        _replace_json(p, {"specs": specs + [norm]})
         wrote_file = True
     try:
         return _publish(
@@ -442,12 +451,7 @@ def evolve_partition_spec(table_path: str, spec: list[dict]) -> int:
             # names (the offset counter is derived from the recorded
             # specs, which the revert restored), re-adopting those
             # orphaned tuples for pruning/drop_partition.
-            tmp = p + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump({"specs": specs}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, p)
+            _replace_json(p, {"specs": specs})
         raise
 
 
@@ -554,13 +558,7 @@ def set_table_property(table_path: str, key: str, value) -> None:
         raise ValueError(f"bad property key {key!r}")
     d = os.path.join(table_path, _SNAP_DIR, _PROPS_DIR)
     os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, f"{key}.json")
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(value, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    _replace_json(os.path.join(d, f"{key}.json"), value)
 
 
 def set_bloom_filter(
@@ -2277,11 +2275,7 @@ def _read_entries(
             if d.get("kind") == "range":
                 # predicate delete: drop rows inside the box; NULL-valued
                 # rows never match a range (same rule as the CoW delete)
-                inside = None
-                for c, (lo, hi) in d["box"].items():
-                    cond = F.col(c).between(lo, hi)
-                    inside = cond if inside is None else (inside & cond)
-                df = df.where(F.coalesce(~inside, F.lit(True)))
+                df = df.where(F.coalesce(~_box_expr(d["box"]), F.lit(True)))
             elif d.get("kind") == "position":
                 if id(d) in pos_live:
                     side = spark.read.schema(_POS_SIDECAR_SCHEMA).parquet(
@@ -2555,18 +2549,28 @@ def compact_snapshot(
     Scale: each bin is ~``target_bytes`` regardless of table size, so a
     task rewrites one bin independently; the planner input is the
     metadata-scale manifest."""
+    return _compact(spark, _main_head(table_path), target_bytes)
+
+
+def _compact(
+    spark: SparkSession, head: _Head, target_bytes: int
+) -> int | None:
+    """Compaction body of :func:`compact_snapshot` and
+    :func:`compact_branch`."""
     from ratatool_spark.operators.layout import compaction_plan
 
-    parent = current_snapshot_id(table_path)
-    manifest = snapshot_manifest(spark, table_path, parent)
-    plan = compaction_plan(manifest, "bytes", ["path"], target_bytes)
+    m = head.m
+    rows = [(e["path"], e["rows"], e["bytes"]) for e in m["files"]]
+    plan = compaction_plan(
+        local_df(spark, rows, "path string, rows bigint, bytes bigint"),
+        "bytes", ["path"], target_bytes,
+    )
     bins: dict[int, list[str]] = {}
     for r in plan.collect():  # metadata-scale: one row per file
         bins.setdefault(r["bin"], []).append(r["path"])
     multi = {b: ps for b, ps in bins.items() if len(ps) > 1}
     if not multi:
         return None
-    m = read_manifest(table_path, parent)
     by_path = {e["path"]: e for e in m["files"]}
     # write every bin's merged file first (orphans if we lose the race),
     # then publish ONE replace commit covering all bins. Reads go
@@ -2579,21 +2583,14 @@ def compact_snapshot(
     for b in sorted(multi):
         paths = multi[b]
         merged = _read_entries(
-            spark, table_path, m, [by_path[p] for p in paths]
+            spark, head.path, m, [by_path[p] for p in paths]
         ).coalesce(1)
         new_files.extend(
-            _write_data_files(merged, table_path, current_manifest=m))
+            _write_data_files(merged, head.path, current_manifest=m))
         removed.extend(paths)
     kept = [e for e in m["files"] if e["path"] not in set(removed)]
-    _stamp_seq(new_files, parent)
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while compacting — replan"
-        )
-    return _publish(
-        table_path, parent, kept + new_files, m["schema"], "replace",
-        deletes=m.get("deletes", []), parent_manifest=m,
-    )
+    _stamp_seq(new_files, head.seq_parent)
+    return head.publish(kept + new_files, m.get("deletes", []), "replace")
 
 
 def evolve_add_columns(
@@ -2909,6 +2906,146 @@ def _split_by_box(
     return touched, [e for e in m["files"] if e["path"] not in tset]
 
 
+def _box_expr(box: dict):
+    """``lo <= col <= hi`` on every column of a conjunctive range box —
+    NULL where a box column is NULL, so each caller decides which side
+    NULL-valued rows fall on."""
+    inside = None
+    for c, (lo, hi) in box.items():
+        cond = F.col(c).between(lo, hi)
+        inside = cond if inside is None else (inside & cond)
+    return inside
+
+
+def _nan(v) -> bool:
+    return isinstance(v, float) and v != v
+
+
+def _bound(v, op: str):
+    """A range-delete bound as the JSON manifest stores it: date/datetime
+    bounds (the typical retention predicate) serialize as ISO strings —
+    Spark coerces string literals back for the read-side filter, and
+    date columns never carry manifest stats (absent = keep), so the fold
+    stays sound. Anything else non-JSON fails UP FRONT, before any
+    change files are written."""
+    import datetime
+
+    if isinstance(v, datetime.datetime):
+        return v.isoformat(sep=" ")
+    if isinstance(v, datetime.date):
+        return v.isoformat()
+    if isinstance(v, (int, float, str)):
+        return v
+    raise ValueError(
+        f"{op}: box bound {v!r} ({type(v).__name__}) is not "
+        "manifest-serializable — use int/float/str/date/datetime bounds, "
+        "or the copy-on-write range delete"
+    )
+
+
+def _batch_key_stats(changes: DataFrame, keys: list[str], op: str):
+    """One aggregate pass over a merge batch: (row, nn_expr) where row
+    carries count / fully-keyed count / per-key min-max bounds. Raises
+    on duplicate keys among fully-keyed rows — both copies would
+    survive the merge, silently breaking the one-row-per-key contract
+    (count_distinct skips rows with any NULL key: those never match an
+    existing row and insert as-is, so they are exempt)."""
+    nn = None
+    for c in keys:
+        e = F.col(c).isNotNull()
+        nn = e if nn is None else (nn & e)
+    aggs = [
+        F.count(F.lit(1)).alias("__n"),
+        F.count(F.when(nn, 1)).alias("__nk"),
+        F.count_distinct(*[F.col(c) for c in keys]).alias("__nd"),
+    ]
+    for c in keys:
+        aggs += [F.min(F.col(c)).alias(f"lo_{c}"),
+                 F.max(F.col(c)).alias(f"hi_{c}")]
+    row = changes.agg(*aggs).first()
+    if row["__nd"] < row["__nk"]:
+        raise ValueError(
+            f"{op}: changes contain {row['__nk'] - row['__nd']} "
+            f"duplicate-key row(s) on {keys} — both copies would "
+            "survive; dedup the batch first"
+        )
+    return row, nn
+
+
+def _batch_split(m: dict, row, keys: list[str], spark, changes):
+    """(touched, untouched) head files for a CoW merge batch: the
+    batch's per-key bounding box + per-file bloom refinement."""
+    if any(row[f"lo_{c}"] is None for c in keys):
+        # some key column is NULL on EVERY change row — no change row is
+        # fully keyed on it, so nothing can match an existing row:
+        # pure insert, no file touched
+        return [], m["files"]
+    if any(_nan(row[f"lo_{c}"]) or _nan(row[f"hi_{c}"]) for c in keys):
+        # a float key column contains NaN: the bounding box degenerates
+        # (every `stat <= NaN` comparison is False, so NO file would
+        # intersect) while Spark's join DOES match NaN keys to existing
+        # NaN rows — pruning on that box would silently append
+        # duplicates. NaN stats are unusable stats: touch every file,
+        # same as stats-absent.
+        return m["files"], []
+    box = {c: (row[f"lo_{c}"], row[f"hi_{c}"]) for c in keys}
+    touched, untouched = _split_by_box(m, box)
+    if any(e.get("bloom") for e in touched):
+        # bloom refinement: a SCATTERED key batch intersects every
+        # range box, but each file's bloom still answers "could this
+        # file hold one of the batch keys" — the rewrite set shrinks to
+        # actual (plus false-positive) holders
+        touched, skipped = _bloom_refine_touched(
+            spark, m, touched, changes, keys)
+        untouched = untouched + skipped
+    return touched, untouched
+
+
+class _Head(NamedTuple):
+    """The commit target of a snapshot mutation: main's current snapshot
+    (:func:`_main_head`) or a named branch's head (:func:`_branch_head`).
+    Every mutation has ONE body that runs against a head, so main and
+    branch commits differ only in what the head carries:
+
+    * ``m`` — the head manifest, files loaded;
+    * ``seq_parent`` — the :func:`_stamp_seq` parent: new data files and
+      new delete entries carry sequence number ``seq_parent + 1``;
+    * ``noop_id`` — what a mutation that changes nothing returns;
+    * ``publish(files, deletes, operation, changes=None, extra=None)``
+      — commit the new file and delete lists, return the new id."""
+
+    path: str
+    m: dict
+    seq_parent: int
+    noop_id: int
+    publish: Callable[..., int]
+
+
+def _main_head(table_path: str) -> _Head:
+    """Head at main's current snapshot. ``publish`` refuses with
+    :class:`CommitConflict` when another commit landed while the
+    mutation was writing (its inputs are stale), then publishes
+    ``parent + 1`` with its CDC change files and ``extra`` fields."""
+    parent = current_snapshot_id(table_path)
+    if parent is None:
+        raise FileNotFoundError(f"no snapshots under {table_path}")
+    m = read_manifest(table_path, parent)
+
+    def publish(files, deletes, operation, changes=None, extra=None):
+        if current_snapshot_id(table_path) != parent:
+            raise CommitConflict(
+                f"snapshot advanced past {parent} while this {operation} "
+                "commit was writing — replan"
+            )
+        return _publish(
+            table_path, parent, files, m["schema"], operation,
+            extra=extra, deletes=deletes, changes=changes,
+            parent_manifest=m,
+        )
+
+    return _Head(table_path, m, parent, parent, publish)
+
+
 def merge_snapshot(
     spark: SparkSession,
     table_path: str,
@@ -2939,72 +3076,34 @@ def merge_snapshot(
     replay exactly what this commit did without diffing file sets —
     the Delta change-data-feed design. Cost: one extra pass over the
     touched files."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
-    _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    # one pass: the change batch's per-key-column bounding box PLUS the
-    # duplicate-key guard — two change rows sharing a key would BOTH
-    # land in the new snapshot (the anti-join only removes OLD rows),
-    # silently breaking the one-row-per-key contract
-    nn = None
-    for k in keys:
-        c = F.col(k).isNotNull()
-        nn = c if nn is None else (nn & c)
-    aggs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(nn, 1)).alias("__nk"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
-    ]
-    for k in keys:
-        aggs += [F.min(F.col(k)).alias(f"lo_{k}"), F.max(F.col(k)).alias(f"hi_{k}")]
-    row = changes.agg(*aggs).first()
-    if row["__n"] == 0:  # empty change batch: no-op commit
-        return parent
-    # duplicate keys among fully-keyed rows (count_distinct skips rows
-    # with any NULL key — those never match existing rows and insert
-    # as-is, so they are exempt from the uniqueness contract)
-    if row["__nd"] < row["__nk"]:
-        raise ValueError(
-            f"merge_snapshot: changes contain {row['__nk'] - row['__nd']} "
-            f"duplicate-key row(s) on {keys} — both copies would be "
-            "inserted; dedup the batch first"
-        )
-    def _nan(v):
-        return isinstance(v, float) and v != v
+    return _merge(spark, _main_head(table_path), changes, keys,
+                  "merge_snapshot", record_changes=record_changes)
 
-    if any(row[f"lo_{k}"] is None for k in keys):
-        # some key column is NULL on EVERY change row — no change row is
-        # fully keyed on it, so nothing can match an existing row:
-        # pure insert, no file touched
-        touched, untouched = [], m["files"]
-    elif any(_nan(row[f"lo_{k}"]) or _nan(row[f"hi_{k}"]) for k in keys):
-        # a float key column contains NaN: the bounding box degenerates
-        # (every `stat <= NaN` comparison is False, so NO file would
-        # intersect) while Spark's join DOES match NaN keys to existing
-        # NaN rows — pruning on that box would silently append
-        # duplicates. NaN stats are unusable stats: touch every file,
-        # same as stats-absent.
-        touched, untouched = m["files"], []
-    else:
-        box = {k: (row[f"lo_{k}"], row[f"hi_{k}"]) for k in keys}
-        touched, untouched = _split_by_box(m, box)
-        if any(e.get("bloom") for e in touched):
-            # bloom refinement: a SCATTERED key batch intersects every
-            # range box, but each file's bloom still answers "could
-            # this file hold one of the batch keys" — the rewrite set
-            # shrinks to actual (plus false-positive) holders
-            touched, skipped = _bloom_refine_touched(
-                spark, m, touched, changes, keys)
-            untouched = untouched + skipped
+
+def _merge(
+    spark: SparkSession,
+    head: _Head,
+    changes: DataFrame,
+    keys: list[str],
+    op: str,
+    record_changes: bool,
+) -> int:
+    """Copy-on-write MERGE body of :func:`merge_snapshot` and
+    :func:`merge_branch`."""
+    m = head.m
+    _check_schema(changes, m)
+    _enforce_constraints(changes, head.path)
+    # one pass: the change batch's per-key-column bounding box PLUS the
+    # duplicate-key guard
+    row, nn = _batch_key_stats(changes, keys, op)
+    if row["__n"] == 0:  # empty change batch: no-op commit
+        return head.noop_id
+    touched, untouched = _batch_split(m, row, keys, spark, changes)
     schema = StructType.fromJson(json.loads(m["schema"]))
     cols = [f.name for f in schema.fields]
     change_files: list[dict] = []
     if touched:
-        old = _read_entries(spark, table_path, m, touched)
-        ckeys = changes.select(*keys).where(nn).distinct()
+        old = _read_entries(spark, head.path, m, touched)
         kept = old.join(F.broadcast(changes.select(*keys).distinct()),
                         keys, "left_anti")
         new_data = kept.unionByName(changes.select(*cols))
@@ -3014,6 +3113,7 @@ def merge_snapshot(
             # files instead of making consumers diff file sets later.
             # matched = change keys that hit an existing row; bounded by
             # the change batch, so the semi-join probe side broadcasts.
+            ckeys = changes.select(*keys).where(nn).distinct()
             mk = old.join(F.broadcast(ckeys), keys, "left_semi").select(
                 *keys
             ).distinct()
@@ -3028,28 +3128,25 @@ def merge_snapshot(
             ).withColumn("_change_type", F.lit("insert"))
             change_files = _write_data_files(
                 pre.unionByName(post).unionByName(ins),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                head.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
     else:
         new_data = changes.select(*cols)
         if record_changes:
             change_files = _write_data_files(
-                changes.select(*cols).withColumn(
-                    "_change_type", F.lit("insert")
-                ),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                new_data.withColumn("_change_type", F.lit("insert")),
+                head.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
     new_files = _stamp_seq(
-        _write_data_files(new_data, table_path, current_manifest=m), parent)
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while merging — replan"
-        )
-    return _publish(
-        table_path, parent, untouched + new_files, m["schema"], "replace",
-        deletes=m.get("deletes", []), changes=change_files,
+        _write_data_files(new_data, head.path, current_manifest=m),
+        head.seq_parent,
+    )
+    # carried deletes (older seqs) never shadow the rewrites; they still
+    # apply to the untouched older files
+    return head.publish(
+        untouched + new_files, m.get("deletes", []), "replace",
+        changes=change_files,
         extra={"change_op": "merge"} if change_files else None,
-        parent_manifest=m,
     )
 
 
@@ -3083,37 +3180,25 @@ def merge_snapshot_mor(
     :func:`snapshot_change_feed` as ``_change_type='upsert'`` (insert
     vs update is unknowable without reading the old files, which is the
     exact cost MoR defers)."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
+    return _merge_mor(spark, _main_head(table_path), changes, keys,
+                      "merge_snapshot_mor")
+
+
+def _merge_mor(
+    spark: SparkSession,
+    head: _Head,
+    changes: DataFrame,
+    keys: list[str],
+    op: str,
+) -> int:
+    """Merge-on-read upsert body of :func:`merge_snapshot_mor` and
+    :func:`merge_branch_mor`."""
+    m = head.m
     _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    nn = None
-    for k in keys:
-        c = F.col(k).isNotNull()
-        nn = c if nn is None else (nn & c)
-    aggs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(nn, 1)).alias("__nk"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
-    ]
-    for k in keys:
-        aggs += [F.min(F.col(k)).alias(f"lo_{k}"),
-                 F.max(F.col(k)).alias(f"hi_{k}")]
-    row = changes.agg(*aggs).first()
+    _enforce_constraints(changes, head.path)
+    row, nn = _batch_key_stats(changes, keys, op)
     if row["__n"] == 0:
-        return parent
-    if row["__nd"] < row["__nk"]:
-        raise ValueError(
-            f"merge_snapshot_mor: changes contain "
-            f"{row['__nk'] - row['__nd']} duplicate-key row(s) on {keys} "
-            "— both copies would survive the read; dedup the batch first"
-        )
-
-    def _nan(v):
-        return isinstance(v, float) and v != v
-
+        return head.noop_id
     # the change keys' bounding box lets fold_deletes rewrite only
     # stats-intersecting files later; NaN degenerates it (same rule as
     # the CoW merge) — box=None means "may shadow anything"
@@ -3128,40 +3213,32 @@ def merge_snapshot_mor(
         ):
             box = None  # non-JSON key types (timestamp, binary): no box
     schema = StructType.fromJson(json.loads(m["schema"]))
-    new_id = parent + 1
     new_files = _stamp_seq(
         _write_data_files(
-            changes.select(*[f.name for f in schema.fields]), table_path,
+            changes.select(*[f.name for f in schema.fields]), head.path,
             current_manifest=m,
         ),
-        parent,
+        head.seq_parent,
     )
-    delete_entry = None
+    deletes = list(m.get("deletes", []))
     if row["__nk"] > 0:  # NULL-key rows are pure inserts: nothing to shadow
         sidecar = _write_data_files(
             changes.select(*keys).where(nn).distinct().coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
+            head.path, subdir=_DELETES_DIR, current_manifest=m,
         )
-        delete_entry = {
+        entry = {
             "paths": [e["path"] for e in sidecar],
             "rows": sum(e["rows"] for e in sidecar),
             "keys": keys,
-            "seq": new_id,
+            "seq": head.seq_parent + 1,
             "box": box,
         }
         if "schema_v" in m:
             # keys/box are the write-time names — readers translate
             # them by field id after later renames
-            delete_entry["schema_v"] = m["schema_v"]
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while merging — replan"
-        )
-    deletes = m.get("deletes", []) + ([delete_entry] if delete_entry else [])
-    return _publish(
-        table_path, parent, m["files"] + new_files, m["schema"],
-        "merge-mor", deletes=deletes, parent_manifest=m,
-    )
+            entry["schema_v"] = m["schema_v"]
+        deletes.append(entry)
+    return head.publish(m["files"] + new_files, deletes, "merge-mor")
 
 
 def delete_snapshot_where_mor(
@@ -3186,63 +3263,40 @@ def delete_snapshot_where_mor(
     stats-intersecting files (still zero data rewrite — the deferred
     cost is the rewrite, not the scan). Pass False for a pure-metadata
     commit when no feed consumer exists."""
-    import datetime
+    return _delete_where_mor(spark, _main_head(table_path), where,
+                             "delete_snapshot_where_mor",
+                             record_changes=record_changes)
 
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
-    new_id = parent + 1
 
-    def _bound(v):
-        # the box must live in the JSON manifest: date/datetime bounds
-        # (the typical retention predicate) serialize as ISO strings —
-        # Spark coerces string literals back for the read-side filter,
-        # and date columns never carry manifest stats (absent = keep),
-        # so the fold stays sound. Anything else non-JSON fails UP
-        # FRONT, before any change files are written.
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat(sep=" ") if isinstance(
-                v, datetime.datetime
-            ) else v.isoformat()
-        if isinstance(v, (int, float, str)):
-            return v
-        raise ValueError(
-            f"delete_snapshot_where_mor: box bound {v!r} "
-            f"({type(v).__name__}) is not manifest-serializable — use "
-            "int/float/str/date/datetime bounds, or the copy-on-write "
-            "delete_snapshot_where"
-        )
-
-    box = {c: [_bound(lo), _bound(hi)] for c, (lo, hi) in where.items()}
+def _delete_where_mor(
+    spark: SparkSession,
+    head: _Head,
+    where: dict[str, tuple],
+    op: str,
+    record_changes: bool,
+) -> int:
+    """Merge-on-read range DELETE body of
+    :func:`delete_snapshot_where_mor` and :func:`delete_branch_where_mor`."""
+    m = head.m
+    box = {c: [_bound(lo, op), _bound(hi, op)] for c, (lo, hi) in
+           where.items()}
     change_files: list[dict] = []
     if record_changes:
         touched, _ = _split_by_box(m, where)
         if touched:
-            old = _read_entries(spark, table_path, m, touched)
-            inside = None
-            for c, (lo, hi) in where.items():
-                cond = F.col(c).between(lo, hi)
-                inside = cond if inside is None else (inside & cond)
+            old = _read_entries(spark, head.path, m, touched)
             change_files = _write_data_files(
-                old.where(F.coalesce(inside, F.lit(False))).withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                old.where(F.coalesce(_box_expr(where), F.lit(False)))
+                .withColumn("_change_type", F.lit("delete")),
+                head.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
-    delete_entry = {"kind": "range", "box": box, "seq": new_id}
+    entry = {"kind": "range", "box": box, "seq": head.seq_parent + 1}
     if "schema_v" in m:
-        delete_entry["schema_v"] = m["schema_v"]
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while deleting — replan"
-        )
-    return _publish(
-        table_path, parent, m["files"], m["schema"], "delete-mor",
-        deletes=m.get("deletes", []) + [delete_entry],
+        entry["schema_v"] = m["schema_v"]
+    return head.publish(
+        m["files"], m.get("deletes", []) + [entry], "delete-mor",
         changes=change_files,
         extra={"change_op": "delete"} if change_files else None,
-        parent_manifest=m,
     )
 
 
@@ -3275,21 +3329,31 @@ def delete_snapshot_rows_mor(
     CDC feed exact). ``record_changes`` persists the deleted rows as
     ``_change_type='delete'`` change files (one scan, zero rewrite),
     same contract as the range form."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
+    return _delete_rows_mor(spark, _main_head(table_path), condition,
+                            "delete_snapshot_rows_mor",
+                            record_changes=record_changes)
+
+
+def _delete_rows_mor(
+    spark: SparkSession,
+    head: _Head,
+    condition,
+    op: str,
+    record_changes: bool,
+) -> int:
+    """Merge-on-read position DELETE body of
+    :func:`delete_snapshot_rows_mor` and :func:`delete_branch_rows_mor`."""
     if isinstance(condition, str):
         condition = F.expr(condition)
-    m = read_manifest(table_path, parent)
-    new_id = parent + 1
+    m = head.m
     cur = _read_entries(
-        spark, table_path, m, m["files"], with_positions=True
+        spark, head.path, m, m["files"], with_positions=True
     )
     hits = cur.where(condition).persist()
     try:
         n = hits.count()
         if n == 0:
-            return parent
+            return head.noop_id
         files_named = sorted(
             r["__file"] for r in hits.select("__file").distinct().collect()
         )  # metadata-scale: one row per touched file
@@ -3300,16 +3364,15 @@ def delete_snapshot_rows_mor(
             # (exotic mount/symlink layout): refuse loudly — publishing
             # would record a delete that silently never applies
             raise ValueError(
-                "delete_snapshot_rows_mor: scan file paths do not "
-                f"resolve to manifest paths (e.g. {stray[:3]}) — "
-                "table_path normalization failed; use the copy-on-write "
-                "delete instead"
+                f"{op}: scan file paths do not resolve to manifest paths "
+                f"(e.g. {stray[:3]}) — table_path normalization failed; "
+                "use the copy-on-write range delete instead"
             )
         sidecar = _write_data_files(
             hits.select(
                 F.col("__file").alias("file"), F.col("__pos").alias("pos")
             ).coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
+            head.path, subdir=_DELETES_DIR, current_manifest=m,
         )
         change_files: list[dict] = []
         if record_changes:
@@ -3317,25 +3380,19 @@ def delete_snapshot_rows_mor(
                 hits.drop("__file", "__pos").withColumn(
                     "_change_type", F.lit("delete")
                 ),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                head.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
-        delete_entry = {
+        entry = {
             "kind": "position",
             "paths": [e["path"] for e in sidecar],
             "rows": n,
             "files": files_named,
-            "seq": new_id,
+            "seq": head.seq_parent + 1,
         }
-        if current_snapshot_id(table_path) != parent:
-            raise CommitConflict(
-                f"snapshot advanced past {parent} while deleting — replan"
-            )
-        return _publish(
-            table_path, parent, m["files"], m["schema"], "delete-mor",
-            deletes=m.get("deletes", []) + [delete_entry],
+        return head.publish(
+            m["files"], m.get("deletes", []) + [entry], "delete-mor",
             changes=change_files,
             extra={"change_op": "delete", "delete_kind": "position"},
-            parent_manifest=m,
         )
     finally:
         hits.unpersist()
@@ -3407,24 +3464,13 @@ def stage_append(
         "files": base + new_files,
         "deletes": deletes,
     }
-    tmp = sp + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(staged, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        try:
-            os.link(tmp, sp)
-        except FileExistsError as e:
-            raise BranchExists(
-                f"branch {branch!r} already has a staged commit under "
-                f"{table_path}"
-            ) from e
-        except OSError:
-            with open(sp, "x") as dst, open(tmp) as src:
-                dst.write(src.read())
-    finally:
-        os.remove(tmp)
+        _write_exclusive_json(sp, staged)
+    except FileExistsError:
+        raise BranchExists(
+            f"branch {branch!r} already has a staged commit under "
+            f"{table_path}"
+        ) from None
     return parent
 
 
@@ -3473,7 +3519,7 @@ def publish_branch(
         extra={"published_branch": branch},
         deletes=st.get("deletes", []),
     )
-    os.remove(sp)
+    _remove_published(sp)
     return new_id
 
 
@@ -3484,7 +3530,7 @@ def discard_branch(table_path: str, branch: str) -> bool:
     stage existed."""
     sp = _stage_path(table_path, branch)
     if os.path.exists(sp):
-        os.remove(sp)
+        _remove_published(sp)
         return True
     return False
 
@@ -3659,20 +3705,25 @@ def _heal_interrupted_ff(table_path: str, name: str) -> bool:
             "read_branch_snapshot, delete_branch, re-branch from "
             "current, and replay"
         )
+    _reset_branch(table_path, name, sid, k)
+    return True
+
+
+def _reset_branch(table_path: str, name: str, base: int, k: int) -> None:
+    """Re-fork branch ``name`` at main snapshot ``base`` and remove its
+    manifests 1..``k``, which main absorbed (their files now belong to
+    main) — the tail of a fast-forward, and of the heal that completes
+    an interrupted one. The ref moves by atomic replace, so a concurrent
+    reader sees the old ref or the new, complete."""
     import time
 
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"name": name, "base": sid, "created_at": time.time()}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    _replace_json(
+        _branch_ref_path(table_path, name),
+        {"name": name, "base": base, "created_at": time.time()},
+    )
     for i in branch_snapshot_ids(table_path, name):
         if i <= k:
             _remove_branch_manifest(table_path, name, i)
-    return True
 
 
 def commit_append_branch(
@@ -3687,24 +3738,15 @@ def commit_append_branch(
     one winner (the loser retries against the new head). CHECK
     constraints are table-level and enforced here too. Returns the
     branch-local snapshot id."""
-    import time
-
-    _heal_interrupted_ff(table_path, name)
-    k, m = _branch_head_manifest(table_path, name)
-    _check_schema(df, m)
+    head = _branch_head(table_path, name)
+    _check_schema(df, head.m)
     _enforce_constraints(df, table_path)
-    with open(_branch_ref_path(table_path, name)) as f:
-        ref = json.load(f)
-    # seq continues from the fork point's main id + branch depth: MoR
-    # deletes carried from the fork still apply only to older files
     new_files = _stamp_seq(
-        _write_data_files(df, table_path, current_manifest=m),
-        ref["base"] + k,
+        _write_data_files(df, table_path, current_manifest=head.m),
+        head.seq_parent,
     )
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        m["files"] + new_files, m.get("deletes", []), "append",
-    )
+    return head.publish(
+        head.m["files"] + new_files, head.m.get("deletes", []), "append")
 
 
 def _publish_branch_commit(
@@ -3719,8 +3761,8 @@ def _publish_branch_commit(
 ) -> int:
     """Publish branch-local snapshot ``k+1``: exclusive-create on the
     next id, so two racing branch writers get exactly one winner (the
-    loser retries against the new head). Shared by every branch write
-    (append / merge / delete / fold)."""
+    loser retries against the new head). The ``publish`` of every
+    :func:`_branch_head`."""
     import time
 
     manifest = {
@@ -3769,71 +3811,29 @@ def _publish_branch_commit(
     return k + 1
 
 
-def _branch_write_ctx(table_path: str, name: str) -> tuple[int, dict, dict]:
-    """(head id, head manifest, ref) after the interrupted-FF heal —
-    the common entry of every branch write path."""
+def _branch_head(table_path: str, name: str) -> _Head:
+    """Head at branch ``name``'s local head ``k``, after the
+    interrupted-FF heal — the entry of every branch write path. Sequence
+    numbers continue from the fork point's main id + branch depth
+    (``base + k``), so MoR deletes carried from the fork still apply
+    only to older files. ``publish`` is an exclusive create of
+    branch-local snapshot ``k + 1``; a no-op returns ``k``. Branch
+    manifests feed no change feed (the fast-forward commit is main's one
+    observable change), so ``changes`` and ``extra`` are not recorded."""
     _heal_interrupted_ff(table_path, name)
     k, m = _branch_head_manifest(table_path, name)
     with open(_branch_ref_path(table_path, name)) as f:
         ref = json.load(f)
-    return k, m, ref
+
+    def publish(files, deletes, operation, changes=None, extra=None):
+        return _publish_branch_commit(
+            table_path, name, k, m, ref, files, deletes, operation)
+
+    return _Head(table_path, m, ref["base"] + k, k, publish)
 
 
-def _batch_key_stats(changes: DataFrame, keys: list[str], op: str):
-    """One aggregate pass over a merge batch: (row, nn_expr) where row
-    carries count / fully-keyed count / per-key min-max bounds. Raises
-    on duplicate keys among fully-keyed rows — both copies would
-    survive the merge (NULL-keyed rows are pure inserts, exempt)."""
-    nn = None
-    for c in keys:
-        e = F.col(c).isNotNull()
-        nn = e if nn is None else (nn & e)
-    aggs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(nn, 1)).alias("__nk"),
-        F.count_distinct(*[F.col(c) for c in keys]).alias("__nd"),
-    ]
-    for c in keys:
-        aggs += [F.min(F.col(c)).alias(f"lo_{c}"),
-                 F.max(F.col(c)).alias(f"hi_{c}")]
-    row = changes.agg(*aggs).first()
-    if row["__nd"] < row["__nk"]:
-        raise ValueError(
-            f"{op}: changes contain {row['__nk'] - row['__nd']} "
-            f"duplicate-key row(s) on {keys} — both copies would "
-            "survive; dedup the batch first"
-        )
-    return row, nn
-
-
-def _batch_split(m: dict, row, keys: list[str], spark, changes):
-    """(touched, untouched) head files for a merge batch, using the
-    batch's bounding box + per-file bloom refinement — the same pruning
-    the main-table CoW merge applies (NULL-lo ⇒ pure insert; NaN bounds
-    ⇒ stats unusable, touch everything)."""
-    def _nan(v):
-        return isinstance(v, float) and v != v
-
-    if any(row[f"lo_{c}"] is None for c in keys):
-        return [], m["files"]
-    if any(_nan(row[f"lo_{c}"]) or _nan(row[f"hi_{c}"]) for c in keys):
-        return m["files"], []
-    box = {c: (row[f"lo_{c}"], row[f"hi_{c}"]) for c in keys}
-    touched, untouched = _split_by_box(m, box)
-    if any(e.get("bloom") for e in touched):
-        touched, skipped = _bloom_refine_touched(
-            spark, m, touched, changes, keys)
-        untouched = untouched + skipped
-    return touched, untouched
-
-
-def merge_branch(
-    spark: SparkSession,
-    table_path: str,
-    name: str,
-    changes: DataFrame,
-    keys: list[str],
-) -> int:
+def merge_branch(spark: SparkSession, table_path: str, name: str,
+                 changes: DataFrame, keys: list[str]) -> int:
     """Copy-on-write MERGE (upsert) against a branch head: same-key
     rows replace, new keys append, in one branch-local replace commit —
     main never observes a byte. File pruning is identical to the
@@ -3843,43 +3843,12 @@ def merge_branch(
     change files: branch manifests don't feed the change feed — the
     fast-forward commit is main's single observable change. Returns the
     branch-local snapshot id."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    row, nn = _batch_key_stats(changes, keys, "merge_branch")
-    if row["__n"] == 0:
-        return k
-    touched, untouched = _batch_split(m, row, keys, spark, changes)
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    cols = [f.name for f in schema.fields]
-    if touched:
-        old = _read_entries(spark, table_path, m, touched)
-        kept = old.join(
-            F.broadcast(changes.select(*keys).distinct()), keys,
-            "left_anti",
-        )
-        new_data = kept.unionByName(changes.select(*cols))
-    else:
-        new_data = changes.select(*cols)
-    new_files = _stamp_seq(
-        _write_data_files(new_data, table_path, current_manifest=m),
-        ref["base"] + k,
-    )
-    # carried deletes (seq <= base+k) never shadow the rewrites
-    # (seq base+k+1); they still apply to untouched older files
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        untouched + new_files, m.get("deletes", []), "replace",
-    )
+    return _merge(spark, _branch_head(table_path, name), changes, keys,
+                  "merge_branch", record_changes=False)
 
 
-def merge_branch_mor(
-    spark: SparkSession,
-    table_path: str,
-    name: str,
-    changes: DataFrame,
-    keys: list[str],
-) -> int:
+def merge_branch_mor(spark: SparkSession, table_path: str, name: str,
+                     changes: DataFrame, keys: list[str]) -> int:
     """MERGE-ON-READ upsert against a branch head: the change batch
     lands as new data files plus an equality-delete sidecar on ``keys``
     — no branch or fork file is rewritten, write cost is exactly
@@ -3888,230 +3857,61 @@ def merge_branch_mor(
     :func:`merge_snapshot_mor`. Fast-forward materializes pending
     branch-local sidecars first (they cannot ride the FF restamping),
     so publishing stays correct. Returns the branch-local id."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    row, nn = _batch_key_stats(changes, keys, "merge_branch_mor")
-    if row["__n"] == 0:
-        return k
-
-    def _nan(v):
-        return isinstance(v, float) and v != v
-
-    box = None
-    if all(row[f"lo_{c}"] is not None for c in keys) and not any(
-        _nan(row[f"lo_{c}"]) or _nan(row[f"hi_{c}"]) for c in keys
-    ):
-        box = {c: [row[f"lo_{c}"], row[f"hi_{c}"]] for c in keys}
-        if not all(
-            isinstance(v, (int, float, str))
-            for pair in box.values() for v in pair
-        ):
-            box = None  # non-JSON key types: no box, shadow everything
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    new_seq_parent = ref["base"] + k
-    new_files = _stamp_seq(
-        _write_data_files(
-            changes.select(*[f.name for f in schema.fields]), table_path,
-            current_manifest=m,
-        ),
-        new_seq_parent,
-    )
-    deletes = list(m.get("deletes", []))
-    if row["__nk"] > 0:  # NULL-key rows are pure inserts
-        sidecar = _write_data_files(
-            changes.select(*keys).where(nn).distinct().coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
-        )
-        entry = {
-            "paths": [e["path"] for e in sidecar],
-            "rows": sum(e["rows"] for e in sidecar),
-            "keys": keys,
-            "seq": new_seq_parent + 1,
-            "box": box,
-        }
-        if "schema_v" in m:
-            entry["schema_v"] = m["schema_v"]
-        deletes.append(entry)
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        m["files"] + new_files, deletes, "merge-mor",
-    )
+    return _merge_mor(spark, _branch_head(table_path, name), changes, keys,
+                      "merge_branch_mor")
 
 
-def delete_branch_where(
-    spark: SparkSession,
-    table_path: str,
-    name: str,
-    where: dict[str, tuple],
-) -> int:
+def delete_branch_where(spark: SparkSession, table_path: str, name: str,
+                        where: dict[str, tuple]) -> int:
     """Copy-on-write range DELETE on a branch: files whose stats cannot
     intersect the conjunctive box carry over; intersecting files
     rewrite with the complement rows only — one branch-local replace
-    commit, main untouched. Returns the branch-local id."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    touched, untouched = _split_by_box(m, where)
-    new_files: list[dict] = []
-    if touched:
-        old = _read_entries(spark, table_path, m, touched)
-        inside = None
-        for c, (lo, hi) in where.items():
-            cond = F.col(c).between(lo, hi)
-            inside = cond if inside is None else (inside & cond)
-        new_files = _stamp_seq(
-            _write_data_files(
-                old.where(~F.coalesce(inside, F.lit(False))), table_path,
-                current_manifest=m,
-            ),
-            ref["base"] + k,
-        )
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        untouched + new_files, m.get("deletes", []), "replace",
-    )
+    commit, main untouched. A box that intersects no file publishes
+    nothing and returns the current head id, as on main. Returns the
+    branch-local id."""
+    return _delete_where(spark, _branch_head(table_path, name), where,
+                         record_changes=False)
 
 
-def delete_branch_where_mor(
-    spark: SparkSession,
-    table_path: str,
-    name: str,
-    where: dict[str, tuple],
-) -> int:
+def delete_branch_where_mor(spark: SparkSession, table_path: str, name: str,
+                            where: dict[str, tuple]) -> int:
     """MERGE-ON-READ range DELETE on a branch: the predicate box itself
     becomes a branch-manifest delete entry — metadata-only, no file
     read or rewritten; branch reads filter shadowed rows out, and
     fast-forward folds the sidecar before publishing. Returns the
     branch-local id."""
-    import datetime
-
-    k, m, ref = _branch_write_ctx(table_path, name)
-
-    def _bound(v):
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat(sep=" ") if isinstance(
-                v, datetime.datetime
-            ) else v.isoformat()
-        if isinstance(v, (int, float, str)):
-            return v
-        raise ValueError(
-            f"delete_branch_where_mor: box bound {v!r} "
-            f"({type(v).__name__}) is not manifest-serializable — use "
-            "int/float/str/date/datetime, or delete_branch_where"
-        )
-
-    entry = {
-        "kind": "range",
-        "box": {c: [_bound(lo), _bound(hi)] for c, (lo, hi) in
-                where.items()},
-        "seq": ref["base"] + k + 1,
-    }
-    if "schema_v" in m:
-        entry["schema_v"] = m["schema_v"]
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        m["files"], m.get("deletes", []) + [entry], "delete-mor",
-    )
+    return _delete_where_mor(spark, _branch_head(table_path, name), where,
+                             "delete_branch_where_mor", record_changes=False)
 
 
-def delete_branch_rows_mor(
-    spark: SparkSession,
-    table_path: str,
-    name: str,
-    condition,
-) -> int:
+def delete_branch_rows_mor(spark: SparkSession, table_path: str, name: str,
+                           condition) -> int:
     """MERGE-ON-READ position DELETE on a branch: record the (file,
     row-ordinal) identities of rows matching an ARBITRARY predicate as
     a branch-manifest sidecar — no file rewritten, main untouched; the
     position entry NAMES its files so it can never apply to a rewritten
     successor. Completes the branch delete-kind matrix (equality /
     range / position — same as main). Returns the branch-local id."""
-    if isinstance(condition, str):
-        condition = F.expr(condition)
-    k, m, ref = _branch_write_ctx(table_path, name)
-    cur = _read_entries(
-        spark, table_path, m, m["files"], with_positions=True
-    )
-    hits = cur.where(condition).persist()
-    try:
-        n = hits.count()
-        if n == 0:
-            return k
-        files_named = sorted(
-            r["__file"] for r in hits.select("__file").distinct().collect()
-        )  # metadata-scale: one row per touched file
-        manifest_paths = {e["path"] for e in m["files"]}
-        stray = [p for p in files_named if p not in manifest_paths]
-        if stray:
-            raise ValueError(
-                "delete_branch_rows_mor: scan file paths do not resolve "
-                f"to manifest paths (e.g. {stray[:3]}) — table_path "
-                "normalization failed; use delete_branch_where instead"
-            )
-        sidecar = _write_data_files(
-            hits.select(
-                F.col("__file").alias("file"), F.col("__pos").alias("pos")
-            ).coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
-        )
-        entry = {
-            "kind": "position",
-            "paths": [e["path"] for e in sidecar],
-            "rows": n,
-            "files": files_named,
-            "seq": ref["base"] + k + 1,
-        }
-        return _publish_branch_commit(
-            table_path, name, k, m, ref,
-            m["files"], m.get("deletes", []) + [entry], "delete-mor",
-        )
-    finally:
-        hits.unpersist()
+    return _delete_rows_mor(spark, _branch_head(table_path, name), condition,
+                            "delete_branch_rows_mor", record_changes=False)
 
 
 def cluster_branch(
-    spark: SparkSession,
-    table_path: str,
-    name: str,
-    zorder_cols: list[str],
-    bits: int = 16,
-    num_partitions: int | None = None,
-    curve: str = "zorder",
-) -> int:
+        spark: SparkSession, table_path: str, name: str,
+        zorder_cols: list[str], bits: int = 16,
+        num_partitions: int | None = None, curve: str = "zorder") -> int:
     """Cluster the branch head (full rewrite through the deletes-aware
     read, so every pending sidecar folds) and publish one branch
     replace commit — expensive clustering runs on the branch, gets
     audited, and fast-forwards metadata-only, same loop as
     :func:`compact_branch`. ``curve`` picks Morton or Hilbert order.
     Returns the branch-local id."""
-    zorder_repartition = _curve_repartition(curve)
-
-    k, m, ref = _branch_write_ctx(table_path, name)
-    spec = table_partition_spec(table_path)
-    src = _read_entries(spark, table_path, m, m["files"])
-    if spec:
-        clustered = zorder_repartition(
-            src, zorder_cols, bits=bits, z_col="__z", arrange=False,
-        )
-        new_files = _write_data_files(
-            clustered, table_path, layout_sort=["__z"],
-            layout_partitions=num_partitions, current_manifest=m,
-        )
-    else:
-        clustered = zorder_repartition(
-            src, zorder_cols, bits=bits, num_partitions=num_partitions,
-        )
-        new_files = _write_data_files(
-            clustered, table_path, current_manifest=m,
-        )
-    new_files = _stamp_seq(new_files, ref["base"] + k)
-    return _publish_branch_commit(
-        table_path, name, k, m, ref, new_files, [], "replace",
-    )
+    return _cluster(spark, _branch_head(table_path, name), zorder_cols,
+                    bits, num_partitions, curve)
 
 
-def compact_branch(
-    spark: SparkSession, table_path: str, name: str, target_bytes: int
-) -> int | None:
+def compact_branch(spark: SparkSession, table_path: str, name: str,
+                   target_bytes: int) -> int | None:
     """Bin-pack a branch head's files into ~``target_bytes`` files and
     publish ONE branch replace commit — the compact-validate-publish
     maintenance loop (run expensive layout work on a branch, audit it,
@@ -4120,41 +3920,11 @@ def compact_branch(
     :func:`compact_snapshot` (new files carry the commit's seq);
     single-file bins stay in place. Returns the branch-local id, or
     None when nothing needed compaction."""
-    from ratatool_spark.operators.layout import compaction_plan
-
-    k, m, ref = _branch_write_ctx(table_path, name)
-    plan = compaction_plan(
-        manifest_files_df(spark, table_path, m=m), "bytes", ["path"],
-        target_bytes,
-    )
-    bins: dict[int, list[str]] = {}
-    for r in plan.collect():  # metadata-scale: one row per file
-        bins.setdefault(r["bin"], []).append(r["path"])
-    multi = {b: ps for b, ps in bins.items() if len(ps) > 1}
-    if not multi:
-        return None
-    by_path = {e["path"]: e for e in m["files"]}
-    new_files: list[dict] = []
-    removed: list[str] = []
-    for b in sorted(multi):
-        paths = multi[b]
-        merged = _read_entries(
-            spark, table_path, m, [by_path[p] for p in paths]
-        ).coalesce(1)
-        new_files.extend(
-            _write_data_files(merged, table_path, current_manifest=m))
-        removed.extend(paths)
-    kept = [e for e in m["files"] if e["path"] not in set(removed)]
-    _stamp_seq(new_files, ref["base"] + k)
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        kept + new_files, m.get("deletes", []), "replace",
-    )
+    return _compact(spark, _branch_head(table_path, name), target_bytes)
 
 
-def fold_branch_deletes(
-    spark: SparkSession, table_path: str, name: str
-) -> int | None:
+def fold_branch_deletes(spark: SparkSession, table_path: str,
+                        name: str) -> int | None:
     """Materialize every pending MoR delete on a branch: rewrite
     exactly the files some sidecar can shadow, publish one branch
     replace commit with an empty delete list. Returns the branch-local
@@ -4163,41 +3933,7 @@ def fold_branch_deletes(
     collapses branch file seqs onto one main commit, which would break
     the strictly-newer shadow ordering a sidecar relies on — folding
     first keeps FF a pure metadata publish of already-correct files."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    deletes = m.get("deletes", [])
-    if not deletes:
-        return None
-
-    def _may_shadow(e: dict) -> bool:
-        eseq = e.get("seq", 0)
-        for d in deletes:
-            if d["seq"] <= eseq:
-                continue
-            if d.get("kind") == "position":
-                if e["path"] in d.get("files", []):
-                    return True
-                continue
-            b = _delete_to_current(d, m).get("box")
-            if b is None:
-                return True
-            if files_intersecting({**m, "files": [e]},
-                                  {c: tuple(v) for c, v in b.items()}):
-                return True
-        return False
-
-    shadowed, clear = [], []
-    for e in m["files"]:
-        (shadowed if _may_shadow(e) else clear).append(e)
-    new_files = _stamp_seq(
-        _write_data_files(
-            _read_entries(spark, table_path, m, shadowed), table_path,
-            current_manifest=m,
-        ),
-        ref["base"] + k,
-    ) if shadowed else []
-    return _publish_branch_commit(
-        table_path, name, k, m, ref, clear + new_files, [], "replace",
-    )
+    return _fold(spark, _branch_head(table_path, name))
 
 
 def read_branch_snapshot(
@@ -4289,21 +4025,8 @@ def fast_forward_branch(
         extra=extra, deletes=m.get("deletes", []),
     )
     # reset the branch at the new main head: old branch manifests are
-    # superseded (their files are now main's); the ref moves via atomic
-    # replace so a concurrent reader sees old-complete or new-complete
-    import time
-
-    tmp = _branch_ref_path(table_path, name) + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"name": name, "base": new_id, "created_at": time.time()}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _branch_ref_path(table_path, name))
-    for i in branch_snapshot_ids(table_path, name):
-        if i <= k:
-            _remove_branch_manifest(table_path, name, i)
+    # superseded (their files are now main's)
+    _reset_branch(table_path, name, new_id, k)
     return new_id
 
 
@@ -4335,13 +4058,8 @@ def table_constraints(table_path: str) -> dict[str, str]:
 
 
 def _write_constraints(table_path: str, cons: dict[str, str]) -> None:
-    p = os.path.join(table_path, _SNAP_DIR, _CONSTRAINTS_FILE)
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(cons, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    _replace_json(os.path.join(table_path, _SNAP_DIR, _CONSTRAINTS_FILE),
+                  cons)
 
 
 def _violation_counts(df: DataFrame, cons: dict[str, str]) -> dict[str, int]:
@@ -4422,58 +4140,55 @@ def fold_deletes(spark: SparkSession, table_path: str) -> int | None:
     clustering, which fold as a side effect of rewriting) before read
     amplification from stacked sidecars matters — each pending sidecar
     is one broadcast anti-join on every read."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
+    return _fold(spark, _main_head(table_path))
+
+
+def _may_shadow(e: dict, deletes: list[dict], m: dict) -> bool:
+    """Can a pending delete shadow rows of data file ``e``? Iff it is
+    newer AND its change keys' bounding box intersects e's stats
+    (box/stats absent ⇒ must assume yes) — so a point-update sidecar
+    leaves files outside its key range completely untouched even at
+    fold time."""
+    eseq = e.get("seq", 0)
+    for d in deletes:
+        if d["seq"] <= eseq:
+            continue
+        if d.get("kind") == "position":
+            # position deletes NAME their files — only those rewrite
+            if e["path"] in d.get("files", []):
+                return True
+            continue
+        # the box is keyed by the DELETE's write-time names; route
+        # through current names so files_intersecting can re-translate
+        # to the FILE's write-time stats keys (field-id sound on evolved
+        # tables, identity otherwise)
+        b = _delete_to_current(d, m).get("box")
+        if b is None:
+            return True
+        if files_intersecting({**m, "files": [e]},
+                              {c: tuple(v) for c, v in b.items()}):
+            return True
+    return False
+
+
+def _fold(spark: SparkSession, head: _Head) -> int | None:
+    """Delete-fold body of :func:`fold_deletes` and
+    :func:`fold_branch_deletes`."""
+    m = head.m
     deletes = m.get("deletes", [])
     if not deletes:
         return None
-
-    def _may_shadow(e: dict) -> bool:
-        # a delete can shadow rows of e iff it is newer AND its change
-        # keys' bounding box intersects e's stats (box/stats absent ⇒
-        # must assume yes) — so a point-update sidecar leaves files
-        # outside its key range completely untouched even at fold time
-        eseq = e.get("seq", 0)
-        for d in deletes:
-            if d["seq"] <= eseq:
-                continue
-            if d.get("kind") == "position":
-                # position deletes NAME their files — only those rewrite
-                if e["path"] in d.get("files", []):
-                    return True
-                continue
-            # the box is keyed by the DELETE's write-time names; route
-            # through current names so files_intersecting can re-
-            # translate to the FILE's write-time stats keys (field-id
-            # sound on evolved tables, identity otherwise)
-            b = _delete_to_current(d, m).get("box")
-            if b is None:
-                return True
-            if files_intersecting({**m, "files": [e]},
-                                  {c: tuple(v) for c, v in b.items()}):
-                return True
-        return False
-
     shadowed, clear = [], []
     for e in m["files"]:
-        (shadowed if _may_shadow(e) else clear).append(e)
+        (shadowed if _may_shadow(e, deletes, m) else clear).append(e)
     new_files = _stamp_seq(
         _write_data_files(
-            _read_entries(spark, table_path, m, shadowed), table_path,
+            _read_entries(spark, head.path, m, shadowed), head.path,
             current_manifest=m,
         ),
-        parent,
+        head.seq_parent,
     ) if shadowed else []
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while folding — replan"
-        )
-    return _publish(
-        table_path, parent, clear + new_files, m["schema"], "replace",
-        deletes=[], parent_manifest=m,
-    )
+    return head.publish(clear + new_files, [], "replace")
 
 
 def delete_snapshot_where(
@@ -4491,26 +4206,33 @@ def delete_snapshot_where(
     run expiry to complete an erasure. ``record_changes`` persists the
     deleted rows as ``_change_type='delete'`` change files for
     :func:`snapshot_change_feed` (same one-extra-pass cost as merge)."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
+    return _delete_where(spark, _main_head(table_path), where,
+                         record_changes=record_changes)
+
+
+def _delete_where(
+    spark: SparkSession,
+    head: _Head,
+    where: dict[str, tuple],
+    record_changes: bool,
+) -> int:
+    """Copy-on-write range DELETE body of :func:`delete_snapshot_where`
+    and :func:`delete_branch_where`. A box that intersects no file
+    publishes nothing and returns the head id."""
+    m = head.m
     touched, untouched = _split_by_box(m, where)
     if not touched:
-        return parent
-    old = _read_entries(spark, table_path, m, touched)
-    inside = None
-    for c, (lo, hi) in where.items():
-        cond = F.col(c).between(lo, hi)
-        inside = cond if inside is None else (inside & cond)
+        return head.noop_id
+    old = _read_entries(spark, head.path, m, touched)
+    inside = _box_expr(where)
     # NULL-valued rows never match a range predicate — KEEP them (a bare
     # where(~inside) would drop them: NOT(NULL) is NULL, which filters)
     new_files = _stamp_seq(
         _write_data_files(
-            old.where(F.coalesce(~inside, F.lit(True))), table_path,
+            old.where(F.coalesce(~inside, F.lit(True))), head.path,
             current_manifest=m,
         ),
-        parent,
+        head.seq_parent,
     )
     change_files: list[dict] = []
     if record_changes:
@@ -4518,17 +4240,12 @@ def delete_snapshot_where(
             old.where(F.coalesce(inside, F.lit(False))).withColumn(
                 "_change_type", F.lit("delete")
             ),
-            table_path, subdir=_CHANGES_DIR, current_manifest=m,
+            head.path, subdir=_CHANGES_DIR, current_manifest=m,
         )
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while deleting — replan"
-        )
-    return _publish(
-        table_path, parent, untouched + new_files, m["schema"], "replace",
-        deletes=m.get("deletes", []), changes=change_files,
+    return head.publish(
+        untouched + new_files, m.get("deletes", []), "replace",
+        changes=change_files,
         extra={"change_op": "delete"} if change_files else None,
-        parent_manifest=m,
     )
 
 
@@ -4569,49 +4286,46 @@ def cluster_snapshot(
     clustered layout (`row_group_skip_audit` measures the payoff).
     Logical content is untouched — the `snapshot_cluster_zorder` gate
     pins the rewrite against the source table."""
-    zorder_repartition = _curve_repartition(curve)
+    return _cluster(spark, _main_head(table_path), zorder_cols, bits,
+                    num_partitions, curve)
 
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
-    spec = table_partition_spec(table_path)
-    if spec:
+
+def _cluster(
+    spark: SparkSession,
+    head: _Head,
+    zorder_cols: list[str],
+    bits: int,
+    num_partitions: int | None,
+    curve: str,
+) -> int:
+    """Clustering body of :func:`cluster_snapshot` and
+    :func:`cluster_branch`: a full rewrite through the deletes-aware
+    read, so every pending merge-on-read delete is folded and the new
+    manifest carries none."""
+    zorder_repartition = _curve_repartition(curve)
+    m = head.m
+    src = _read_entries(spark, head.path, m, m["files"])
+    if table_partition_spec(head.path):
         # partitioned table: attach the curve key only and let the
         # writer range-arrange on (partition cols, key) — locality
         # WITHIN each partition, partition alignment preserved, one
         # exchange instead of two
         clustered = zorder_repartition(
-            read_snapshot(spark, table_path, parent),
-            zorder_cols, bits=bits, z_col="__z", arrange=False,
+            src, zorder_cols, bits=bits, z_col="__z", arrange=False,
         )
-        new_files = _stamp_seq(
-            _write_data_files(
-                clustered, table_path, layout_sort=["__z"],
-                layout_partitions=num_partitions, current_manifest=m,
-            ),
-            parent,
+        new_files = _write_data_files(
+            clustered, head.path, layout_sort=["__z"],
+            layout_partitions=num_partitions, current_manifest=m,
         )
     else:
         clustered = zorder_repartition(
-            read_snapshot(spark, table_path, parent),
-            zorder_cols,
-            bits=bits,
-            num_partitions=num_partitions,
+            src, zorder_cols, bits=bits, num_partitions=num_partitions,
         )
-        # full rewrite through the deletes-aware read: every pending
-        # merge-on-read delete is folded, so the new manifest carries
-        # none
-        new_files = _stamp_seq(
-            _write_data_files(clustered, table_path, current_manifest=m),
-            parent,
+        new_files = _write_data_files(
+            clustered, head.path, current_manifest=m,
         )
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while clustering — replan"
-        )
-    return _publish(table_path, parent, new_files, m["schema"],
-                    "replace", parent_manifest=m)
+    return head.publish(
+        _stamp_seq(new_files, head.seq_parent), [], "replace")
 
 
 def commit_with_retry(fn, max_retries: int = 3):

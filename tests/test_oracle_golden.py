@@ -46,3 +46,20 @@ def test_oracle_sql_matches_golden_hashes():
             json.dumps(got, sort_keys=True).encode()
         ).hexdigest()
         assert overall == golden["overall"]
+
+
+def test_readme_registry_counts():
+    """README's `queries()` / `oracle_sql()` counts are the registry's."""
+    import re
+
+    import __spark_entry__ as m
+
+    readme = (pathlib.Path(__file__).parent.parent / "README.md").read_text()
+    got = re.search(
+        r"`queries\(\)` \((\d+) entries\) and `oracle_sql\(\)` "
+        r"\((\d+) DuckDB twins", readme,
+    )
+    assert got, "README no longer states the registry counts"
+    n = len(m.queries())
+    assert len(m.oracle_sql()) == n
+    assert (int(got[1]), int(got[2])) == (n, n)

@@ -134,7 +134,7 @@ def test_global_packing_distributed_matches_window_reference(spark, docs):
     from pyspark.sql import Window
 
     with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any RuntimeWarning -> failure
+        warnings.simplefilter("error", RuntimeWarning)
         got = {
             r["doc_id"]: (r["bin_id"], r["off"])
             for r in pack_sequences(

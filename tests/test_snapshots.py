@@ -3015,6 +3015,37 @@ def test_exclusive_json_fallback_atomic_publish(tmp_path, monkeypatch):
     assert _json.load(open(p)) == {"v": 3}
 
 
+def test_wap_stage_fallback_atomic_publish(spark, tmp_path, monkeypatch):
+    """Without hard links the write-audit-publish stage goes through the
+    same claim-file + atomic rename as every exclusive create (never a
+    truncated stage file), and publish/discard clear the claim so the
+    branch name stays re-stageable."""
+    import glob as _glob
+
+    import ratatool_spark.operators.snapshots as snap
+
+    def no_link(src, dst):
+        raise OSError("no hard links here")
+
+    path = str(tmp_path / "wapfb")
+    snap.commit_append(
+        spark.createDataFrame([(1, 10)], "id long, val long"), path)
+    monkeypatch.setattr(snap.os, "link", no_link)
+    batch = spark.createDataFrame([(2, 20)], "id long, val long")
+    snap.stage_append(batch, path, "etl")
+    sp = snap._stage_path(path, "etl")
+    assert os.path.exists(sp + ".claim")
+    with pytest.raises(snap.BranchExists):
+        snap.stage_append(batch, path, "etl")
+    assert snap.discard_branch(path, "etl")
+    snap.stage_append(batch, path, "etl")
+    assert snap.publish_branch(spark, path, "etl") == 2
+    assert sorted(
+        r["id"] for r in snap.read_snapshot(spark, path).collect()
+    ) == [1, 2]
+    assert not _glob.glob(os.path.join(path, "snapshots", "*.claim"))
+
+
 def test_branch_merge_cow_and_ff(spark, tmp_path):
     """CoW MERGE on a branch: same-key rows replace, new keys append,
     main never moves; fast-forward publishes the merged state."""
@@ -3365,6 +3396,90 @@ def test_branch_position_delete_and_cluster(spark, tmp_path):
     # no-match predicate is a no-op, not an empty commit
     snap.create_branch(path, "noop")
     assert snap.delete_branch_rows_mor(spark, path, "noop", "id < 0") == 0
+
+
+def test_branch_mutations_match_main(spark, tmp_path):
+    """Main and branch commits run the same mutation bodies: one
+    sequence applied to main and to a branch forked at the same base
+    reads the same rows after every step and adds the same number of
+    data files on both sides. A CoW range delete that touches no file
+    publishes nothing and returns the head id on either side."""
+    import ratatool_spark.operators.snapshots as snap
+
+    path = str(tmp_path / "parity")
+    snap.commit_append(
+        spark.range(200).select(
+            F.col("id"), (F.col("id") % 13).alias("v")).repartition(4),
+        path,
+    )
+    snap.create_branch(path, "twin")
+    upd = spark.createDataFrame(
+        [(5, 105), (150, 250), (300, 400)], "id long, v long")
+    upd2 = spark.createDataFrame(
+        [(7, 107), (160, 260), (301, 401)], "id long, v long")
+    steps = [
+        ("cow merge",
+         lambda: snap.merge_snapshot(spark, path, upd, ["id"]),
+         lambda: snap.merge_branch(spark, path, "twin", upd, ["id"])),
+        ("mor merge",
+         lambda: snap.merge_snapshot_mor(spark, path, upd2, ["id"]),
+         lambda: snap.merge_branch_mor(spark, path, "twin", upd2, ["id"])),
+        ("mor range delete",
+         lambda: snap.delete_snapshot_where_mor(spark, path, {"id": (20, 29)}),
+         lambda: snap.delete_branch_where_mor(
+             spark, path, "twin", {"id": (20, 29)})),
+        ("position delete",
+         lambda: snap.delete_snapshot_rows_mor(spark, path, "v = 3"),
+         lambda: snap.delete_branch_rows_mor(spark, path, "twin", "v = 3")),
+        ("cow range delete",
+         lambda: snap.delete_snapshot_where(spark, path, {"id": (40, 49)}),
+         lambda: snap.delete_branch_where(
+             spark, path, "twin", {"id": (40, 49)})),
+        ("cow range delete touching no file",
+         lambda: snap.delete_snapshot_where(
+             spark, path, {"id": (10_000, 10_010)}),
+         lambda: snap.delete_branch_where(
+             spark, path, "twin", {"id": (10_000, 10_010)})),
+        ("fold",
+         lambda: snap.fold_deletes(spark, path),
+         lambda: snap.fold_branch_deletes(spark, path, "twin")),
+        ("compact",
+         lambda: snap.compact_snapshot(spark, path, 1 << 30),
+         lambda: snap.compact_branch(spark, path, "twin", 1 << 30)),
+        ("cluster",
+         lambda: snap.cluster_snapshot(
+             spark, path, ["id", "v"], num_partitions=2),
+         lambda: snap.cluster_branch(
+             spark, path, "twin", ["id", "v"], num_partitions=2)),
+    ]
+
+    def heads():
+        _, bm = snap._branch_head_manifest(path, "twin")
+        return (
+            snap.current_snapshot_id(path),
+            {e["path"] for e in read_manifest(path)["files"]},
+            (snap.branch_snapshot_ids(path, "twin") or [0])[-1],
+            {e["path"] for e in bm["files"]},
+        )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for step, on_main, on_branch in steps:
+        main_id, main_files, k, branch_files = heads()
+        got_main, got_branch = on_main(), on_branch()
+        new_main_id, new_main_files, new_k, new_branch_files = heads()
+        assert rows(read_snapshot(spark, path)) == rows(
+            snap.read_branch_snapshot(spark, path, "twin")), step
+        assert len(new_main_files - main_files) == len(
+            new_branch_files - branch_files), step
+        if step == "cow range delete touching no file":
+            assert (got_main, got_branch) == (main_id, k)
+            assert (new_main_id, new_k) == (main_id, k)
+        else:
+            assert (new_main_id, new_k) == (main_id + 1, k + 1), step
+    assert snap.read_manifest(path)["deletes"] == []
+    assert snap._branch_head_manifest(path, "twin")[1]["deletes"] == []
 
 
 def test_branch_manifests_externalize_blooms_and_big_lists(
