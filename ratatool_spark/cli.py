@@ -8,2582 +8,1822 @@ instead of scopt, DataFrames instead of Beam pipelines.
     python -m ratatool_spark.cli bigDiffy --lhs X --rhs Y --key k1,k2 --output Z \\
         [--ignore f1,f2] [--unordered f3] [--ignoreNan]
     python -m ratatool_spark.cli directSampler --input X --output Y -n 100 [--head]
+
+Every subcommand is one ``_command`` entry: its help line, its flags and
+a runner ``(spark, args)``. Most runners are an ``_Op`` (read the declared
+inputs, call one library function); verbs that do more are functions.
+A runner returns a DataFrame, which ``main`` writes to ``--output``, or
+an exit code (None = 0).
 """
 
 from __future__ import annotations
 
 import argparse
+import json
+import os
 import sys
+from typing import Any, Callable, NamedTuple
 
 
 def _csv(s: str) -> list[str]:
     return [x for x in s.split(",") if x]
 
 
-def build_parser() -> argparse.ArgumentParser:
-    p = argparse.ArgumentParser(prog="ratatool_spark")
-    sub = p.add_subparsers(dest="command", required=True)
+def _split(spec: str, n: int, flag: str, shape: str, sep: str = ":",
+           maxsplit: int = -1, blanks: bool = False) -> list[str]:
+    """One ``flag`` value as ``n`` fields (``maxsplit=1``: the last field
+    keeps further separators; ``blanks``: empty fields allowed), or exit 1
+    naming the flag and the shape it expects."""
+    parts = spec.split(sep, maxsplit)
+    if len(parts) != n or not (blanks or all(parts)):
+        raise SystemExit(f"{flag} expects {shape}, got {spec!r}")
+    return parts
 
-    s = sub.add_parser("bigSampler", help="distributed sampling")
-    s.add_argument("--input", required=True)
-    s.add_argument("--output", required=True)
-    s.add_argument(
+
+def _col_pairs(specs: list[str]) -> list[tuple[str, str]]:
+    """``left:right`` column pairs; a bare ``col`` pairs with itself."""
+    pairs = []
+    for spec in specs:
+        lc, sep, rc = spec.partition(":")
+        pairs.append((lc, rc if sep else lc))
+    return pairs
+
+
+def _emit(obj: Any, **kw: Any) -> None:
+    print(json.dumps(obj, **kw))
+
+
+# ------------------------------------------------------------------ table
+
+
+def _arg(*flags: str, **kw: Any) -> tuple[tuple[str, ...], dict]:
+    return flags, kw
+
+
+_IN = _arg("--input", required=True)
+_OUT = _arg("--output", required=True)
+_FMT = _arg("--format", default=None, help="override input format sniffing")
+_TEXT = _arg("--textField", default="text")
+_ID = _arg("--idField", default="doc_id")
+
+# name -> (help, flags, runner); insertion order is the --help order
+_COMMANDS: dict[str, tuple[str, tuple, Callable]] = {}
+
+# command -> --mode -> the flags that mode needs beyond argparse's own
+_MODE_FLAGS: dict[str, dict[str, tuple[str, ...]]] = {
+    "scd2": {"apply": ("history",)},
+    "logreg": {"train": ("label",), "score": ("output",)},
+    "snapshot": {
+        "append": ("input",),
+        "rename-column": ("column", "to"),
+        "widen-column": ("column", "to"),
+        "evolve-spec": ("spec",),
+        "create-branch": ("branch",),
+        "append-branch": ("input", "branch"),
+        "read-branch-snapshot": ("branch", "output"),
+        "fast-forward": ("branch",),
+        "delete-branch": ("branch",),
+        "metadata": ("metadataKind",),
+        "tag": ("tagName",),
+        "untag": ("tagName",),
+        "set-bloom": ("bloomCols",),
+        "stage": ("input", "branch"),
+        "read-branch": ("branch", "output"),
+        "publish": ("branch",),
+        "discard": ("branch",),
+        "add-constraint": ("name", "expr"),
+        "drop-constraint": ("name",),
+        "delete-rows": ("predicate",),
+        "drop-partition": ("partition",),
+        "read": ("output",),
+        "merge": ("input", "keys"),
+        "merge-mor": ("input", "keys"),
+        "changes": ("fromId", "output"),
+        "mirror": ("source", "checkpoint"),
+        "delete": ("where",),
+        "delete-mor": ("where",),
+        "cluster": ("zorderBy",),
+        "rollback": ("snapshotId",),
+    },
+}
+
+# snapshot --mode -> (main function, branch function); the branch one
+# takes the branch name right after the table path
+_SNAP_BRANCHED = {
+    "merge": ("merge_snapshot", "merge_branch"),
+    "merge-mor": ("merge_snapshot_mor", "merge_branch_mor"),
+    "fold": ("fold_deletes", "fold_branch_deletes"),
+    "delete": ("delete_snapshot_where", "delete_branch_where"),
+    "delete-mor": ("delete_snapshot_where_mor", "delete_branch_where_mor"),
+    "cluster": ("cluster_snapshot", "cluster_branch"),
+    "compact": ("compact_snapshot", "compact_branch"),
+}
+
+
+def _command(name: str, text: str, *flags: tuple, run: Callable | None = None):
+    """Register a subcommand; without ``run``, decorate its runner."""
+    def register(fn: Callable) -> Callable:
+        _COMMANDS[name] = (text, flags, fn)
+        return fn
+
+    return register if run is None else register(run)
+
+
+def _read(spark, args: argparse.Namespace, dest: str, fmt: str | None = None):
+    """The table named by ``args.<dest>``, in ``fmt`` else ``--format``,
+    with ``--rowRestriction`` applied where the verb has one."""
+    from ratatool_spark.sources.io import read_table, row_restriction
+
+    fmt = fmt or getattr(args, "format", None)
+    df = read_table(spark, getattr(args, dest), fmt=fmt)
+    if getattr(args, "rowRestriction", None):
+        df = row_restriction(df, args.rowRestriction)
+    return df
+
+
+def _write(out, path: str) -> None:
+    from ratatool_spark.sources.io import write_table
+
+    write_table(out, path, mode="overwrite")
+
+
+def _val(args: argparse.Namespace, v: str | Callable) -> Any:
+    return v(args) if callable(v) else getattr(args, v)
+
+
+class _Op(NamedTuple):
+    """Read ``inputs`` (a dest, or ``(dest, fmt)``), then call ``fn``
+    (``"module:function"`` under ``ratatool_spark``, imported at dispatch)
+    with the tables, then ``pos`` and ``kw`` (each a dest or a callable of
+    ``args``). A ``sink`` writes ``--output`` itself."""
+
+    fn: str
+    inputs: tuple
+    pos: tuple
+    kw: dict
+    sink: bool
+
+    def __call__(self, spark, args: argparse.Namespace):
+        import importlib
+
+        mod, _, name = self.fn.partition(":")
+        fn = getattr(importlib.import_module(f"ratatool_spark.{mod}"), name)
+        dfs = [_read(spark, args, *(i if isinstance(i, tuple) else (i,)))
+               for i in self.inputs]
+        pos = [_val(args, v) for v in self.pos]
+        kw = {k: _val(args, v) for k, v in self.kw.items()}
+        if not self.sink:
+            return fn(*dfs, *pos, **kw)
+        fn(*dfs, args.output, *pos, mode="overwrite", **kw)
+
+
+def _op(fn: str, *pos: str | Callable, inputs: tuple = ("input",),
+        sink: bool = False, **kw: str | Callable) -> _Op:
+    return _Op(fn, inputs, pos, kw, sink)
+
+
+_command(
+    "bigSampler", "distributed sampling",
+    _IN, _OUT,
+    _arg(
         "--fraction",
         "--sample",  # the reference's flag name (BigSampler usage: --sample=<pct>)
         dest="fraction",
         type=float,
         required=True,
-    )
-    s.add_argument("--fields", type=_csv, default=None, help="deterministic hash fields")
-    s.add_argument("--distribution", choices=["stratified", "uniform"], default=None)
-    s.add_argument("--distributionFields", type=_csv, default=None)
-    s.add_argument("--exact", action="store_true")
-    s.add_argument("--seed", type=int, default=42)
-    s.add_argument(
-        "--hashAlgorithm",
-        choices=["portable", "xx", "farm", "murmur"],
-        default="portable",
-        help="dice hash backend (Util.scala:85-103 farm|murmur parity; "
-        "portable = md5 cross-engine default, xx = fastest Spark-native)",
-    )
-    s.add_argument(
-        "--byteEncoding",
-        choices=["hex", "base64"],
-        default="hex",
-        help="bytes-field pre-hash encoding (ByteHasher.scala parity; "
-        "raw is documented-rejected — see functions/hashing.py)",
-    )
-    s.add_argument(
-        "--rowRestriction",
-        default=None,
-        help="SQL predicate applied at the scan (the reference's BigQuery "
-        "row restriction, pushed into the parquet read here)",
-    )
-    s.add_argument("--format", default=None, help="override input format sniffing")
+    ),
+    _arg("--fields", type=_csv, default=None, help="deterministic hash fields"),
+    _arg("--distribution", choices=["stratified", "uniform"], default=None),
+    _arg("--distributionFields", type=_csv, default=None),
+    _arg("--exact", action="store_true"),
+    _arg("--seed", type=int, default=42),
+    _arg("--hashAlgorithm", choices=["portable", "xx", "farm", "murmur"],
+         default="portable",
+         help="dice hash backend (Util.scala:85-103 farm|murmur parity; "
+         "portable = md5 cross-engine default, xx = fastest Spark-native)"),
+    _arg("--byteEncoding", choices=["hex", "base64"], default="hex",
+         help="bytes-field pre-hash encoding (ByteHasher.scala parity; "
+         "raw is documented-rejected — see functions/hashing.py)"),
+    _arg("--rowRestriction", default=None,
+         help="SQL predicate applied at the scan (the reference's BigQuery "
+         "row restriction, pushed into the parquet read here)"),
+    _FMT,
+    run=_op("operators.sampler:sample", "fraction", fields="fields",
+            strata=lambda a: a.distributionFields if a.distribution else None,
+            uniform=lambda a: a.distribution == "uniform", exact="exact",
+            seed="seed", hasher="hashAlgorithm", byte_encoding="byteEncoding"),
+)
 
-    d = sub.add_parser("bigDiffy", help="pairwise keyed dataset diff")
-    d.add_argument("--lhs", required=True)
-    d.add_argument("--rhs", required=True)
-    d.add_argument("--key", type=_csv, required=True)
-    d.add_argument("--output", required=True)
-    d.add_argument("--ignore", type=_csv, default=[])
-    d.add_argument("--unordered", type=_csv, default=[])
-    d.add_argument(
-        "--unorderedFieldKey",
-        type=_csv,
-        default=[],
-        help="path:key pairs for keyed unordered nested-record arrays "
-        "(BigDiffy --unorderedFieldKey=fieldPath:fieldKey,...)",
-    )
-    d.add_argument(
-        "--rowRestriction",
-        default=None,
-        help="SQL predicate applied to BOTH sides at the scan",
-    )
-    d.add_argument("--ignoreNan", action="store_true")
 
-    ds = sub.add_parser("directSampler", help="local head/random sample")
-    ds.add_argument("--input", required=True)
-    ds.add_argument("--output", required=True)
-    ds.add_argument("-n", type=int, required=True)
-    ds.add_argument("--head", action="store_true")
-    ds.add_argument("--seed", type=int, default=42)
+@_command(
+    "bigDiffy", "pairwise keyed dataset diff",
+    _arg("--lhs", required=True),
+    _arg("--rhs", required=True),
+    _arg("--key", type=_csv, required=True),
+    _OUT,
+    _arg("--ignore", type=_csv, default=[]),
+    _arg("--unordered", type=_csv, default=[]),
+    _arg("--unorderedFieldKey", type=_csv, default=[],
+         help="path:key pairs for keyed unordered nested-record arrays "
+         "(BigDiffy --unorderedFieldKey=fieldPath:fieldKey,...)"),
+    _arg("--rowRestriction", default=None,
+         help="SQL predicate applied to BOTH sides at the scan"),
+    _arg("--ignoreNan", action="store_true"),
+)
+def _big_diffy(spark, args):
+    from ratatool_spark.operators.diffy import BigDiffy
 
-    nd = sub.add_parser(
-        "nearDedup",
-        help="near-duplicate removal: minhash-LSH -> jaccard verify -> "
-        "connected components -> keep min-id doc per cluster",
-    )
-    nd.add_argument("--input", required=True)
-    nd.add_argument("--output", required=True)
-    nd.add_argument("--textField", default="text")
-    nd.add_argument("--idField", default="doc_id")
-    nd.add_argument("--threshold", type=float, default=0.7, help="jaccard keep-threshold")
-    nd.add_argument("--numHashes", type=int, default=16)
-    nd.add_argument("--bands", type=int, default=4)
-    nd.add_argument("--shingleN", type=int, default=3)
-    nd.add_argument(
-        "--hasher",
-        choices=["portable", "xx"],
-        default="portable",
-        help="xx = Spark-native fast path (not cross-engine reproducible)",
-    )
-    nd.add_argument("--format", default=None, help="override input format sniffing")
-    nd.add_argument(
-        "--scoreField",
-        default=None,
-        help="quality column: each duplicate cluster keeps its max-score doc "
-        "(ties -> min id) instead of the min-id doc",
-    )
+    unordered_keys = {}
+    for pair in args.unorderedFieldKey:
+        path, key = _split(pair, 2, "--unorderedFieldKey",
+                           "non-empty path:key pairs", maxsplit=1)
+        if path in unordered_keys:
+            raise SystemExit(f"--unorderedFieldKey repeats path {path!r}")
+        unordered_keys[path] = key
+    BigDiffy(
+        _read(spark, args, "lhs"), _read(spark, args, "rhs"), keys=args.key,
+        ignore=set(args.ignore), unordered=set(args.unordered),
+        unordered_keys=unordered_keys or None, ignore_nan=args.ignoreNan,
+    ).save_stats(args.output)
 
-    sd = sub.add_parser(
-        "substringDedup",
-        help="substring-containment pairs: docs whose token sequence occurs "
-        "verbatim inside another doc (anchored inverted index + verify)",
-    )
-    sd.add_argument("--input", required=True)
-    sd.add_argument("--output", required=True)
-    sd.add_argument("--textField", default="text")
-    sd.add_argument("--idField", default="doc_id")
-    sd.add_argument("--shingleLen", type=int, default=8)
-    sd.add_argument(
-        "--maxDocFreq",
-        type=int,
-        default=None,
-        help="skip docs whose rarest anchor shingle is hotter than this "
-        "(recall envelope; bounds candidate fan-out)",
-    )
-    sd.add_argument("--format", default=None, help="override input format sniffing")
 
-    g = sub.add_parser("generate", help="schema-driven random records")
-    g.add_argument("--schema", required=True, help="DDL string, e.g. 'a bigint, b string'")
-    g.add_argument("-n", type=int, required=True)
-    g.add_argument("--output", required=True)
-    g.add_argument("--seed", type=int, default=42)
+@_command(
+    "directSampler", "local head/random sample",
+    _IN, _OUT,
+    _arg("-n", type=int, required=True),
+    _arg("--head", action="store_true"),
+    _arg("--seed", type=int, default=42),
+)
+def _direct_sampler(spark, args):
+    from ratatool_spark.operators.sampler import head_sample, reservoir_sample
 
-    pk = sub.add_parser(
-        "packSequences",
-        help="assign docs to fixed-token-budget training bins "
-        "(concat-and-chunk; grouped windows, parallel by group)",
-    )
-    pk.add_argument("--input", required=True)
-    pk.add_argument("--output", required=True)
-    pk.add_argument("--tokenField", required=True)
-    pk.add_argument("--budget", type=int, required=True)
-    pk.add_argument("--orderBy", type=_csv, required=True)
-    pk.add_argument("--groupBy", type=_csv, default=None)
-    pk.add_argument("--offsetField", default=None)
-    pk.add_argument("--format", default=None, help="override input format sniffing")
+    df = _read(spark, args, "input")
+    if args.head:
+        return head_sample(df, args.n)
+    return reservoir_sample(df, args.n, args.seed)
 
-    dl = sub.add_parser(
-        "dedupLines",
-        help="C4/Gopher line dedup: drop lines repeated past a threshold "
-        "(corpus-wide boilerplate or intra-document junk), reassemble docs",
-    )
-    dl.add_argument("--input", required=True)
-    dl.add_argument("--output", required=True)
-    dl.add_argument("--textField", default="text")
-    dl.add_argument("--idField", default="doc_id")
-    dl.add_argument("--maxOccurrences", type=int, default=1)
-    dl.add_argument("--minLineChars", type=int, default=2)
-    dl.add_argument("--scope", choices=["corpus", "document"], default="corpus")
-    dl.add_argument("--format", default=None, help="override input format sniffing")
 
-    up = sub.add_parser(
-        "upsert",
-        help="keyed upsert into a stored table (replace same-key rows, "
-        "append new keys, optional delete flag; tmp-write + rename swap)",
-    )
-    up.add_argument("--base", required=True, help="table path to merge into")
-    up.add_argument("--updates", required=True)
-    up.add_argument("--keys", type=_csv, required=True)
-    up.add_argument("--deleteField", default=None)
-    up.add_argument("--format", default="parquet")
-    up.add_argument("--updatesFormat", default=None, help="override sniffing")
+_command(
+    "nearDedup",
+    "near-duplicate removal: minhash-LSH -> jaccard verify -> "
+    "connected components -> keep min-id doc per cluster",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--threshold", type=float, default=0.7, help="jaccard keep-threshold"),
+    _arg("--numHashes", type=int, default=16),
+    _arg("--bands", type=int, default=4),
+    _arg("--shingleN", type=int, default=3),
+    _arg("--hasher", choices=["portable", "xx"], default="portable",
+         help="xx = Spark-native fast path (not cross-engine reproducible)"),
+    _FMT,
+    _arg("--scoreField", default=None,
+         help="quality column: each duplicate cluster keeps its max-score doc "
+         "(ties -> min id) instead of the min-id doc"),
+    run=_op("operators.dedup:near_dedup", text_col="textField", id_col="idField",
+            num_hashes="numHashes", bands="bands", shingle_n="shingleN",
+            threshold="threshold", hasher="hasher", score_col="scoreField"),
+)
 
-    bl = sub.add_parser(
-        "bpeLearn",
-        help="train BPE merges over a corpus; writes an ordered JSON merge "
-        "list (tokenizer-training inner loop, distributed)",
-    )
-    bl.add_argument("--input", required=True)
-    bl.add_argument("--output", required=True, help="merges JSON path (any Hadoop scheme)")
-    bl.add_argument("--textField", default="text")
-    bl.add_argument("--nMerges", type=int, default=100)
-    bl.add_argument(
-        "--batch", type=int, default=1,
-        help="merges admitted per round (pairwise symbol-disjoint); "
-        ">1 = batched selection, O(n/yield) jobs instead of one per merge",
-    )
-    bl.add_argument("--pool", type=int, default=128, help="candidate pool per round")
-    bl.add_argument(
-        "--rounds", type=int, default=None,
-        help="explicit round schedule (default ceil(nMerges/batch))",
-    )
-    bl.add_argument("--format", default=None, help="override input format sniffing")
+_command(
+    "substringDedup",
+    "substring-containment pairs: docs whose token sequence occurs "
+    "verbatim inside another doc (anchored inverted index + verify)",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--shingleLen", type=int, default=8),
+    _arg("--maxDocFreq", type=int, default=None,
+         help="skip docs whose rarest anchor shingle is hotter than this "
+         "(recall envelope; bounds candidate fan-out)"),
+    _FMT,
+    run=_op("operators.dedup:substring_containment_pairs", text_col="textField",
+            id_col="idField", shingle_len="shingleLen", max_doc_freq="maxDocFreq"),
+)
 
-    be = sub.add_parser(
-        "bpeEncode",
-        help="segment a corpus with a learned merge list (adds bpe_syms + "
-        "n_bpe_tokens; Arrow-batched kernel past 16 merges)",
-    )
-    be.add_argument("--input", required=True)
-    be.add_argument("--output", required=True)
-    be.add_argument("--merges", required=True, help="merges JSON from bpeLearn")
-    be.add_argument("--textField", default="text")
-    be.add_argument("--format", default=None, help="override input format sniffing")
 
-    ut = sub.add_parser(
-        "unigramTrain",
-        help="train a unigram-LM tokenizer (SentencePiece model: seed "
-        "substrings -> EM over word lattices -> pruned vocab); writes a "
-        "(piece, p, logp) parquet artifact",
-    )
-    ut.add_argument("--input", required=True)
-    ut.add_argument("--output", required=True, help="vocab parquet path")
-    ut.add_argument("--textField", default="text")
-    ut.add_argument("--vocabSize", type=int, default=512)
-    ut.add_argument("--maxPieceLen", type=int, default=4)
-    ut.add_argument("--emRounds", type=int, default=2)
-    ut.add_argument("--minSeedCount", type=int, default=2)
-    ut.add_argument("--maxWordLen", type=int, default=16)
-    ut.add_argument("--format", default=None, help="override input format sniffing")
+@_command(
+    "generate", "schema-driven random records",
+    _arg("--schema", required=True, help="DDL string, e.g. 'a bigint, b string'"),
+    _arg("-n", type=int, required=True),
+    _OUT,
+    _arg("--seed", type=int, default=42),
+)
+def _generate(spark, args):
+    from ratatool_spark.generators import random_dataframe
 
-    us = sub.add_parser(
-        "unigramSegment",
-        help="apply a trained unigram tokenizer to a corpus (per-doc "
-        "token/piece/OOV counts; Viterbi computed once per distinct word)",
-    )
-    us.add_argument("--input", required=True)
-    us.add_argument("--output", required=True)
-    us.add_argument("--vocab", required=True, help="vocab parquet from unigramTrain")
-    us.add_argument("--textField", default="text")
-    us.add_argument("--idField", default="doc_id")
-    us.add_argument("--maxWordLen", type=int, default=16)
-    us.add_argument("--format", default=None, help="override input format sniffing")
+    return random_dataframe(spark, args.schema, args.n, seed=args.seed)
 
-    wt = sub.add_parser(
-        "wordpieceTrain",
-        help="train a WordPiece tokenizer (BERT model: likelihood-scored "
-        "merges over ##-marked symbols, batched disjoint selection); "
-        "writes a JSON artifact (merges + inference vocab)",
-    )
-    wt.add_argument("--input", required=True)
-    wt.add_argument("--output", required=True, help="tokenizer JSON path")
-    wt.add_argument("--textField", default="text")
-    wt.add_argument("--nMerges", type=int, default=64)
-    wt.add_argument("--batch", type=int, default=16)
-    wt.add_argument("--pool", type=int, default=64)
-    wt.add_argument("--rounds", type=int, default=None)
-    wt.add_argument("--format", default=None,
-                    help="override input format sniffing")
 
-    ws = sub.add_parser(
-        "wordpieceSegment",
-        help="apply a trained WordPiece tokenizer to a corpus — "
-        "--mode replay (training-order merge replay) or match (BERT "
-        "greedy longest-match against the frozen vocab, [UNK] fallback)",
-    )
-    ws.add_argument("--input", required=True)
-    ws.add_argument("--output", required=True)
-    ws.add_argument("--tokenizer", required=True,
-                    help="JSON artifact from wordpieceTrain")
-    ws.add_argument("--mode", choices=["replay", "match"], default="replay")
-    ws.add_argument("--textField", default="text")
-    ws.add_argument("--unk", default="[UNK]")
-    ws.add_argument("--format", default=None,
-                    help="override input format sniffing")
+_command(
+    "packSequences",
+    "assign docs to fixed-token-budget training bins "
+    "(concat-and-chunk; grouped windows, parallel by group)",
+    _IN, _OUT,
+    _arg("--tokenField", required=True),
+    _arg("--budget", type=int, required=True),
+    _arg("--orderBy", type=_csv, required=True),
+    _arg("--groupBy", type=_csv, default=None),
+    _arg("--offsetField", default=None),
+    _FMT,
+    run=_op("operators.packing:pack_sequences", "tokenField", "budget",
+            order_cols="orderBy", group_cols="groupBy", offset_col="offsetField"),
+)
 
-    td = sub.add_parser(
-        "tfidfDedup",
-        help="sparse TF-IDF cosine near-dup pairs (inverted-index term "
-        "join; idf auto-drops corpus-wide boilerplate)",
-    )
-    td.add_argument("--input", required=True)
-    td.add_argument("--output", required=True)
-    td.add_argument("--textField", default="text")
-    td.add_argument("--idField", default="doc_id")
-    td.add_argument("--threshold", type=float, default=0.5)
-    td.add_argument("--maxDocFreq", type=int, default=1000)
-    td.add_argument("--format", default=None, help="override input format sniffing")
+_command(
+    "dedupLines",
+    "C4/Gopher line dedup: drop lines repeated past a threshold "
+    "(corpus-wide boilerplate or intra-document junk), reassemble docs",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--maxOccurrences", type=int, default=1),
+    _arg("--minLineChars", type=int, default=2),
+    _arg("--scope", choices=["corpus", "document"], default="corpus"),
+    _FMT,
+    run=_op("operators.corpus:remove_duplicate_lines", text_col="textField",
+            id_col="idField", max_occurrences="maxOccurrences",
+            min_line_chars="minLineChars", scope="scope"),
+)
 
-    qs_ = sub.add_parser(
-        "quantileSketch",
-        help="mergeable deterministic bottom-k (KMV) quantile sketch "
-        "tables: build per-batch, merge losslessly, estimate any quantile",
-    )
-    qs_.add_argument(
-        "--mode", choices=["build", "merge", "estimate"], required=True
-    )
-    qs_.add_argument("--input", help="input table (build/estimate)")
-    qs_.add_argument("--inputs", type=_csv, help="sketch tables to merge")
-    qs_.add_argument("--output", required=True)
-    qs_.add_argument("--groupBy", type=_csv, default=["__all__"], help="group columns (build)")
-    qs_.add_argument("--valueField", default="value")
-    qs_.add_argument("--keyFields", type=_csv, default=None, help="unique row key columns (build)")
-    qs_.add_argument("--k", type=int, default=1024)
-    qs_.add_argument(
-        "--quantiles", type=_csv, default=["0.5", "0.9", "0.99"], help="estimate mode"
-    )
-    qs_.add_argument("--format", default=None, help="override input format sniffing")
 
-    ds_ = sub.add_parser(
-        "dsirSelect",
-        help="DSIR importance resampling: weight docs by target-vs-raw "
-        "unigram log-ratio, select top-n by deterministic Gumbel-top-k",
-    )
-    ds_.add_argument("--input", required=True)
-    ds_.add_argument("--targetFreqs", required=True, help="build_token_freqs parquet of the target corpus")
-    ds_.add_argument("--rawFreqs", required=True, help="build_token_freqs parquet of the raw pool")
-    ds_.add_argument("--output", required=True)
-    ds_.add_argument("--n", type=int, required=True)
-    ds_.add_argument("--textField", default="text")
-    ds_.add_argument("--idField", default="doc_id")
-    ds_.add_argument("--smoothing", type=float, default=0.5)
-    ds_.add_argument("--seed", type=int, default=0)
-    ds_.add_argument("--format", default=None, help="override input format sniffing")
+@_command(
+    "upsert",
+    "keyed upsert into a stored table (replace same-key rows, "
+    "append new keys, optional delete flag; tmp-write + rename swap)",
+    _arg("--base", required=True, help="table path to merge into"),
+    _arg("--updates", required=True),
+    _arg("--keys", type=_csv, required=True),
+    _arg("--deleteField", default=None),
+    _arg("--format", default="parquet"),
+    _arg("--updatesFormat", default=None, help="override sniffing"),
+)
+def _upsert(spark, args):
+    from ratatool_spark.sources.io import read_table, upsert_table
 
-    fz = sub.add_parser(
-        "fuzzyJoin",
-        help="blocked fuzzy join (entity resolution): equality blocking "
-        "key + Levenshtein/token-Jaccard verify, optional best link per "
-        "left id",
-    )
-    fz.add_argument("--leftInput", required=True)
-    fz.add_argument("--rightInput", required=True)
-    fz.add_argument("--output", required=True)
-    fz.add_argument("--leftId", required=True)
-    fz.add_argument("--rightId", required=True)
-    fz.add_argument(
-        "--blockField", type=_csv, required=True,
-        help="one or more blocking keys (comma-separated: multi-pass "
-        "recall net, candidates unioned and deduped); must exist on "
-        "both sides",
-    )
-    fz.add_argument(
-        "--compare", type=_csv, required=True,
-        help="column pairs left:right (e.g. name:name,addr:address)",
-    )
-    fz.add_argument(
-        "--method", choices=["lev_ratio", "token_jaccard"], default="lev_ratio"
-    )
-    fz.add_argument("--threshold", type=float, default=0.85)
-    fz.add_argument("--keepBest", action="store_true")
-    fz.add_argument("--maxBlockSize", type=int, default=1000)
-    fz.add_argument("--format", default=None, help="override input format sniffing")
+    updates = read_table(spark, args.updates, fmt=args.updatesFormat)
+    _emit(upsert_table(spark, args.base, updates, args.keys, fmt=args.format,
+                       delete_col=args.deleteField))
 
-    fs = sub.add_parser(
-        "freqSketch",
-        help="mergeable count-min frequency sketch tables: build "
-        "per-batch, merge (exact counter sum), estimate key counts",
-    )
-    fs.add_argument(
-        "--mode", choices=["build", "merge", "estimate"], required=True
-    )
-    fs.add_argument("--input", help="input table (build/estimate)")
-    fs.add_argument("--inputs", type=_csv, help="sketch tables to merge")
-    fs.add_argument("--output", required=True)
-    fs.add_argument(
-        "--groupBy", type=_csv, default=["__all__"], help="group columns (build)"
-    )
-    fs.add_argument("--keyField", default="key", help="counted key column")
-    fs.add_argument("--depth", type=int, default=4)
-    fs.add_argument("--width", type=int, default=1024)
-    fs.add_argument("--seed", type=int, default=0)
-    fs.add_argument(
-        "--keys", type=_csv, default=None, help="probe keys (estimate mode)"
-    )
-    fs.add_argument("--format", default=None, help="override input format sniffing")
 
-    hh = sub.add_parser(
-        "heavyHitters",
-        help="exact top-k most frequent keys per group (two-stage "
-        "aggregate + window group limit; deterministic tie-break)",
-    )
-    hh.add_argument("--input", required=True)
-    hh.add_argument("--output", required=True)
-    hh.add_argument("--groupBy", type=_csv, default=[], help="group columns")
-    hh.add_argument("--keyField", required=True)
-    hh.add_argument("--k", type=int, default=10)
-    hh.add_argument("--format", default=None, help="override input format sniffing")
+@_command(
+    "bpeLearn",
+    "train BPE merges over a corpus; writes an ordered JSON merge "
+    "list (tokenizer-training inner loop, distributed)",
+    _IN,
+    _arg("--output", required=True, help="merges JSON path (any Hadoop scheme)"),
+    _TEXT,
+    _arg("--nMerges", type=int, default=100),
+    _arg("--batch", type=int, default=1,
+         help="merges admitted per round (pairwise symbol-disjoint); "
+         ">1 = batched selection, O(n/yield) jobs instead of one per merge"),
+    _arg("--pool", type=int, default=128, help="candidate pool per round"),
+    _arg("--rounds", type=int, default=None,
+         help="explicit round schedule (default ceil(nMerges/batch))"),
+    _FMT,
+)
+def _bpe_learn(spark, args):
+    from ratatool_spark.operators.corpus import bpe_learn
+    from ratatool_spark.sources.shards import _write_text
 
-    sk = sub.add_parser(
-        "skewReport",
-        help="per-column hot-value report (share + skew-vs-uniform "
-        "ratio): the pre-salting join-key diagnostic, one scan",
-    )
-    sk.add_argument("--input", required=True)
-    sk.add_argument("--output", required=True)
-    sk.add_argument("--columns", type=_csv, required=True)
-    sk.add_argument("--topK", type=int, default=5)
-    sk.add_argument("--format", default=None, help="override input format sniffing")
+    merges = bpe_learn(_read(spark, args, "input"), text_col=args.textField,
+                       n_merges=args.nMerges, batch=args.batch, pool=args.pool,
+                       rounds=args.rounds)
+    _write_text(spark, args.output, json.dumps(merges))
 
-    cg = sub.add_parser(
-        "capPerGroup",
-        help="deterministic 'at most N rows per group' cap (C4 per-domain "
-        "rule): keeps each group's smallest-hash rows",
-    )
-    cg.add_argument("--input", required=True)
-    cg.add_argument("--output", required=True)
-    cg.add_argument("--groupField", default="source")
-    cg.add_argument("--maxRows", type=int, default=100)
-    cg.add_argument("--diceFields", type=_csv, default=["doc_id"])
-    cg.add_argument("--seed", type=int, default=0)
-    cg.add_argument("--format", default=None, help="override input format sniffing")
 
-    pp = sub.add_parser(
-        "profilePii",
-        help="column-level PII scan: per-column email/IP/phone/SSN/card "
-        "match counts (+ Luhn-verified cards), one pass, optional "
-        "deterministic sample",
-    )
-    pp.add_argument("--input", required=True)
-    pp.add_argument("--output", required=True)
-    pp.add_argument("--columns", type=_csv, default=None, help="default: all string columns")
-    pp.add_argument("--sampleFraction", type=float, default=None)
-    pp.add_argument("--seed", type=int, default=0)
-    pp.add_argument("--format", default=None, help="override input format sniffing")
+@_command(
+    "bpeEncode",
+    "segment a corpus with a learned merge list (adds bpe_syms + "
+    "n_bpe_tokens; Arrow-batched kernel past 16 merges)",
+    _IN, _OUT,
+    _arg("--merges", required=True, help="merges JSON from bpeLearn"),
+    _TEXT, _FMT,
+)
+def _bpe_encode(spark, args):
+    from ratatool_spark.operators.corpus import bpe_segment
+    from ratatool_spark.sources.shards import _read_text
 
-    mx = sub.add_parser(
-        "mixtureSample",
-        help="resample toward a target per-source mixture "
-        "(deterministic portable dice; broadcast rates, no driver collect)",
-    )
-    mx.add_argument("--input", required=True)
-    mx.add_argument("--output", required=True)
-    mx.add_argument(
-        "--shares",
-        required=True,
-        help="comma list source=share, e.g. web=0.6,books=0.3,code=0.1",
-    )
-    mx.add_argument("--sourceField", default="source")
-    mx.add_argument("--diceFields", type=_csv, default=["doc_id"])
-    mx.add_argument("--seed", type=int, default=0)
-    mx.add_argument("--format", default=None, help="override input format sniffing")
+    merges = [tuple(m) for m in json.loads(_read_text(spark, args.merges))]
+    return bpe_segment(_read(spark, args, "input"), merges, text_col=args.textField)
 
-    ct = sub.add_parser(
-        "contamination",
-        help="n-gram-overlap train/test leakage check against a benchmark set",
-    )
-    ct.add_argument("--input", required=True)
-    ct.add_argument("--benchmark", required=True)
-    ct.add_argument("--output", required=True)
-    ct.add_argument("--textField", default="text")
-    ct.add_argument("--idField", default="doc_id")
-    ct.add_argument("--shingleN", type=int, default=3)
-    ct.add_argument("--format", default=None, help="override input format sniffing")
 
-    da = sub.add_parser(
-        "dedupAgainst",
-        help="incremental near-dedup: drop new-batch docs that "
-        "near-duplicate an existing corpus (banded LSH + verified Jaccard)",
-    )
-    da.add_argument("--input", required=True, help="the new batch")
-    da.add_argument("--corpus", required=True, help="the existing corpus")
-    da.add_argument("--output", required=True, help="kept (non-duplicate) rows")
-    da.add_argument("--textField", default="text")
-    da.add_argument("--idField", default="doc_id")
-    da.add_argument("--threshold", type=float, default=0.7)
-    da.add_argument("--numHashes", type=int, default=16)
-    da.add_argument("--bands", type=int, default=8)
-    da.add_argument("--shingleN", type=int, default=3)
-    da.add_argument("--hasher", choices=["portable", "xx"], default="portable")
-    da.add_argument(
-        "--corpusSigs",
-        default=None,
-        help="path of a saveSignatures table: skips the per-batch corpus "
-        "shingle/signature pass (parameters validated from the sidecar)",
-    )
-    da.add_argument("--format", default=None, help="override input format sniffing")
+_command(
+    "unigramTrain",
+    "train a unigram-LM tokenizer (SentencePiece model: seed "
+    "substrings -> EM over word lattices -> pruned vocab); writes a "
+    "(piece, p, logp) parquet artifact",
+    _IN,
+    _arg("--output", required=True, help="vocab parquet path"),
+    _TEXT,
+    _arg("--vocabSize", type=int, default=512),
+    _arg("--maxPieceLen", type=int, default=4),
+    _arg("--emRounds", type=int, default=2),
+    _arg("--minSeedCount", type=int, default=2),
+    _arg("--maxWordLen", type=int, default=16),
+    _FMT,
+    run=_op("operators.unigram:unigram_train", text_col="textField",
+            vocab_size="vocabSize", max_piece_len="maxPieceLen",
+            em_rounds="emRounds", min_seed_count="minSeedCount",
+            max_word_len="maxWordLen"),
+)
 
-    ef = sub.add_parser(
-        "exactDedupAgainst",
-        help="exact incremental dedup: keep new-batch rows whose key "
-        "columns have no exact match in the corpus (Bloom-routed — the "
-        "corpus is scanned, never shuffled)",
-    )
-    ef.add_argument("--input", required=True, help="the new batch")
-    ef.add_argument("--corpus", required=True, help="the existing corpus")
-    ef.add_argument("--output", required=True)
-    ef.add_argument("--keyFields", type=_csv, required=True)
-    ef.add_argument("--fpp", type=float, default=0.01, help="Bloom false-positive rate")
-    ef.add_argument("--noBloom", action="store_true",
-                    help="plain anti-join (new batch comparable to corpus size)")
-    ef.add_argument("--format", default=None, help="override input format sniffing")
+_command(
+    "unigramSegment",
+    "apply a trained unigram tokenizer to a corpus (per-doc "
+    "token/piece/OOV counts; Viterbi computed once per distinct word)",
+    _IN, _OUT,
+    _arg("--vocab", required=True, help="vocab parquet from unigramTrain"),
+    _TEXT, _ID,
+    _arg("--maxWordLen", type=int, default=16),
+    _FMT,
+    run=_op("operators.unigram:segment_docs", inputs=("input", ("vocab", "parquet")),
+            text_col="textField", id_col="idField", max_word_len="maxWordLen"),
+)
 
-    sg = sub.add_parser(
-        "saveSignatures",
-        help="persist a corpus minhash signature table (+ parameter "
-        "sidecar) for corpus-size-independent incremental dedup",
-    )
-    sg.add_argument("--input", required=True)
-    sg.add_argument("--output", required=True)
-    sg.add_argument("--textField", default="text")
-    sg.add_argument("--idField", default="doc_id")
-    sg.add_argument("--numHashes", type=int, default=16)
-    sg.add_argument("--shingleN", type=int, default=3)
-    sg.add_argument("--hasher", choices=["portable", "xx"], default="portable")
-    sg.add_argument("--format", default=None, help="override input format sniffing")
 
-    pf = sub.add_parser(
-        "profile",
-        help="single-pass per-column profile (completeness/cardinality/range)",
-    )
-    pf.add_argument("--input", required=True)
-    pf.add_argument("--output", required=True)
-    pf.add_argument("--columns", type=_csv, default=None)
-    pf.add_argument("--exactDistinct", action="store_true")
-    pf.add_argument("--format", default=None, help="override input format sniffing")
-
-    rc_ = sub.add_parser(
-        "runChecks",
-        help="declarative data-quality gate from a JSON check-suite file; "
-        "exit 1 if any check fails",
-    )
-    rc_.add_argument("--input", required=True)
-    rc_.add_argument("--checks", required=True,
-                     help="JSON file: list of check dicts (see operators/checks.py)")
-    rc_.add_argument("--output", required=True)
-    rc_.add_argument("--format", default=None, help="override input format sniffing")
-
-    ws = sub.add_parser(
-        "writeShards",
-        help="write deterministic training shards + integrity manifest "
-        "(portable-hash assignment, shard=N layout, per-shard checksums)",
-    )
-    ws.add_argument("--input", required=True)
-    ws.add_argument("--output", required=True)
-    ws.add_argument("--numShards", type=int, required=True)
-    ws.add_argument("--keyFields", type=_csv, required=True)
-    ws.add_argument("--verify", action="store_true",
-                    help="re-read and verify against the manifest after writing")
-    ws.add_argument("--format", default=None, help="override input format sniffing")
-
-    cp = sub.add_parser(
-        "compact",
-        help="small-files compaction: rewrite a table into size-targeted, "
-        "optionally sort-clustered files (min/max pruning locality)",
-    )
-    cp.add_argument("--input", required=True)
-    cp.add_argument("--output", required=True)
-    cp.add_argument("--sortBy", type=_csv, default=None)
-    cp.add_argument("--zorderBy", type=_csv, default=None)
-    cp.add_argument("--targetFileMb", type=float, default=128)
-    cp.add_argument("--format", default=None, help="override input format sniffing")
-
-    dspan = sub.add_parser(
-        "dedupSpans",
-        help="exact duplicated-span removal (Lee et al. substring dedup): "
-        "drop every word span of >= L tokens repeated past a threshold, "
-        "reassemble docs from surviving tokens",
-    )
-    dspan.add_argument("--input", required=True)
-    dspan.add_argument("--output", required=True)
-    dspan.add_argument("--textField", default="text")
-    dspan.add_argument("--idField", default="doc_id")
-    dspan.add_argument("--spanTokens", type=int, default=50)
-    dspan.add_argument("--maxOccurrences", type=int, default=1)
-    dspan.add_argument("--scope", choices=["corpus", "document"], default="corpus")
-    dspan.add_argument("--format", default=None, help="override input format sniffing")
-
-    sdd = sub.add_parser(
-        "semanticDedup",
-        help="SemDeDup: cluster embeddings, drop within-cell near-dups "
-        "(cosine >= tau), keeping the duplicate farthest from its centroid",
-    )
-    sdd.add_argument("--input", required=True)
-    sdd.add_argument("--output", required=True)
-    sdd.add_argument("--tau", type=float, required=True)
-    sdd.add_argument("--idField", default="vec_id")
-    sdd.add_argument("--vecField", default="embedding")
-    sdd.add_argument("--nCentroids", type=int, default=8)
-    sdd.add_argument("--trainIters", type=int, default=0)
-    sdd.add_argument("--seed", type=int, default=13)
-    sdd.add_argument(
-        "--keptOnly", action="store_true",
-        help="write only surviving rows instead of the full kept-flag report",
-    )
-    sdd.add_argument("--format", default=None, help="override input format sniffing")
-
-    nbc = sub.add_parser(
-        "nbClassify",
-        help="train a multi-class NB text classifier over hashed word "
-        "n-grams from a labeled table, then classify an input table",
-    )
-    nbc.add_argument("--train", required=True, help="labeled training table")
-    nbc.add_argument("--labelField", required=True)
-    nbc.add_argument("--input", required=True, help="table to classify")
-    nbc.add_argument("--output", required=True)
-    nbc.add_argument("--textField", default="text")
-    nbc.add_argument("--idField", default="doc_id")
-    nbc.add_argument("--n", type=int, default=1, help="word n-gram order")
-    nbc.add_argument("--nBuckets", type=int, default=10000)
-    nbc.add_argument("--smoothing", type=float, default=0.5)
-    nbc.add_argument("--seed", type=int, default=0)
-    nbc.add_argument("--format", default=None, help="override input format sniffing")
-
-    qcl = sub.add_parser(
-        "qualityClassify",
-        help="train an NBSVM-style quality classifier (positive corpus vs "
-        "negative/raw pool) over hashed n-grams, score every input doc "
-        "with mean log-odds + sigmoid",
-    )
-    qcl.add_argument("--posInput", required=True, help="trusted/positive corpus")
-    qcl.add_argument("--negInput", required=True, help="negative / raw pool")
-    qcl.add_argument("--input", required=True, help="docs to score")
-    qcl.add_argument("--output", required=True)
-    qcl.add_argument("--textField", default="text")
-    qcl.add_argument("--idField", default="doc_id")
-    qcl.add_argument("--n", type=int, default=2, help="word n-gram order")
-    qcl.add_argument("--nBuckets", type=int, default=10000)
-    qcl.add_argument("--bias", type=float, default=0.0)
-    qcl.add_argument("--seed", type=int, default=0)
-    qcl.add_argument("--format", default=None, help="override input format sniffing")
-
-    idd = sub.add_parser(
-        "imageDedup",
-        help="perceptual image near-dup pairs: dHash over the real "
-        "decoders + Manku Hamming-blocked self-join",
-    )
-    idd.add_argument("--input", required=True, help="media table (media_id, content)")
-    idd.add_argument("--output", required=True)
-    idd.add_argument("--maxHamming", type=int, default=6)
-    idd.add_argument("--gridRows", type=int, default=10)
-    idd.add_argument("--gridCols", type=int, default=6)
-    idd.add_argument("--format", default=None, help="override input format sniffing")
-
-    ch = sub.add_parser(
-        "chunkDocs",
-        help="split documents into fixed-token-count chunks with overlap "
-        "(context-window construction; trailing partial kept)",
-    )
-    ch.add_argument("--input", required=True)
-    ch.add_argument("--output", required=True)
-    ch.add_argument("--textField", default="text")
-    ch.add_argument("--idField", default="doc_id")
-    ch.add_argument("--chunkSize", type=int, default=256)
-    ch.add_argument("--overlap", type=int, default=32)
-    ch.add_argument("--format", default=None, help="override input format sniffing")
-
-    vc = sub.add_parser(
-        "vocabCoverage",
-        help="per-document OOV rate against a frozen vocab table "
-        "(vocab side broadcast; column named by --tokenField)",
-    )
-    vc.add_argument("--input", required=True)
-    vc.add_argument("--vocab", required=True, help="vocab table path")
-    vc.add_argument("--output", required=True)
-    vc.add_argument("--textField", default="text")
-    vc.add_argument("--idField", default="doc_id")
-    vc.add_argument("--tokenField", default="token")
-    vc.add_argument("--format", default=None, help="override input format sniffing")
-
-    ka = sub.add_parser(
-        "kAnonymity",
-        help="k-anonymity audit over quasi-identifier columns: "
-        "per-class sizes + at-risk flags, or the one-row summary",
-    )
-    ka.add_argument("--input", required=True)
-    ka.add_argument("--output", required=True)
-    ka.add_argument("--quasiFields", type=_csv, required=True)
-    ka.add_argument("--k", type=int, default=10)
-    ka.add_argument(
-        "--summary", action="store_true",
-        help="write the one-row verdict instead of per-class rows",
-    )
-    ka.add_argument("--format", default=None, help="override input format sniffing")
-
-    bm = sub.add_parser(
-        "bm25Search",
-        help="BM25 top-k lexical retrieval (fixed-point scores); "
-        "optionally against / into a persisted parquet index",
-    )
-    bm.add_argument("--corpus", help="document table (or use --index)")
-    bm.add_argument("--queries", required=True, help="(query_id, qtext) table")
-    bm.add_argument("--output", required=True)
-    bm.add_argument("--index", help="persisted index dir (see --saveIndex)")
-    bm.add_argument("--saveIndex", help="build + persist the index here first")
-    bm.add_argument("--k", type=int, default=10)
-    bm.add_argument("--k1", type=float, default=1.2)
-    bm.add_argument("--b", type=float, default=0.75)
-    bm.add_argument("--textField", default="text")
-    bm.add_argument("--idField", default="doc_id")
-    bm.add_argument("--maxDf", type=int, default=None)
-    bm.add_argument("--format", default=None, help="override input format sniffing")
-
-    rf = sub.add_parser(
-        "rrfFuse",
-        help="reciprocal-rank fusion of N per-query rankings "
-        "(hybrid lexical + vector retrieval)",
-    )
-    rf.add_argument(
-        "--inputs", type=_csv, required=True,
-        help="comma-separated ranking tables (query_id, doc_id, rank)",
-    )
-    rf.add_argument("--output", required=True)
-    rf.add_argument("--kRrf", type=int, default=60)
-    rf.add_argument("--topk", type=int, default=None)
-    rf.add_argument("--format", default=None, help="override input format sniffing")
-
-    c4 = sub.add_parser(
-        "c4Filter",
-        help="C4 page/line cleaning (terminal-punct line filter, "
-        "lorem-ipsum/brace/badword page flags)",
-    )
-    c4.add_argument("--input", required=True)
-    c4.add_argument("--output", required=True)
-    c4.add_argument("--textField", default="text")
-    c4.add_argument("--idField", default="doc_id")
-    c4.add_argument("--minWordsPerLine", type=int, default=5)
-    c4.add_argument("--minKeptLines", type=int, default=3)
-    c4.add_argument("--badwords", type=_csv, default=[])
-    c4.add_argument(
-        "--keepOnly", action="store_true",
-        help="write only pages passing every rule",
-    )
-    c4.add_argument("--format", default=None, help="override input format sniffing")
-
-    nt = sub.add_parser(
-        "normalizeText",
-        help="unicode normalization (NFC/NFKC), control-char strip, "
-        "whitespace squash — the pre-dedup canonicalization pass",
-    )
-    nt.add_argument("--input", required=True)
-    nt.add_argument("--output", required=True)
-    nt.add_argument("--textField", default="text")
-    nt.add_argument(
-        "--form", default="NFC", choices=["NFC", "NFD", "NFKC", "NFKD", "none"]
-    )
-    nt.add_argument("--keepControls", action="store_true")
-    nt.add_argument("--keepWhitespace", action="store_true")
-    nt.add_argument("--lowercase", action="store_true")
-    nt.add_argument("--format", default=None, help="override input format sniffing")
-
-    pr = sub.add_parser(
-        "pageRank",
-        help="fixed-point PageRank over an edge list "
-        "(link-graph quality prior; bit-reproducible)",
-    )
-    pr.add_argument("--input", required=True, help="edge table")
-    pr.add_argument("--output", required=True)
-    pr.add_argument("--srcField", default="src")
-    pr.add_argument("--dstField", default="dst")
-    pr.add_argument("--iterations", type=int, default=10)
-    pr.add_argument("--dampingNum", type=int, default=85)
-    pr.add_argument("--dampingDen", type=int, default=100)
-    pr.add_argument("--format", default=None, help="override input format sniffing")
-
-    un = sub.add_parser(
-        "urlNormalize",
-        help="canonicalize a URL column (scheme/host case, default "
-        "ports, tracking params, fragments) + host and eTLD+1 domain",
-    )
-    un.add_argument("--input", required=True)
-    un.add_argument("--output", required=True)
-    un.add_argument("--urlField", default="url")
-    un.add_argument("--format", default=None, help="override input format sniffing")
-
-    mi = sub.add_parser(
-        "mutualInfo",
-        help="pairwise mutual information / entropies / normalized "
-        "leakage score between column pairs",
-    )
-    mi.add_argument("--input", required=True)
-    mi.add_argument(
-        "--pairs", type=_csv, required=True,
-        help="colon-separated column pairs, comma-delimited: a:b,c:d",
-    )
-    mi.add_argument("--output", required=True)
-    mi.add_argument("--format", default=None, help="override input format sniffing")
-
-    mo = sub.add_parser(
-        "madOutliers",
-        help="robust per-group outlier flags via the MAD modified "
-        "z-score (Iglewicz-Hoaglin)",
-    )
-    mo.add_argument("--input", required=True)
-    mo.add_argument("--output", required=True)
-    mo.add_argument("--valueField", required=True)
-    mo.add_argument("--groupBy", type=_csv, default=[])
-    mo.add_argument("--cutoff", type=float, default=3.5)
-    mo.add_argument(
-        "--exact", action="store_true",
-        help="exact percentiles (default: mergeable approx sketches)",
-    )
-    mo.add_argument("--format", default=None, help="override input format sniffing")
-
-    sj = sub.add_parser(
-        "sketchJoinSize",
-        help="estimate equi-join output cardinality from two count-min "
-        "sketch tables (no fact rescan)",
-    )
-    sj.add_argument("--sketchA", required=True)
-    sj.add_argument("--sketchB", required=True)
-    sj.add_argument("--output", required=True)
-
-    dr = sub.add_parser(
-        "driftReport",
-        help="PSI drift between two table snapshots "
-        "(categorical top-k pooled bins, numeric equi-width bins)",
-    )
-    dr.add_argument("--lhs", required=True)
-    dr.add_argument("--rhs", required=True)
-    dr.add_argument("--output", required=True)
-    dr.add_argument("--categorical", type=_csv, default=[])
-    dr.add_argument("--numeric", type=_csv, default=[])
-    dr.add_argument("--buckets", type=int, default=10)
-    dr.add_argument("--topK", type=int, default=20)
-    dr.add_argument("--format", default=None, help="override input format sniffing")
-
-    iu = sub.add_parser(
-        "updateIvfIndex",
-        help="append vectors to a persisted IVF ANN index against its "
-        "frozen centroids (no retrain)",
-    )
-    iu.add_argument("--index", required=True)
-    iu.add_argument("--input", required=True, help="new vector table")
-    iu.add_argument("--format", default=None, help="override input format sniffing")
-
-    ny = sub.add_parser(
-        "neymanSampler",
-        help="exact-count stratified sample under Neyman (variance-"
-        "optimal) allocation: n_h proportional to N_h*stddev(value)",
-    )
-    ny.add_argument("--input", required=True)
-    ny.add_argument("--output", required=True)
-    ny.add_argument("--totalN", type=int, required=True)
-    ny.add_argument("--valueField", required=True)
-    ny.add_argument("--strata", type=_csv, required=True)
-    ny.add_argument("--fields", type=_csv, required=True, help="dice fields")
-    ny.add_argument("--seed", type=int, default=42)
-    ny.add_argument("--format", default=None, help="override input format sniffing")
-
-    zw = sub.add_parser(
-        "zorderWrite",
-        help="rewrite a table clustered by the z-order (Morton) key of "
-        "the given columns so parquet min/max stats prune scans on every "
-        "z-column",
-    )
-    zw.add_argument("--input", required=True)
-    zw.add_argument("--output", required=True)
-    zw.add_argument("--by", type=_csv, required=True, help="z-order columns")
-    zw.add_argument("--bits", type=int, default=16)
-    zw.add_argument("--numPartitions", type=int, default=None)
-    zw.add_argument("--curve", choices=["zorder", "hilbert"],
-                    default="zorder",
-                    help="space-filling curve (hilbert: tighter boxes, "
-                    "same write shape)")
-    zw.add_argument("--format", default=None, help="override input format sniffing")
-
-    rv = sub.add_parser(
-        "rendezvousShard",
-        help="assign rows to named shards by rendezvous (HRW) hashing — "
-        "adding/removing a shard moves only that shard's keys",
-    )
-    rv.add_argument("--input", required=True)
-    rv.add_argument("--output", required=True)
-    rv.add_argument("--keyField", required=True)
-    rv.add_argument("--shards", type=_csv, required=True)
-    rv.add_argument("--seed", type=int, default=0)
-    rv.add_argument("--format", default=None, help="override input format sniffing")
-
-    rl = sub.add_parser(
-        "recordLinkage",
-        help="Fellegi-Sunter probabilistic record linkage over blocked "
-        "candidate pairs (compare spec: col:m:u, repeatable)",
-    )
-    rl.add_argument("--lhs", required=True)
-    rl.add_argument("--rhs", required=True)
-    rl.add_argument("--output", required=True)
-    rl.add_argument("--lhsId", required=True)
-    rl.add_argument("--rhsId", required=True)
-    rl.add_argument("--blockField", required=True)
-    rl.add_argument(
-        "--compare", action="append", required=True,
-        help="field:m:u (e.g. phone:0.95:0.001); repeat per field",
-    )
-    rl.add_argument("--threshold", type=float, default=0.0)
-    rl.add_argument("--maxBlockSize", type=int, default=1000)
-    rl.add_argument("--format", default=None, help="override input format sniffing")
-
-    lk = sub.add_parser(
-        "linkage",
-        help="probabilistic record linkage (Fellegi-Sunter): train m/u "
-        "by EM over blocked candidate pairs, score links with trained "
-        "or supplied weights",
-    )
-    lk.add_argument("--mode", choices=["train", "score", "auto"], required=True)
-    lk.add_argument("--leftInput", required=True)
-    lk.add_argument("--rightInput", required=True)
-    lk.add_argument("--output", required=True, help="links table, or model JSON for train")
-    lk.add_argument("--leftId", required=True)
-    lk.add_argument("--rightId", required=True)
-    lk.add_argument(
-        "--blockField", type=_csv, required=True,
-        help="one or more blocking keys (comma-separated, multi-pass)",
-    )
-    lk.add_argument(
-        "--compare", type=_csv, required=True,
-        help="train/auto: column pairs left:right; score: "
-        "left:right:m:u quadruples",
-    )
-    lk.add_argument("--model", help="score mode: model JSON from train")
-    lk.add_argument("--iters", type=int, default=5)
-    lk.add_argument("--threshold", type=float, default=0.0)
-    lk.add_argument("--maxBlockSize", type=int, default=1000)
-    lk.add_argument("--format", default=None, help="override input format sniffing")
-
-    za = sub.add_parser(
-        "zorderAudit",
-        help="row-group skip audit from parquet footer min/max stats: "
-        "how many groups a conjunctive range predicate scans vs prunes",
-    )
-    za.add_argument("--input", required=True, help="parquet file or directory")
-    za.add_argument(
-        "--box", type=_csv, required=True,
-        help="col:lo:hi triples (comma-separated) — the range predicate",
+@_command(
+    "wordpieceTrain",
+    "train a WordPiece tokenizer (BERT model: likelihood-scored "
+    "merges over ##-marked symbols, batched disjoint selection); "
+    "writes a JSON artifact (merges + inference vocab)",
+    _IN,
+    _arg("--output", required=True, help="tokenizer JSON path"),
+    _TEXT,
+    _arg("--nMerges", type=int, default=64),
+    _arg("--batch", type=int, default=16),
+    _arg("--pool", type=int, default=64),
+    _arg("--rounds", type=int, default=None),
+    _FMT,
+)
+def _wordpiece_train(spark, args):
+    from ratatool_spark.operators.wordpiece import (
+        save_wordpiece_tokenizer,
+        wordpiece_learn,
+        wordpiece_vocab,
     )
 
-    sc = sub.add_parser(
-        "scd2",
-        help="SCD Type-2 history: build versioned dimension rows from a "
-        "changelog, or merge a change batch into an existing history "
-        "(incremental == rebuild)",
-    )
-    sc.add_argument("--mode", choices=["history", "apply"], required=True)
-    sc.add_argument("--input", required=True, help="change stream table")
-    sc.add_argument("--history", help="apply mode: existing SCD2 table")
-    sc.add_argument("--output", required=True)
-    sc.add_argument("--key", type=_csv, required=True, help="business key column(s)")
-    sc.add_argument("--ts", required=True, help="change timestamp column")
-    sc.add_argument("--attrs", type=_csv, required=True, help="tracked attribute column(s)")
-    sc.add_argument("--changeId", default=None, help="tie-break column for equal timestamps")
-    sc.add_argument(
-        "--keepChangeId", action="store_true",
-        help="carry the change id into the output so later applies replay ties exactly",
-    )
-    sc.add_argument("--noCollapse", action="store_true", help="keep no-op versions")
-    sc.add_argument("--format", default=None, help="override input format sniffing")
+    df = _read(spark, args, "input")
+    merges = wordpiece_learn(df, text_col=args.textField, n_merges=args.nMerges,
+                             batch=args.batch, pool=args.pool, rounds=args.rounds)
+    vocab = wordpiece_vocab(df, merges, text_col=args.textField)
+    save_wordpiece_tokenizer(spark, args.output, merges, vocab=vocab)
 
-    cp = sub.add_parser(
-        "compactionPlan",
-        help="bin-pack a file/partition manifest into ~targetBytes "
-        "compaction bins (size-desc cumulative-sum assignment)",
-    )
-    cp.add_argument("--input", required=True, help="manifest table (one row per file)")
-    cp.add_argument("--output", required=True)
-    cp.add_argument("--sizeField", required=True)
-    cp.add_argument("--orderField", type=_csv, required=True, help="tie-break column(s)")
-    cp.add_argument("--targetBytes", type=int, required=True)
-    cp.add_argument("--format", default=None, help="override input format sniffing")
 
-    lg = sub.add_parser(
-        "logreg",
-        help="fixed-point logistic regression: bit-reproducible "
-        "full-batch gradient descent over integer count features "
-        "(train writes a weights JSON; score applies one)",
+@_command(
+    "wordpieceSegment",
+    "apply a trained WordPiece tokenizer to a corpus — "
+    "--mode replay (training-order merge replay) or match (BERT "
+    "greedy longest-match against the frozen vocab, [UNK] fallback)",
+    _IN, _OUT,
+    _arg("--tokenizer", required=True, help="JSON artifact from wordpieceTrain"),
+    _arg("--mode", choices=["replay", "match"], default="replay"),
+    _TEXT,
+    _arg("--unk", default="[UNK]"),
+    _FMT,
+)
+def _wordpiece_segment(spark, args):
+    from ratatool_spark.operators.wordpiece import (
+        load_wordpiece_tokenizer,
+        wordpiece_match_segment,
+        wordpiece_segment,
     )
-    lg.add_argument("--mode", choices=["train", "score"], required=True)
-    lg.add_argument("--input", required=True)
-    lg.add_argument("--features", type=_csv, required=True,
-                    help="integer feature column(s)")
-    lg.add_argument("--label", help="train mode: 0/1 label column")
-    lg.add_argument("--scales", type=_csv, default=None,
-                    help="per-feature scale constants (default 1.0 each)")
-    lg.add_argument("--lr", type=float, default=1.0)
-    lg.add_argument("--iters", type=int, default=4)
-    lg.add_argument("--model", required=True,
-                    help="weights JSON path (written by train, read by score)")
-    lg.add_argument("--output", help="score mode: scored table destination")
-    lg.add_argument("--format", default=None, help="override input format sniffing")
 
-    sn = sub.add_parser(
-        "snapshot",
-        help="snapshot-manifest table maintenance: atomic append/replace "
-        "commits, time-travel read, bin-packed compaction, expiry",
-    )
-    sn.add_argument(
-        "--mode",
-        choices=["append", "read", "compact", "cluster", "merge",
-                 "merge-mor", "fold", "delete", "delete-mor", "delete-rows",
-                 "drop-partition", "expire", "vacuum",
-                 "changes", "mirror", "rollback", "log",
-                 "stage", "read-branch", "publish", "discard",
-                 "create-branch", "append-branch", "read-branch-snapshot",
-                 "fast-forward", "delete-branch", "branches",
-                 "metadata",
-                 "add-constraint", "drop-constraint",
-                 "rename-column", "widen-column", "evolve-spec",
-                 "tag", "untag", "tags", "set-bloom", "count", "agg"],
-        required=True,
-    )
-    sn.add_argument("--table", required=True, help="snapshot table root")
-    sn.add_argument("--input", help="append/merge mode: data to commit")
-    sn.add_argument("--keys", type=_csv, default=None,
-                    help="merge/merge-mor mode: upsert key column(s)")
-    sn.add_argument("--fromId", type=int, default=None,
-                    help="changes mode: feed from this snapshot (exclusive)")
-    sn.add_argument("--source", default=None,
-                    help="mirror mode: source snapshot table to subscribe to")
-    sn.add_argument("--checkpoint", default=None,
-                    help="mirror mode: streaming checkpoint location")
-    sn.add_argument("--zorderBy", type=_csv, default=None,
-                    help="cluster mode: z-order column(s)")
-    sn.add_argument("--curve", choices=["zorder", "hilbert"],
-                    default="zorder",
-                    help="cluster mode: space-filling curve")
-    sn.add_argument(
-        "--where", type=_csv, default=None,
-        help="delete/read mode: col:lo:hi triples (conjunctive ranges)",
-    )
-    sn.add_argument("--output", help="read/log mode: where to write the result")
-    sn.add_argument(
-        "--snapshotId", type=int, default=None,
-        help="read mode: time-travel to this snapshot (default: current)",
-    )
-    sn.add_argument(
-        "--targetBytes", type=int, default=512 * 1024 * 1024,
-        help="compact mode: bin size (default 512 MiB)",
-    )
-    sn.add_argument(
-        "--keepLast", type=int, default=1,
-        help="expire mode: snapshots to retain (default 1)",
-    )
-    sn.add_argument(
-        "--dryRun", action="store_true",
-        help="expire/vacuum mode: list deletable files without deleting",
-    )
-    sn.add_argument(
-        "--partitionBy", type=_csv, default=None,
-        help="append mode, first commit only: partition spec items as "
-        "col:transform[:param] (identity/truncate/bucket/month)",
-    )
-    sn.add_argument(
-        "--predicate", default=None,
-        help="delete-rows mode: SQL predicate selecting rows to remove "
-        "(merge-on-read position delete)",
-    )
-    sn.add_argument(
-        "--partition", type=_csv, default=None,
-        help="drop-partition mode: name=value pairs (value 'null' "
-        "matches the NULL partition)",
-    )
-    sn.add_argument(
-        "--branch", default=None,
-        help="stage/read-branch/publish/discard mode (write-audit-"
-        "publish) and create-branch/append-branch/read-branch-snapshot/"
-        "fast-forward/delete-branch (named multi-commit branches): "
-        "branch name; with merge/merge-mor/delete/delete-mor/fold the "
-        "write lands on the BRANCH head instead of main",
-    )
-    sn.add_argument(
-        "--metadataKind", default=None,
-        choices=["files", "snapshots", "history", "partitions", "refs"],
-        help="metadata mode: which inspection table to emit",
-    )
-    sn.add_argument(
-        "--name", default=None,
-        help="add-constraint/drop-constraint mode: constraint name",
-    )
-    sn.add_argument(
-        "--expr", default=None,
-        help="add-constraint mode: CHECK expression (SQL; NULL passes)",
-    )
-    sn.add_argument(
-        "--olderThan", type=float, default=6 * 3600.0,
-        help="vacuum mode: only remove orphans older than this many "
-        "seconds (default 6h) — protects in-flight commits whose "
-        "manifest has not been published yet",
-    )
-    sn.add_argument(
-        "--column", default=None,
-        help="rename-column/widen-column mode: the column to evolve",
-    )
-    sn.add_argument(
-        "--to", default=None,
-        help="rename-column: the new name; widen-column: the wider type "
-        "(exact promotions only: tinyint→smallint→int→bigint, "
-        "float→double)",
-    )
-    sn.add_argument(
-        "--spec", type=_csv, default=None,
-        help="evolve-spec mode: new partition spec items as "
-        "col:transform[:param] — future writes route through it; "
-        "existing files keep their layout",
-    )
-    sn.add_argument(
-        "--tagName", default=None,
-        help="tag/untag mode: the tag name (tag also accepts "
-        "--snapshotId; default current); read mode: time-travel to the "
-        "tagged snapshot. Tagged snapshots never expire.",
-    )
-    sn.add_argument(
-        "--minmaxCols", type=_csv, default=None,
-        help="agg mode: columns to MIN/MAX alongside COUNT(*)",
-    )
-    sn.add_argument(
-        "--whereEq", type=_csv, default=None,
-        help="agg mode: col:value equality conjunction (identity "
-        "partition value, or the granule string on a time transform)",
-    )
-    sn.add_argument(
-        "--bloomCols", type=_csv, default=None,
-        help="set-bloom mode: columns to build per-file bloom filters "
-        "on (future writes; point lookups and scattered-key merges "
-        "then skip non-holding files)",
-    )
-    sn.add_argument(
-        "--bitsPerKey", type=int, default=10,
-        help="set-bloom mode: bloom bits per row (default 10, ~1%% "
-        "false positives)",
-    )
-    sn.add_argument("--format", default=None, help="override input format sniffing")
+    df = _read(spark, args, "input")
+    merges, vocab = load_wordpiece_tokenizer(spark, args.tokenizer)
+    if args.mode == "replay":
+        return wordpiece_segment(df, merges, text_col=args.textField)
+    if vocab is None:
+        raise SystemExit(
+            "--mode match needs an artifact with a vocab "
+            "(wordpieceTrain writes one)"
+        )
+    return wordpiece_match_segment(df, vocab, text_col=args.textField, unk=args.unk)
 
-    dc = sub.add_parser(
-        "decontaminate",
-        help="drop corpus docs that fuzzy-match a benchmark corpus "
-        "(cross-corpus MinHash-LSH flag + anti-join)",
+
+_command(
+    "tfidfDedup",
+    "sparse TF-IDF cosine near-dup pairs (inverted-index term "
+    "join; idf auto-drops corpus-wide boilerplate)",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--threshold", type=float, default=0.5),
+    _arg("--maxDocFreq", type=int, default=1000),
+    _FMT,
+    run=_op("operators.dedup:tfidf_cosine_pairs", text_col="textField",
+            id_col="idField", threshold="threshold", max_doc_freq="maxDocFreq"),
+)
+
+
+def _all_group(df, args):
+    """A build input, with the ``__all__`` column when no group is given."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn("__all__", F.lit("all")) if args.groupBy == ["__all__"] else df
+
+
+def _sketch(spark, args, path: str):
+    from ratatool_spark.sources.io import read_table
+
+    return read_table(spark, path, fmt=args.format or "parquet")
+
+
+def _sketches(spark, args) -> list:
+    if not args.inputs or len(args.inputs) < 2:
+        raise SystemExit("merge mode needs --inputs a,b[,...]")
+    return [_sketch(spark, args, p) for p in args.inputs]
+
+
+@_command(
+    "quantileSketch",
+    "mergeable deterministic bottom-k (KMV) quantile sketch "
+    "tables: build per-batch, merge losslessly, estimate any quantile",
+    _arg("--mode", choices=["build", "merge", "estimate"], required=True),
+    _arg("--input", help="input table (build/estimate)"),
+    _arg("--inputs", type=_csv, help="sketch tables to merge"),
+    _OUT,
+    _arg("--groupBy", type=_csv, default=["__all__"], help="group columns (build)"),
+    _arg("--valueField", default="value"),
+    _arg("--keyFields", type=_csv, default=None,
+         help="unique row key columns (build)"),
+    _arg("--k", type=int, default=1024),
+    _arg("--quantiles", type=_csv, default=["0.5", "0.9", "0.99"],
+         help="estimate mode"),
+    _FMT,
+)
+def _quantile_sketch(spark, args):
+    from ratatool_spark.operators.timeagg import (
+        build_quantile_sketches,
+        estimate_quantiles,
+        merge_quantile_sketches,
     )
-    dc.add_argument("--input", required=True)
-    dc.add_argument("--benchmark", required=True)
-    dc.add_argument("--output", required=True)
-    dc.add_argument("--textField", default="text")
-    dc.add_argument("--idField", default="doc_id")
-    dc.add_argument("--minEstJaccard", type=float, default=0.5)
-    dc.add_argument("--numHashes", type=int, default=16)
-    dc.add_argument("--bands", type=int, default=4)
-    dc.add_argument("--format", default=None, help="override input format sniffing")
+
+    if args.mode == "build":
+        if not args.input or not args.keyFields:
+            raise SystemExit("build mode needs --input and --keyFields")
+        df = _all_group(_read(spark, args, "input"), args)
+        return build_quantile_sketches(df, args.groupBy, args.valueField,
+                                       args.keyFields, k=args.k)
+    if args.mode == "merge":
+        return merge_quantile_sketches(*_sketches(spark, args))
+    if not args.input:
+        raise SystemExit("estimate mode needs --input (a sketch table)")
+    return estimate_quantiles(_sketch(spark, args, args.input),
+                              [float(q) for q in args.quantiles])
+
+
+_command(
+    "dsirSelect",
+    "DSIR importance resampling: weight docs by target-vs-raw "
+    "unigram log-ratio, select top-n by deterministic Gumbel-top-k",
+    _IN,
+    _arg("--targetFreqs", required=True,
+         help="build_token_freqs parquet of the target corpus"),
+    _arg("--rawFreqs", required=True,
+         help="build_token_freqs parquet of the raw pool"),
+    _OUT,
+    _arg("--n", type=int, required=True),
+    _TEXT, _ID,
+    _arg("--smoothing", type=float, default=0.5),
+    _arg("--seed", type=int, default=0),
+    _FMT,
+    run=_op("operators.corpus:dsir_select", "n",
+            inputs=("input", ("targetFreqs", "parquet"), ("rawFreqs", "parquet")),
+            text_col="textField", id_col="idField", smoothing="smoothing",
+            seed="seed"),
+)
+
+_command(
+    "fuzzyJoin",
+    "blocked fuzzy join (entity resolution): equality blocking "
+    "key + Levenshtein/token-Jaccard verify, optional best link per "
+    "left id",
+    _arg("--leftInput", required=True),
+    _arg("--rightInput", required=True),
+    _OUT,
+    _arg("--leftId", required=True),
+    _arg("--rightId", required=True),
+    _arg("--blockField", type=_csv, required=True,
+         help="one or more blocking keys (comma-separated: multi-pass "
+         "recall net, candidates unioned and deduped); must exist on "
+         "both sides"),
+    _arg("--compare", type=_csv, required=True,
+         help="column pairs left:right (e.g. name:name,addr:address)"),
+    _arg("--method", choices=["lev_ratio", "token_jaccard"], default="lev_ratio"),
+    _arg("--threshold", type=float, default=0.85),
+    _arg("--keepBest", action="store_true"),
+    _arg("--maxBlockSize", type=int, default=1000),
+    _FMT,
+    run=_op("operators.fuzzy:fuzzy_join", "leftId", "rightId", "blockField",
+            lambda a: _col_pairs(a.compare), inputs=("leftInput", "rightInput"),
+            method="method", threshold="threshold", keep_best="keepBest",
+            max_block_size="maxBlockSize"),
+)
+
+
+@_command(
+    "freqSketch",
+    "mergeable count-min frequency sketch tables: build "
+    "per-batch, merge (exact counter sum), estimate key counts",
+    _arg("--mode", choices=["build", "merge", "estimate"], required=True),
+    _arg("--input", help="input table (build/estimate)"),
+    _arg("--inputs", type=_csv, help="sketch tables to merge"),
+    _OUT,
+    _arg("--groupBy", type=_csv, default=["__all__"], help="group columns (build)"),
+    _arg("--keyField", default="key", help="counted key column"),
+    _arg("--depth", type=int, default=4),
+    _arg("--width", type=int, default=1024),
+    _arg("--seed", type=int, default=0),
+    _arg("--keys", type=_csv, default=None, help="probe keys (estimate mode)"),
+    _FMT,
+)
+def _freq_sketch(spark, args):
+    from ratatool_spark.operators.freq import (
+        build_freq_sketches,
+        estimate_freqs,
+        merge_freq_sketches,
+    )
+
+    if args.mode == "build":
+        if not args.input:
+            raise SystemExit("build mode needs --input")
+        df = _all_group(_read(spark, args, "input"), args)
+        return build_freq_sketches(df, args.groupBy, args.keyField, depth=args.depth,
+                                   width=args.width, seed=args.seed)
+    if args.mode == "merge":
+        return merge_freq_sketches(*_sketches(spark, args))
+    if not args.input or not args.keys:
+        raise SystemExit("estimate mode needs --input (a sketch table) and --keys")
+    keys_df = spark.createDataFrame(
+        [(k,) for k in args.keys], f"{args.keyField} string"
+    )
+    return estimate_freqs(_sketch(spark, args, args.input), keys_df, args.keyField,
+                          seed=args.seed)
+
+
+_command(
+    "heavyHitters",
+    "exact top-k most frequent keys per group (two-stage "
+    "aggregate + window group limit; deterministic tie-break)",
+    _IN, _OUT,
+    _arg("--groupBy", type=_csv, default=[], help="group columns"),
+    _arg("--keyField", required=True),
+    _arg("--k", type=int, default=10),
+    _FMT,
+    run=_op("operators.freq:heavy_hitters", "groupBy", "keyField", k="k"),
+)
+
+_command(
+    "skewReport",
+    "per-column hot-value report (share + skew-vs-uniform "
+    "ratio): the pre-salting join-key diagnostic, one scan",
+    _IN, _OUT,
+    _arg("--columns", type=_csv, required=True),
+    _arg("--topK", type=int, default=5),
+    _FMT,
+    run=_op("operators.freq:skew_report", "columns", top_k="topK"),
+)
+
+_command(
+    "capPerGroup",
+    "deterministic 'at most N rows per group' cap (C4 per-domain "
+    "rule): keeps each group's smallest-hash rows",
+    _IN, _OUT,
+    _arg("--groupField", default="source"),
+    _arg("--maxRows", type=int, default=100),
+    _arg("--diceFields", type=_csv, default=["doc_id"]),
+    _arg("--seed", type=int, default=0),
+    _FMT,
+    run=_op("operators.corpus:cap_per_group", group_col="groupField",
+            max_rows="maxRows", dice_cols="diceFields", seed="seed"),
+)
+
+_command(
+    "profilePii",
+    "column-level PII scan: per-column email/IP/phone/SSN/card "
+    "match counts (+ Luhn-verified cards), one pass, optional "
+    "deterministic sample",
+    _IN, _OUT,
+    _arg("--columns", type=_csv, default=None, help="default: all string columns"),
+    _arg("--sampleFraction", type=float, default=None),
+    _arg("--seed", type=int, default=0),
+    _FMT,
+    run=_op("operators.profile:profile_pii", columns="columns",
+            sample_fraction="sampleFraction", seed="seed"),
+)
+
+_command(
+    "mixtureSample",
+    "resample toward a target per-source mixture "
+    "(deterministic portable dice; broadcast rates, no driver collect)",
+    _IN, _OUT,
+    _arg("--shares", required=True,
+         help="comma list source=share, e.g. web=0.6,books=0.3,code=0.1"),
+    _arg("--sourceField", default="source"),
+    _arg("--diceFields", type=_csv, default=["doc_id"]),
+    _arg("--seed", type=int, default=0),
+    _FMT,
+    run=_op("operators.corpus:mixture_sample",
+            lambda a: {k: float(v) for k, _, v in
+                       (kv.partition("=") for kv in _csv(a.shares))},
+            source_col="sourceField", dice_cols="diceFields", seed="seed"),
+)
+
+_command(
+    "contamination",
+    "n-gram-overlap train/test leakage check against a benchmark set",
+    _IN,
+    _arg("--benchmark", required=True),
+    _OUT, _TEXT, _ID,
+    _arg("--shingleN", type=int, default=3),
+    _FMT,
+    run=_op("operators.corpus:contamination", inputs=("input", "benchmark"),
+            text_col="textField", id_col="idField", n="shingleN"),
+)
+
+
+@_command(
+    "dedupAgainst",
+    "incremental near-dedup: drop new-batch docs that "
+    "near-duplicate an existing corpus (banded LSH + verified Jaccard)",
+    _arg("--input", required=True, help="the new batch"),
+    _arg("--corpus", required=True, help="the existing corpus"),
+    _arg("--output", required=True, help="kept (non-duplicate) rows"),
+    _TEXT, _ID,
+    _arg("--threshold", type=float, default=0.7),
+    _arg("--numHashes", type=int, default=16),
+    _arg("--bands", type=int, default=8),
+    _arg("--shingleN", type=int, default=3),
+    _arg("--hasher", choices=["portable", "xx"], default="portable"),
+    _arg("--corpusSigs", default=None,
+         help="path of a saveSignatures table: skips the per-batch corpus "
+         "shingle/signature pass (parameters validated from the sidecar)"),
+    _FMT,
+)
+def _dedup_against(spark, args):
+    from ratatool_spark.operators.dedup import filter_against, load_signatures
+
+    new = _read(spark, args, "input")
+    corpus = _read(spark, args, "corpus")
+    corpus_sigs = None
+    if args.corpusSigs:
+        corpus_sigs, meta = load_signatures(spark, args.corpusSigs)
+        for cli_v, meta_k in (
+            (args.numHashes, "num_hashes"),
+            (args.shingleN, "shingle_n"),
+            (args.hasher, "hasher"),
+        ):
+            if meta.get(meta_k) != cli_v:
+                raise SystemExit(
+                    f"--corpusSigs was saved with {meta_k}="
+                    f"{meta.get(meta_k)!r} but the command asks for "
+                    f"{cli_v!r}; align the flags or resave"
+                )
+    return filter_against(
+        new, corpus, threshold=args.threshold, text_col=args.textField,
+        id_col=args.idField, num_hashes=args.numHashes, bands=args.bands,
+        shingle_n=args.shingleN, hasher=args.hasher, corpus_sigs=corpus_sigs,
+    )
+
+
+_command(
+    "exactDedupAgainst",
+    "exact incremental dedup: keep new-batch rows whose key "
+    "columns have no exact match in the corpus (Bloom-routed — the "
+    "corpus is scanned, never shuffled)",
+    _arg("--input", required=True, help="the new batch"),
+    _arg("--corpus", required=True, help="the existing corpus"),
+    _OUT,
+    _arg("--keyFields", type=_csv, required=True),
+    _arg("--fpp", type=float, default=0.01, help="Bloom false-positive rate"),
+    _arg("--noBloom", action="store_true",
+         help="plain anti-join (new batch comparable to corpus size)"),
+    _FMT,
+    run=_op("operators.dedup:exact_filter_against", inputs=("input", "corpus"),
+            cols="keyFields", fpp="fpp", use_bloom=lambda a: not a.noBloom),
+)
+
+_command(
+    "saveSignatures",
+    "persist a corpus minhash signature table (+ parameter "
+    "sidecar) for corpus-size-independent incremental dedup",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--numHashes", type=int, default=16),
+    _arg("--shingleN", type=int, default=3),
+    _arg("--hasher", choices=["portable", "xx"], default="portable"),
+    _FMT,
+    run=_op("operators.dedup:save_signatures", sink=True, text_col="textField",
+            id_col="idField", num_hashes="numHashes", shingle_n="shingleN",
+            hasher="hasher"),
+)
+
+_command(
+    "profile",
+    "single-pass per-column profile (completeness/cardinality/range)",
+    _IN, _OUT,
+    _arg("--columns", type=_csv, default=None),
+    _arg("--exactDistinct", action="store_true"),
+    _FMT,
+    run=_op("operators.profile:profile_table", cols="columns",
+            exact_distinct="exactDistinct"),
+)
+
+
+@_command(
+    "runChecks",
+    "declarative data-quality gate from a JSON check-suite file; "
+    "exit 1 if any check fails",
+    _IN,
+    _arg("--checks", required=True,
+         help="JSON file: list of check dicts (see operators/checks.py)"),
+    _OUT, _FMT,
+)
+def _run_checks(spark, args):
+    from ratatool_spark.operators.checks import run_checks
+    from ratatool_spark.sources.io import read_table
+
+    with open(args.checks) as f:
+        suite = json.load(f)
+    # foreign_key refs come as paths in the JSON form
+    for c in suite:
+        if c.get("kind") == "foreign_key" and isinstance(c.get("ref"), str):
+            c["ref"] = read_table(spark, c["ref"])
+    report = run_checks(_read(spark, args, "input"), suite)
+    # the report is one row per check — collect it ONCE, then both
+    # write and derive the exit status from the collected rows
+    # (write_table(report) + a second .count() would re-execute
+    # the whole suite: full scan, unique groupBy, FK anti-join)
+    rows = report.collect()
+    _write(spark.createDataFrame(rows, report.schema), args.output)
+    return int(any(not r["passed"] for r in rows))
+
+
+_SHARDS = _op("sources.shards:write_training_shards", "numShards", "keyFields",
+              sink=True)
+
+
+@_command(
+    "writeShards",
+    "write deterministic training shards + integrity manifest "
+    "(portable-hash assignment, shard=N layout, per-shard checksums)",
+    _IN, _OUT,
+    _arg("--numShards", type=int, required=True),
+    _arg("--keyFields", type=_csv, required=True),
+    _arg("--verify", action="store_true",
+         help="re-read and verify against the manifest after writing"),
+    _FMT,
+)
+def _write_shards(spark, args):
+    from ratatool_spark.sources.shards import verify_shards
+
+    _SHARDS(spark, args)
+    return int(args.verify and not verify_shards(spark, args.output)["ok"])
+
+
+@_command(
+    "compact",
+    "small-files compaction: rewrite a table into size-targeted, "
+    "optionally sort-clustered files (min/max pruning locality)",
+    _IN, _OUT,
+    _arg("--sortBy", type=_csv, default=None),
+    _arg("--zorderBy", type=_csv, default=None),
+    _arg("--targetFileMb", type=float, default=128),
+    _FMT,
+)
+def _compact(spark, args):
+    from ratatool_spark.sources.io import compact_files
+
+    compact_files(spark, args.input, args.output, sort_cols=args.sortBy,
+                  zorder_cols=args.zorderBy, target_file_mb=args.targetFileMb,
+                  fmt=args.format, mode="overwrite")
+
+
+_command(
+    "dedupSpans",
+    "exact duplicated-span removal (Lee et al. substring dedup): "
+    "drop every word span of >= L tokens repeated past a threshold, "
+    "reassemble docs from surviving tokens",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--spanTokens", type=int, default=50),
+    _arg("--maxOccurrences", type=int, default=1),
+    _arg("--scope", choices=["corpus", "document"], default="corpus"),
+    _FMT,
+    run=_op("operators.corpus:remove_duplicate_spans", text_col="textField",
+            id_col="idField", span_tokens="spanTokens",
+            max_occurrences="maxOccurrences", scope="scope"),
+)
+
+
+@_command(
+    "semanticDedup",
+    "SemDeDup: cluster embeddings, drop within-cell near-dups "
+    "(cosine >= tau), keeping the duplicate farthest from its centroid",
+    _IN, _OUT,
+    _arg("--tau", type=float, required=True),
+    _arg("--idField", default="vec_id"),
+    _arg("--vecField", default="embedding"),
+    _arg("--nCentroids", type=int, default=8),
+    _arg("--trainIters", type=int, default=0),
+    _arg("--seed", type=int, default=13),
+    _arg("--keptOnly", action="store_true",
+         help="write only surviving rows instead of the full kept-flag report"),
+    _FMT,
+)
+def _semantic_dedup(spark, args):
+    from pyspark.sql import functions as F
+
+    from ratatool_spark.operators.dedup import semantic_dedup
+
+    df = _read(spark, args, "input")
+    rep = semantic_dedup(df, tau=args.tau, n_centroids=args.nCentroids,
+                         id_col=args.idField, vec_col=args.vecField,
+                         train_iters=args.trainIters, seed=args.seed)
+    if not args.keptOnly:
+        return rep
+    kept = rep.where(F.col("kept")).select(args.idField)
+    return df.join(kept, args.idField, "left_semi")
+
+
+@_command(
+    "nbClassify",
+    "train a multi-class NB text classifier over hashed word "
+    "n-grams from a labeled table, then classify an input table",
+    _arg("--train", required=True, help="labeled training table"),
+    _arg("--labelField", required=True),
+    _arg("--input", required=True, help="table to classify"),
+    _OUT, _TEXT, _ID,
+    _arg("--n", type=int, default=1, help="word n-gram order"),
+    _arg("--nBuckets", type=int, default=10000),
+    _arg("--smoothing", type=float, default=0.5),
+    _arg("--seed", type=int, default=0),
+    _FMT,
+)
+def _nb_classify(spark, args):
+    from ratatool_spark.operators.corpus import nb_classify, train_nb_class_weights
+
+    w, pri = train_nb_class_weights(
+        _read(spark, args, "train"), args.labelField, text_col=args.textField,
+        n=args.n, n_buckets=args.nBuckets, smoothing=args.smoothing, seed=args.seed,
+    )
+    return nb_classify(_read(spark, args, "input"), w, pri, args.nBuckets,
+                       text_col=args.textField, id_col=args.idField, n=args.n,
+                       seed=args.seed)
+
+
+@_command(
+    "qualityClassify",
+    "train an NBSVM-style quality classifier (positive corpus vs "
+    "negative/raw pool) over hashed n-grams, score every input doc "
+    "with mean log-odds + sigmoid",
+    _arg("--posInput", required=True, help="trusted/positive corpus"),
+    _arg("--negInput", required=True, help="negative / raw pool"),
+    _arg("--input", required=True, help="docs to score"),
+    _OUT, _TEXT, _ID,
+    _arg("--n", type=int, default=2, help="word n-gram order"),
+    _arg("--nBuckets", type=int, default=10000),
+    _arg("--bias", type=float, default=0.0),
+    _arg("--seed", type=int, default=0),
+    _FMT,
+)
+def _quality_classify(spark, args):
+    from ratatool_spark.operators.corpus import (
+        build_hashed_ngram_freqs,
+        quality_classifier_score,
+        train_quality_weights,
+    )
+
+    def freqs(dest):
+        return build_hashed_ngram_freqs(_read(spark, args, dest),
+                                        text_col=args.textField, n=args.n,
+                                        n_buckets=args.nBuckets, seed=args.seed)
+
+    w = train_quality_weights(freqs("posInput"), freqs("negInput"),
+                              n_buckets=args.nBuckets)
+    return quality_classifier_score(
+        _read(spark, args, "input"), w, n_buckets=args.nBuckets,
+        text_col=args.textField, id_col=args.idField, n=args.n, bias=args.bias,
+        seed=args.seed,
+    )
+
+
+_command(
+    "imageDedup",
+    "perceptual image near-dup pairs: dHash over the real "
+    "decoders + Manku Hamming-blocked self-join",
+    _arg("--input", required=True, help="media table (media_id, content)"),
+    _OUT,
+    _arg("--maxHamming", type=int, default=6),
+    _arg("--gridRows", type=int, default=10),
+    _arg("--gridCols", type=int, default=6),
+    _FMT,
+    run=_op("operators.multimodal:image_near_dup_pairs", max_hamming="maxHamming",
+            rows="gridRows", cols="gridCols"),
+)
+
+_command(
+    "chunkDocs",
+    "split documents into fixed-token-count chunks with overlap "
+    "(context-window construction; trailing partial kept)",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--chunkSize", type=int, default=256),
+    _arg("--overlap", type=int, default=32),
+    _FMT,
+    run=_op("operators.corpus:chunk_documents", text_col="textField",
+            id_col="idField", chunk_size="chunkSize", overlap="overlap"),
+)
+
+_command(
+    "vocabCoverage",
+    "per-document OOV rate against a frozen vocab table "
+    "(vocab side broadcast; column named by --tokenField)",
+    _IN,
+    _arg("--vocab", required=True, help="vocab table path"),
+    _OUT, _TEXT, _ID,
+    _arg("--tokenField", default="token"),
+    _FMT,
+    run=_op("operators.corpus:vocab_coverage", inputs=("input", "vocab"),
+            text_col="textField", id_col="idField", token_col="tokenField"),
+)
+
+
+@_command(
+    "kAnonymity",
+    "k-anonymity audit over quasi-identifier columns: "
+    "per-class sizes + at-risk flags, or the one-row summary",
+    _IN, _OUT,
+    _arg("--quasiFields", type=_csv, required=True),
+    _arg("--k", type=int, default=10),
+    _arg("--summary", action="store_true",
+         help="write the one-row verdict instead of per-class rows"),
+    _FMT,
+)
+def _k_anonymity(spark, args):
+    from ratatool_spark.operators.profile import k_anonymity, k_anonymity_summary
+
+    fn = k_anonymity_summary if args.summary else k_anonymity
+    return fn(_read(spark, args, "input"), args.quasiFields, k=args.k)
+
+
+@_command(
+    "bm25Search",
+    "BM25 top-k lexical retrieval (fixed-point scores); "
+    "optionally against / into a persisted parquet index",
+    _arg("--corpus", help="document table (or use --index)"),
+    _arg("--queries", required=True, help="(query_id, qtext) table"),
+    _OUT,
+    _arg("--index", help="persisted index dir (see --saveIndex)"),
+    _arg("--saveIndex", help="build + persist the index here first"),
+    _arg("--k", type=int, default=10),
+    _arg("--k1", type=float, default=1.2),
+    _arg("--b", type=float, default=0.75),
+    _TEXT, _ID,
+    _arg("--maxDf", type=int, default=None),
+    _FMT,
+)
+def _bm25_search(spark, args):
+    from ratatool_spark.operators.retrieval import (
+        bm25_topk,
+        bm25_topk_index,
+        save_bm25_index,
+    )
+
+    q = _read(spark, args, "queries")
+    scoring = dict(k=args.k, k1=args.k1, b=args.b, max_df=args.maxDf)
+    if args.index and not args.corpus:
+        return bm25_topk_index(spark, args.index, q, **scoring)
+    if not args.corpus:
+        raise SystemExit("bm25Search needs --corpus or --index")
+    docs = _read(spark, args, "corpus")
+    cols = dict(id_col=args.idField, text_col=args.textField)
+    if not args.saveIndex:
+        return bm25_topk(docs, q, **scoring, **cols)
+    save_bm25_index(docs, args.saveIndex, **cols)
+    return bm25_topk_index(spark, args.saveIndex, q, **scoring)
+
+
+@_command(
+    "rrfFuse",
+    "reciprocal-rank fusion of N per-query rankings "
+    "(hybrid lexical + vector retrieval)",
+    _arg("--inputs", type=_csv, required=True,
+         help="comma-separated ranking tables (query_id, doc_id, rank)"),
+    _OUT,
+    _arg("--kRrf", type=int, default=60),
+    _arg("--topk", type=int, default=None),
+    _FMT,
+)
+def _rrf_fuse(spark, args):
+    from ratatool_spark.operators.retrieval import rrf_fuse
+    from ratatool_spark.sources.io import read_table
+
+    rankings = [read_table(spark, p, fmt=args.format) for p in args.inputs]
+    return rrf_fuse(rankings, k_rrf=args.kRrf, topk=args.topk)
+
+
+@_command(
+    "c4Filter",
+    "C4 page/line cleaning (terminal-punct line filter, "
+    "lorem-ipsum/brace/badword page flags)",
+    _IN, _OUT, _TEXT, _ID,
+    _arg("--minWordsPerLine", type=int, default=5),
+    _arg("--minKeptLines", type=int, default=3),
+    _arg("--badwords", type=_csv, default=[]),
+    _arg("--keepOnly", action="store_true",
+         help="write only pages passing every rule"),
+    _FMT,
+)
+def _c4_filter(spark, args):
+    from ratatool_spark.operators.corpus import c4_page_filter
+
+    out = c4_page_filter(_read(spark, args, "input"), id_col=args.idField,
+                         text_col=args.textField,
+                         min_words_per_line=args.minWordsPerLine,
+                         min_kept_lines=args.minKeptLines,
+                         badwords=tuple(args.badwords))
+    return out.where("keep") if args.keepOnly else out
+
+
+_command(
+    "normalizeText",
+    "unicode normalization (NFC/NFKC), control-char strip, "
+    "whitespace squash — the pre-dedup canonicalization pass",
+    _IN, _OUT, _TEXT,
+    _arg("--form", default="NFC", choices=["NFC", "NFD", "NFKC", "NFKD", "none"]),
+    _arg("--keepControls", action="store_true"),
+    _arg("--keepWhitespace", action="store_true"),
+    _arg("--lowercase", action="store_true"),
+    _FMT,
+    run=_op("operators.corpus:normalize_text", text_col="textField",
+            form=lambda a: None if a.form == "none" else a.form,
+            strip_controls=lambda a: not a.keepControls,
+            squash_whitespace=lambda a: not a.keepWhitespace,
+            lowercase="lowercase"),
+)
+
+_command(
+    "pageRank",
+    "fixed-point PageRank over an edge list "
+    "(link-graph quality prior; bit-reproducible)",
+    _arg("--input", required=True, help="edge table"),
+    _OUT,
+    _arg("--srcField", default="src"),
+    _arg("--dstField", default="dst"),
+    _arg("--iterations", type=int, default=10),
+    _arg("--dampingNum", type=int, default=85),
+    _arg("--dampingDen", type=int, default=100),
+    _FMT,
+    run=_op("operators.graph:pagerank", src="srcField", dst="dstField",
+            iterations="iterations", damping_num="dampingNum",
+            damping_den="dampingDen"),
+)
+
+
+@_command(
+    "urlNormalize",
+    "canonicalize a URL column (scheme/host case, default "
+    "ports, tracking params, fragments) + host and eTLD+1 domain",
+    _IN, _OUT,
+    _arg("--urlField", default="url"),
+    _FMT,
+)
+def _url_normalize(spark, args):
+    from pyspark.sql import functions as F
+
+    from ratatool_spark.functions.urls import normalize_url, registered_domain, url_host
+
+    u = F.col(args.urlField)
+    return _read(spark, args, "input").withColumns({
+        "url_norm": normalize_url(u),
+        "host": url_host(u),
+        "domain": registered_domain(url_host(u)),
+    })
+
+
+_command(
+    "mutualInfo",
+    "pairwise mutual information / entropies / normalized "
+    "leakage score between column pairs",
+    _IN,
+    _arg("--pairs", type=_csv, required=True,
+         help="colon-separated column pairs, comma-delimited: a:b,c:d"),
+    _OUT, _FMT,
+    run=_op("operators.profile:mutual_information",
+            lambda a: [tuple(_split(p, 2, "--pairs", "colon-separated pairs",
+                                    maxsplit=1)) for p in a.pairs]),
+)
+
+_command(
+    "madOutliers",
+    "robust per-group outlier flags via the MAD modified "
+    "z-score (Iglewicz-Hoaglin)",
+    _IN, _OUT,
+    _arg("--valueField", required=True),
+    _arg("--groupBy", type=_csv, default=[]),
+    _arg("--cutoff", type=float, default=3.5),
+    _arg("--exact", action="store_true",
+         help="exact percentiles (default: mergeable approx sketches)"),
+    _FMT,
+    run=_op("operators.profile:mad_outliers", "valueField",
+            lambda a: a.groupBy or None, k="cutoff",
+            approx=lambda a: not a.exact),
+)
+
+_command(
+    "sketchJoinSize",
+    "estimate equi-join output cardinality from two count-min "
+    "sketch tables (no fact rescan)",
+    _arg("--sketchA", required=True),
+    _arg("--sketchB", required=True),
+    _OUT,
+    run=_op("operators.freq:sketch_join_size",
+            inputs=(("sketchA", "parquet"), ("sketchB", "parquet"))),
+)
+
+_command(
+    "driftReport",
+    "PSI drift between two table snapshots "
+    "(categorical top-k pooled bins, numeric equi-width bins)",
+    _arg("--lhs", required=True),
+    _arg("--rhs", required=True),
+    _OUT,
+    _arg("--categorical", type=_csv, default=[]),
+    _arg("--numeric", type=_csv, default=[]),
+    _arg("--buckets", type=int, default=10),
+    _arg("--topK", type=int, default=20),
+    _FMT,
+    run=_op("operators.profile:drift_report", inputs=("lhs", "rhs"),
+            categorical=lambda a: a.categorical or None,
+            numeric=lambda a: a.numeric or None, n_buckets="buckets",
+            top_k="topK"),
+)
+
+
+@_command(
+    "updateIvfIndex",
+    "append vectors to a persisted IVF ANN index against its "
+    "frozen centroids (no retrain)",
+    _arg("--index", required=True),
+    _arg("--input", required=True, help="new vector table"),
+    _FMT,
+)
+def _update_ivf_index(spark, args):
+    from ratatool_spark.operators.similarity import update_ivf_index
+
+    _emit(update_ivf_index(spark, args.index, _read(spark, args, "input")))
+
+
+_command(
+    "neymanSampler",
+    "exact-count stratified sample under Neyman (variance-"
+    "optimal) allocation: n_h proportional to N_h*stddev(value)",
+    _IN, _OUT,
+    _arg("--totalN", type=int, required=True),
+    _arg("--valueField", required=True),
+    _arg("--strata", type=_csv, required=True),
+    _arg("--fields", type=_csv, required=True, help="dice fields"),
+    _arg("--seed", type=int, default=42),
+    _FMT,
+    run=_op("operators.sampler:sample_neyman", total_n="totalN",
+            value_col="valueField", strata="strata", fields="fields", seed="seed"),
+)
+
+
+@_command(
+    "zorderWrite",
+    "rewrite a table clustered by the z-order (Morton) key of "
+    "the given columns so parquet min/max stats prune scans on every "
+    "z-column",
+    _IN, _OUT,
+    _arg("--by", type=_csv, required=True, help="z-order columns"),
+    _arg("--bits", type=int, default=16),
+    _arg("--numPartitions", type=int, default=None),
+    _arg("--curve", choices=["zorder", "hilbert"], default="zorder",
+         help="space-filling curve (hilbert: tighter boxes, same write shape)"),
+    _FMT,
+)
+def _zorder_write(spark, args):
+    from ratatool_spark.operators.layout import hilbert_repartition, zorder_repartition
+
+    rep = hilbert_repartition if args.curve == "hilbert" else zorder_repartition
+    return rep(_read(spark, args, "input"), args.by, bits=args.bits,
+               num_partitions=args.numPartitions)
+
+
+@_command(
+    "rendezvousShard",
+    "assign rows to named shards by rendezvous (HRW) hashing — "
+    "adding/removing a shard moves only that shard's keys",
+    _IN, _OUT,
+    _arg("--keyField", required=True),
+    _arg("--shards", type=_csv, required=True),
+    _arg("--seed", type=int, default=0),
+    _FMT,
+)
+def _rendezvous_shard(spark, args):
+    from pyspark.sql import functions as F
+
+    from ratatool_spark.operators.layout import rendezvous_shard
+
+    shard = rendezvous_shard(F.col(args.keyField), args.shards, args.seed)
+    return _read(spark, args, "input").withColumn("shard", shard)
+
+
+_command(
+    "recordLinkage",
+    "Fellegi-Sunter probabilistic record linkage over blocked "
+    "candidate pairs (compare spec: col:m:u, repeatable)",
+    _arg("--lhs", required=True),
+    _arg("--rhs", required=True),
+    _OUT,
+    _arg("--lhsId", required=True),
+    _arg("--rhsId", required=True),
+    _arg("--blockField", required=True),
+    _arg("--compare", action="append", required=True,
+         help="field:m:u (e.g. phone:0.95:0.001); repeat per field"),
+    _arg("--threshold", type=float, default=0.0),
+    _arg("--maxBlockSize", type=int, default=1000),
+    _FMT,
+    run=_op("operators.fuzzy:fellegi_sunter_links", "lhsId", "rhsId", "blockField",
+            lambda a: [(col, col, float(m), float(u)) for col, m, u in
+                       (spec.rsplit(":", 2) for spec in a.compare)],
+            inputs=("lhs", "rhs"), threshold="threshold",
+            max_block_size="maxBlockSize"),
+)
+
+
+@_command(
+    "linkage",
+    "probabilistic record linkage (Fellegi-Sunter): train m/u "
+    "by EM over blocked candidate pairs, score links with trained "
+    "or supplied weights",
+    _arg("--mode", choices=["train", "score", "auto"], required=True),
+    _arg("--leftInput", required=True),
+    _arg("--rightInput", required=True),
+    _arg("--output", required=True, help="links table, or model JSON for train"),
+    _arg("--leftId", required=True),
+    _arg("--rightId", required=True),
+    _arg("--blockField", type=_csv, required=True,
+         help="one or more blocking keys (comma-separated, multi-pass)"),
+    _arg("--compare", type=_csv, required=True,
+         help="train/auto: column pairs left:right; score: "
+         "left:right:m:u quadruples"),
+    _arg("--model", help="score mode: model JSON from train"),
+    _arg("--iters", type=int, default=5),
+    _arg("--threshold", type=float, default=0.0),
+    _arg("--maxBlockSize", type=int, default=1000),
+    _FMT,
+)
+def _linkage(spark, args):
+    from ratatool_spark.operators.fuzzy import fellegi_sunter_em, fellegi_sunter_links
+    from ratatool_spark.sources.shards import _read_text, _write_text
+
+    left = _read(spark, args, "leftInput")
+    right = _read(spark, args, "rightInput")
+    on = (left, right, args.leftId, args.rightId, args.blockField)
+    if args.mode == "score" and args.model:
+        fields = json.loads(_read_text(spark, args.model))["fields"]
+    elif args.mode == "score":
+        fields = []
+        for spec in args.compare:
+            lc, rc, m, u = _split(spec, 4, "--compare in score mode", "left:right:m:u")
+            fields.append({"left": lc, "right": rc, "m": float(m), "u": float(u)})
+    else:
+        pairs = _col_pairs(args.compare)
+        model = fellegi_sunter_em(*on, pairs, n_iters=args.iters,
+                                  max_block_size=args.maxBlockSize)
+        fields = [{"left": lc, "right": rc, "m": m, "u": u}
+                  for (lc, rc), (m, u) in zip(pairs, model["fields"])]
+        if args.mode == "train":
+            model_json = json.dumps({"lam": model["lam"], "fields": fields})
+            _write_text(spark, args.output, model_json)
+            return None
+    compares = [(f["left"], f["right"], f["m"], f["u"]) for f in fields]
+    return fellegi_sunter_links(*on, compares, threshold=args.threshold,
+                                max_block_size=args.maxBlockSize)
+
+
+@_command(
+    "zorderAudit",
+    "row-group skip audit from parquet footer min/max stats: "
+    "how many groups a conjunctive range predicate scans vs prunes",
+    _arg("--input", required=True, help="parquet file or directory"),
+    _arg("--box", type=_csv, required=True,
+         help="col:lo:hi triples (comma-separated) — the range predicate"),
+)
+def _zorder_audit(spark, args):
+    from ratatool_spark.operators.layout import row_group_skip_audit, row_group_stats
+
+    box = {}
+    for spec in args.box:
+        col, lo, hi = _split(spec, 3, "--box", "col:lo:hi triples")
+        box[col] = (float(lo), float(hi))
+    stats = row_group_stats(args.input, list(box))
+    n_groups, n_scanned = row_group_skip_audit(stats, box)
+    _emit({"n_row_groups": n_groups, "n_scanned": n_scanned,
+           "n_pruned": n_groups - n_scanned})
+
+
+@_command(
+    "scd2",
+    "SCD Type-2 history: build versioned dimension rows from a "
+    "changelog, or merge a change batch into an existing history "
+    "(incremental == rebuild)",
+    _arg("--mode", choices=["history", "apply"], required=True),
+    _arg("--input", required=True, help="change stream table"),
+    _arg("--history", help="apply mode: existing SCD2 table"),
+    _OUT,
+    _arg("--key", type=_csv, required=True, help="business key column(s)"),
+    _arg("--ts", required=True, help="change timestamp column"),
+    _arg("--attrs", type=_csv, required=True, help="tracked attribute column(s)"),
+    _arg("--changeId", default=None, help="tie-break column for equal timestamps"),
+    _arg("--keepChangeId", action="store_true",
+         help="carry the change id into the output so later applies replay "
+         "ties exactly"),
+    _arg("--noCollapse", action="store_true", help="keep no-op versions"),
+    _FMT,
+)
+def _scd2(spark, args):
+    from ratatool_spark.operators.scd2 import scd2_apply, scd2_history
+
+    changes = _read(spark, args, "input")
+    spec = (args.key, args.ts, args.attrs)
+    kw = dict(change_id=args.changeId, collapse=not args.noCollapse,
+              keep_change_id=args.keepChangeId)
+    if args.mode == "history":
+        return scd2_history(changes, *spec, **kw)
+    return scd2_apply(_read(spark, args, "history"), changes, *spec, **kw)
+
+
+_command(
+    "compactionPlan",
+    "bin-pack a file/partition manifest into ~targetBytes "
+    "compaction bins (size-desc cumulative-sum assignment)",
+    _arg("--input", required=True, help="manifest table (one row per file)"),
+    _OUT,
+    _arg("--sizeField", required=True),
+    _arg("--orderField", type=_csv, required=True, help="tie-break column(s)"),
+    _arg("--targetBytes", type=int, required=True),
+    _FMT,
+    run=_op("operators.layout:compaction_plan", "sizeField", "orderField",
+            "targetBytes"),
+)
+
+
+@_command(
+    "logreg",
+    "fixed-point logistic regression: bit-reproducible "
+    "full-batch gradient descent over integer count features "
+    "(train writes a weights JSON; score applies one)",
+    _arg("--mode", choices=["train", "score"], required=True),
+    _IN,
+    _arg("--features", type=_csv, required=True, help="integer feature column(s)"),
+    _arg("--label", help="train mode: 0/1 label column"),
+    _arg("--scales", type=_csv, default=None,
+         help="per-feature scale constants (default 1.0 each)"),
+    _arg("--lr", type=float, default=1.0),
+    _arg("--iters", type=int, default=4),
+    _arg("--model", required=True,
+         help="weights JSON path (written by train, read by score)"),
+    _arg("--output", help="score mode: scored table destination"),
+    _FMT,
+)
+def _logreg(spark, args):
+    from ratatool_spark.operators.linear import lr_score, train_lr_fixed_point
+    from ratatool_spark.sources.shards import _read_text, _write_text
+
+    df = _read(spark, args, "input")
+    if args.mode == "score":
+        meta = json.loads(_read_text(spark, args.model))
+        return lr_score(df, meta["features"], meta["scales"], meta["weights"])
+    scales = [float(x) for x in args.scales] if args.scales else None
+    w = train_lr_fixed_point(df, args.features, args.label, scales=scales,
+                             lr=args.lr, n_iters=args.iters)
+    _write_text(spark, args.model, json.dumps({
+        "version": 1, "features": args.features,
+        "scales": scales or [1.0] * len(args.features),
+        "weights": w,
+    }))
+    _emit({"weights": w})
+
+
+def _where_box(triples: list[str]) -> dict:
+    box = {}
+    for trip in triples:
+        c, lo, hi = _split(trip, 3, "--where", "col:lo:hi triples")
+        try:
+            box[c] = (int(lo), int(hi))
+        except ValueError:
+            box[c] = (float(lo), float(hi))
+    return box
+
+
+def _parse_spec(items: list[str] | None) -> list[dict] | None:
+    spec = []
+    for item in items or ():
+        parts = item.split(":")
+        d = {"col": parts[0], "transform": parts[1] if len(parts) > 1 else "identity"}
+        if len(parts) > 2:
+            d["param"] = int(parts[2])
+        spec.append(d)
+    return spec or None
+
+
+@_command(
+    "snapshot",
+    "snapshot-manifest table maintenance: atomic append/replace "
+    "commits, time-travel read, bin-packed compaction, expiry",
+    _arg("--mode",
+         choices=["append", "read", "compact", "cluster", "merge",
+                  "merge-mor", "fold", "delete", "delete-mor", "delete-rows",
+                  "drop-partition", "expire", "vacuum",
+                  "changes", "mirror", "rollback", "log",
+                  "stage", "read-branch", "publish", "discard",
+                  "create-branch", "append-branch", "read-branch-snapshot",
+                  "fast-forward", "delete-branch", "branches",
+                  "metadata",
+                  "add-constraint", "drop-constraint",
+                  "rename-column", "widen-column", "evolve-spec",
+                  "tag", "untag", "tags", "set-bloom", "count", "agg"],
+         required=True),
+    _arg("--table", required=True, help="snapshot table root"),
+    _arg("--input", help="append/merge mode: data to commit"),
+    _arg("--keys", type=_csv, default=None,
+         help="merge/merge-mor mode: upsert key column(s)"),
+    _arg("--fromId", type=int, default=None,
+         help="changes mode: feed from this snapshot (exclusive)"),
+    _arg("--source", default=None,
+         help="mirror mode: source snapshot table to subscribe to"),
+    _arg("--checkpoint", default=None,
+         help="mirror mode: streaming checkpoint location"),
+    _arg("--zorderBy", type=_csv, default=None,
+         help="cluster mode: z-order column(s)"),
+    _arg("--curve", choices=["zorder", "hilbert"], default="zorder",
+         help="cluster mode: space-filling curve"),
+    _arg("--where", type=_csv, default=None,
+         help="delete/read mode: col:lo:hi triples (conjunctive ranges)"),
+    _arg("--output", help="read/log mode: where to write the result"),
+    _arg("--snapshotId", type=int, default=None,
+         help="read mode: time-travel to this snapshot (default: current)"),
+    _arg("--targetBytes", type=int, default=512 * 1024 * 1024,
+         help="compact mode: bin size (default 512 MiB)"),
+    _arg("--keepLast", type=int, default=1,
+         help="expire mode: snapshots to retain (default 1)"),
+    _arg("--dryRun", action="store_true",
+         help="expire/vacuum mode: list deletable files without deleting"),
+    _arg("--partitionBy", type=_csv, default=None,
+         help="append mode, first commit only: partition spec items as "
+         "col:transform[:param] (identity/truncate/bucket/month)"),
+    _arg("--predicate", default=None,
+         help="delete-rows mode: SQL predicate selecting rows to remove "
+         "(merge-on-read position delete)"),
+    _arg("--partition", type=_csv, default=None,
+         help="drop-partition mode: name=value pairs (value 'null' "
+         "matches the NULL partition)"),
+    _arg("--branch", default=None,
+         help="stage/read-branch/publish/discard mode (write-audit-"
+         "publish) and create-branch/append-branch/read-branch-snapshot/"
+         "fast-forward/delete-branch (named multi-commit branches): "
+         "branch name; with merge/merge-mor/delete/delete-mor/fold the "
+         "write lands on the BRANCH head instead of main"),
+    _arg("--metadataKind", default=None,
+         choices=["files", "snapshots", "history", "partitions", "refs"],
+         help="metadata mode: which inspection table to emit"),
+    _arg("--name", default=None,
+         help="add-constraint/drop-constraint mode: constraint name"),
+    _arg("--expr", default=None,
+         help="add-constraint mode: CHECK expression (SQL; NULL passes)"),
+    _arg("--olderThan", type=float, default=6 * 3600.0,
+         help="vacuum mode: only remove orphans older than this many "
+         "seconds (default 6h) — protects in-flight commits whose "
+         "manifest has not been published yet"),
+    _arg("--column", default=None,
+         help="rename-column/widen-column mode: the column to evolve"),
+    _arg("--to", default=None,
+         help="rename-column: the new name; widen-column: the wider type "
+         "(exact promotions only: tinyint→smallint→int→bigint, "
+         "float→double)"),
+    _arg("--spec", type=_csv, default=None,
+         help="evolve-spec mode: new partition spec items as "
+         "col:transform[:param] — future writes route through it; "
+         "existing files keep their layout"),
+    _arg("--tagName", default=None,
+         help="tag/untag mode: the tag name (tag also accepts "
+         "--snapshotId; default current); read mode: time-travel to the "
+         "tagged snapshot. Tagged snapshots never expire."),
+    _arg("--minmaxCols", type=_csv, default=None,
+         help="agg mode: columns to MIN/MAX alongside COUNT(*)"),
+    _arg("--whereEq", type=_csv, default=None,
+         help="agg mode: col:value equality conjunction (identity "
+         "partition value, or the granule string on a time transform)"),
+    _arg("--bloomCols", type=_csv, default=None,
+         help="set-bloom mode: columns to build per-file bloom filters "
+         "on (future writes; point lookups and scattered-key merges "
+         "then skip non-holding files)"),
+    _arg("--bitsPerKey", type=int, default=10,
+         help="set-bloom mode: bloom bits per row (default 10, ~1%% "
+         "false positives)"),
+    _FMT,
+)
+def _snapshot(spark, args):
+    """Each mode returns a dict (printed as one JSON line), a DataFrame
+    (written to ``--output``) or None (it printed or wrote itself)."""
+    from ratatool_spark.operators import snapshots as snap
+    from ratatool_spark.sources.io import write_table
+
+    t, branch = args.table, args.branch
+    if args.mode in ("read", "count") and args.tagName is not None \
+            and args.snapshotId is None:
+        args.snapshotId = snap.read_tag(t, args.tagName)
+
+    def head(*rest, **kw):  # the mode's main or branch commit
+        main_fn, branch_fn = _SNAP_BRANCHED[args.mode]
+        fn = getattr(snap, branch_fn if branch else main_fn)
+        return fn(*((spark, t, branch) if branch else (spark, t)), *rest, **kw)
+
+    def sid(v, flag=None):
+        return {"snapshot_id": v, flag: v is not None} if flag else {"snapshot_id": v}
+
+    def removed(dead):
+        return {"n_removed": len(dead), "removed": dead}
+
+    def data():
+        return _read(spark, args, "input")
+
+    def inspected(out):  # inspection writes keep the error-if-exists default
+        write_table(out, args.output, fmt=args.format)
+        return {"rows": out.count(), "output": args.output}
+
+    def metadata():
+        out = snap.metadata_table(spark, t, args.metadataKind,
+                                  snapshot_id=args.snapshotId, branch=branch)
+        if args.output:
+            return inspected(out)
+        for r in out.collect():
+            _emit(r.asDict(), default=str)
+
+    def agg():
+        where = dict(
+            _split(p, 2, "--whereEq", "col:value pairs", maxsplit=1, blanks=True)
+            for p in args.whereEq
+        ) if args.whereEq else None
+        out, md = snap.scan_aggregate(
+            spark, t, minmax_cols=tuple(args.minmaxCols or ()),
+            snapshot_id=args.snapshotId, where=where,
+        )
+        return {**out.collect()[0].asDict(), "from_metadata": md}
+
+    def set_bloom():
+        os.makedirs(t, exist_ok=True)
+        snap.set_bloom_filter(t, args.bloomCols, bits_per_key=args.bitsPerKey)
+        return snap.table_properties(t)
+
+    def add_constraint():
+        snap.add_constraint(spark, t, args.name, args.expr)
+        return {"added": args.name}
+
+    def partition():
+        vals = {}
+        for pair in args.partition:
+            k, v = _split(pair, 2, "--partition", "name=value pairs", sep="=",
+                          maxsplit=1, blanks=True)
+            vals[k] = None if v == "null" else v
+        return vals
+
+    def mirror():
+        from ratatool_spark.streaming.snapshots import stream_snapshot_mirror
+
+        q = stream_snapshot_mirror(spark, args.source, t, args.checkpoint)
+        q.awaitTermination()
+        return sid(snap.current_snapshot_id(t))
+
+    def log():
+        out = snap.snapshot_log(spark, t)
+        if args.output:
+            return out
+        for r in out.orderBy("snapshot_id").collect():
+            _emit(r.asDict())
+
+    modes = {
+        "append": lambda: sid(snap.commit_append(
+            data(), t, partition_spec=_parse_spec(args.partitionBy))),
+        "rename-column": lambda: sid(snap.rename_column(t, args.column, args.to)),
+        "widen-column": lambda: sid(snap.widen_column_type(t, args.column, args.to)),
+        "evolve-spec": lambda: sid(
+            snap.evolve_partition_spec(t, _parse_spec(args.spec))),
+        "create-branch": lambda: {"branch": branch, "base": snap.create_branch(
+            t, branch, snapshot_id=args.snapshotId)},
+        "append-branch": lambda: {"branch": branch, "branch_snapshot_id":
+                                  snap.commit_append_branch(data(), t, branch)},
+        "read-branch-snapshot": lambda: inspected(snap.read_branch_snapshot(
+            spark, t, branch, snapshot_id=args.snapshotId)),
+        "fast-forward": lambda: {"branch": branch, "snapshot_id":
+                                 snap.fast_forward_branch(t, branch, spark=spark)},
+        "delete-branch": lambda: {"branch": branch,
+                                  "existed": snap.delete_branch(t, branch)},
+        "branches": lambda: snap.table_branches(t),
+        "metadata": metadata,
+        "tag": lambda: {"tag": args.tagName, "snapshot_id": snap.create_tag(
+            t, args.tagName, snapshot_id=args.snapshotId)},
+        "untag": lambda: {"tag": args.tagName,
+                          "existed": snap.delete_tag(t, args.tagName)},
+        "tags": lambda: snap.table_tags(t),
+        "count": lambda: {"rows": snap.snapshot_rowcount(t, args.snapshotId),
+                          "snapshot_id": args.snapshotId
+                          or snap.current_snapshot_id(t)},
+        "agg": agg,
+        "set-bloom": set_bloom,
+        "stage": lambda: {"staged_on": snap.stage_append(data(), t, branch),
+                          "branch": branch},
+        "read-branch": lambda: snap.read_branch(spark, t, branch),
+        "publish": lambda: sid(snap.publish_branch(spark, t, branch)),
+        "discard": lambda: {"discarded": snap.discard_branch(t, branch)},
+        "add-constraint": add_constraint,
+        "drop-constraint": lambda: {"dropped": snap.drop_constraint(t, args.name)},
+        "delete-rows": lambda: sid(
+            snap.delete_snapshot_rows_mor(spark, t, args.predicate)),
+        "drop-partition": lambda: sid(snap.drop_partition(spark, t, partition())),
+        "read": lambda: snap.read_snapshot(
+            spark, t, args.snapshotId, where=_where_box(args.where or []) or None),
+        "merge": lambda: sid(head(data(), args.keys)),
+        "merge-mor": lambda: sid(head(data(), args.keys)),
+        "fold": lambda: sid(head(), "folded"),
+        "changes": lambda: snap.snapshot_change_feed(
+            spark, t, args.fromId, args.snapshotId),
+        "mirror": mirror,
+        "delete": lambda: sid(head(_where_box(args.where))),
+        "delete-mor": lambda: sid(head(_where_box(args.where))),
+        "cluster": lambda: sid(head(args.zorderBy, curve=args.curve)),
+        "compact": lambda: sid(head(args.targetBytes), "compacted"),
+        "rollback": lambda: sid(snap.rollback_snapshot(t, args.snapshotId)),
+        "expire": lambda: removed(snap.expire_snapshots(
+            t, keep_last=args.keepLast, delete=not args.dryRun)),
+        "vacuum": lambda: removed(snap.vacuum_orphans(
+            t, delete=not args.dryRun, older_than=args.olderThan)),
+        "log": log,
+    }
+    out = modes[args.mode]()
+    if not isinstance(out, dict):
+        return out
+    _emit(out)
+
+
+@_command(
+    "decontaminate",
+    "drop corpus docs that fuzzy-match a benchmark corpus "
+    "(cross-corpus MinHash-LSH flag + anti-join)",
+    _IN,
+    _arg("--benchmark", required=True),
+    _OUT, _TEXT, _ID,
+    _arg("--minEstJaccard", type=float, default=0.5),
+    _arg("--numHashes", type=int, default=16),
+    _arg("--bands", type=int, default=4),
+    _FMT,
+)
+def _decontaminate(spark, args):
+    from pyspark.sql import functions as F
+
+    from ratatool_spark.operators.dedup import minhash_lsh_cross_pairs
+
+    df = _read(spark, args, "input")
+    pairs = minhash_lsh_cross_pairs(
+        df, _read(spark, args, "benchmark"), text_col=args.textField,
+        id_col=args.idField, num_hashes=args.numHashes, bands=args.bands,
+        min_est_jaccard=args.minEstJaccard,
+    )
+    flagged = pairs.select(F.col("left_id").alias(args.idField)).distinct()
+    return df.join(flagged, args.idField, "left_anti")
+
+
+# ------------------------------------------------------------------ entry
+
+
+def build_parser() -> argparse.ArgumentParser:
+    p = argparse.ArgumentParser(prog="ratatool_spark")
+    sub = p.add_subparsers(dest="command", required=True)
+    for name, (text, flags, _) in _COMMANDS.items():
+        s = sub.add_parser(name, help=text)
+        for option_strings, kw in flags:
+            s.add_argument(*option_strings, **kw)
     return p
+
+
+def _require(args: argparse.Namespace) -> None:
+    """Exit 1 unless every flag the chosen ``--mode`` needs is set."""
+    dests = _MODE_FLAGS.get(args.command, {}).get(getattr(args, "mode", None), ())
+    if any(getattr(args, d) in (None, "", []) for d in dests):
+        flags = " and ".join(f"--{d}" for d in dests)
+        verb = "is" if len(dests) == 1 else "are"
+        raise SystemExit(f"{flags} {verb} required with --mode {args.mode}")
 
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
-    from pyspark.sql import SparkSession
+    _require(args)
+    from pyspark.sql import DataFrame, SparkSession
 
     from ratatool_spark.session import get_spark
-    from ratatool_spark.sources.io import read_table, write_table
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark(f"ratatool_{args.command}")
     try:
-        if args.command == "bigSampler":
-            from ratatool_spark.operators.sampler import sample
-            from ratatool_spark.sources.io import row_restriction
-
-            df = read_table(spark, args.input, fmt=args.format)
-            if args.rowRestriction:
-                df = row_restriction(df, args.rowRestriction)
-            out = sample(
-                df,
-                args.fraction,
-                fields=args.fields,
-                strata=args.distributionFields if args.distribution else None,
-                uniform=args.distribution == "uniform",
-                exact=args.exact,
-                seed=args.seed,
-                hasher=args.hashAlgorithm,
-                byte_encoding=args.byteEncoding,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "bigDiffy":
-            from ratatool_spark.operators.diffy import BigDiffy
-            from ratatool_spark.sources.io import row_restriction
-
-            unordered_keys = {}
-            for pair in args.unorderedFieldKey:
-                path, sep, key = pair.partition(":")
-                if not sep or not path or not key:
-                    raise SystemExit(
-                        f"--unorderedFieldKey expects non-empty path:key pairs, got {pair!r}"
-                    )
-                if path in unordered_keys:
-                    raise SystemExit(
-                        f"--unorderedFieldKey repeats path {path!r}"
-                    )
-                unordered_keys[path] = key
-            lhs = read_table(spark, args.lhs)
-            rhs = read_table(spark, args.rhs)
-            if args.rowRestriction:
-                lhs = row_restriction(lhs, args.rowRestriction)
-                rhs = row_restriction(rhs, args.rowRestriction)
-            d = BigDiffy(
-                lhs,
-                rhs,
-                keys=args.key,
-                ignore=set(args.ignore),
-                unordered=set(args.unordered),
-                unordered_keys=unordered_keys or None,
-                ignore_nan=args.ignoreNan,
-            )
-            d.save_stats(args.output)
-        elif args.command == "directSampler":
-            from ratatool_spark.operators.sampler import head_sample, reservoir_sample
-
-            df = read_table(spark, args.input)
-            out = head_sample(df, args.n) if args.head else reservoir_sample(df, args.n, args.seed)
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "nearDedup":
-            from ratatool_spark.operators.dedup import near_dedup
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = near_dedup(
-                df,
-                text_col=args.textField,
-                id_col=args.idField,
-                num_hashes=args.numHashes,
-                bands=args.bands,
-                shingle_n=args.shingleN,
-                threshold=args.threshold,
-                hasher=args.hasher,
-                score_col=args.scoreField,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "substringDedup":
-            from ratatool_spark.operators.dedup import substring_containment_pairs
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = substring_containment_pairs(
-                df,
-                text_col=args.textField,
-                id_col=args.idField,
-                shingle_len=args.shingleLen,
-                max_doc_freq=args.maxDocFreq,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "generate":
-            from ratatool_spark.generators import random_dataframe
-
-            write_table(
-                random_dataframe(spark, args.schema, args.n, seed=args.seed),
-                args.output,
-                mode="overwrite",
-            )
-        elif args.command == "packSequences":
-            from ratatool_spark.operators.packing import pack_sequences
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = pack_sequences(
-                df,
-                args.tokenField,
-                args.budget,
-                order_cols=args.orderBy,
-                group_cols=args.groupBy,
-                offset_col=args.offsetField,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "dedupLines":
-            from ratatool_spark.operators.corpus import remove_duplicate_lines
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = remove_duplicate_lines(
-                df,
-                text_col=args.textField,
-                id_col=args.idField,
-                max_occurrences=args.maxOccurrences,
-                min_line_chars=args.minLineChars,
-                scope=args.scope,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "upsert":
-            import json as _json
-
-            from ratatool_spark.sources.io import upsert_table
-
-            stats = upsert_table(
-                spark,
-                args.base,
-                read_table(spark, args.updates, fmt=args.updatesFormat),
-                args.keys,
-                fmt=args.format,
-                delete_col=args.deleteField,
-            )
-            print(_json.dumps(stats))
-        elif args.command == "unigramTrain":
-            from ratatool_spark.operators.unigram import unigram_train
-
-            df = read_table(spark, args.input, fmt=args.format)
-            vocab = unigram_train(
-                df,
-                text_col=args.textField,
-                vocab_size=args.vocabSize,
-                max_piece_len=args.maxPieceLen,
-                em_rounds=args.emRounds,
-                min_seed_count=args.minSeedCount,
-                max_word_len=args.maxWordLen,
-            )
-            write_table(vocab, args.output, mode="overwrite")
-        elif args.command == "unigramSegment":
-            from ratatool_spark.operators.unigram import segment_docs
-
-            df = read_table(spark, args.input, fmt=args.format)
-            vocab = spark.read.parquet(args.vocab)
-            write_table(
-                segment_docs(
-                    df, vocab,
-                    text_col=args.textField,
-                    id_col=args.idField,
-                    max_word_len=args.maxWordLen,
-                ),
-                args.output,
-                mode="overwrite",
-            )
-        elif args.command == "wordpieceTrain":
-            from ratatool_spark.operators.wordpiece import (
-                save_wordpiece_tokenizer,
-                wordpiece_learn,
-                wordpiece_vocab,
-            )
-
-            df = read_table(spark, args.input, fmt=args.format)
-            merges = wordpiece_learn(
-                df,
-                text_col=args.textField,
-                n_merges=args.nMerges,
-                batch=args.batch,
-                pool=args.pool,
-                rounds=args.rounds,
-            )
-            vocab = wordpiece_vocab(df, merges, text_col=args.textField)
-            save_wordpiece_tokenizer(spark, args.output, merges, vocab=vocab)
-        elif args.command == "wordpieceSegment":
-            from ratatool_spark.operators.wordpiece import (
-                load_wordpiece_tokenizer,
-                wordpiece_match_segment,
-                wordpiece_segment,
-            )
-
-            df = read_table(spark, args.input, fmt=args.format)
-            merges, vocab = load_wordpiece_tokenizer(spark, args.tokenizer)
-            if args.mode == "match":
-                if vocab is None:
-                    raise SystemExit(
-                        "--mode match needs an artifact with a vocab "
-                        "(wordpieceTrain writes one)"
-                    )
-                out = wordpiece_match_segment(
-                    df, vocab, text_col=args.textField, unk=args.unk)
-            else:
-                out = wordpiece_segment(df, merges, text_col=args.textField)
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "bpeLearn":
-            import json as _json
-
-            from ratatool_spark.operators.corpus import bpe_learn
-            from ratatool_spark.sources.shards import _write_text
-
-            df = read_table(spark, args.input, fmt=args.format)
-            merges = bpe_learn(
-                df,
-                text_col=args.textField,
-                n_merges=args.nMerges,
-                batch=args.batch,
-                pool=args.pool,
-                rounds=args.rounds,
-            )
-            _write_text(spark, args.output, _json.dumps(merges))
-        elif args.command == "bpeEncode":
-            import json as _json
-
-            from ratatool_spark.operators.corpus import bpe_segment
-            from ratatool_spark.sources.shards import _read_text
-
-            merges = [tuple(m) for m in _json.loads(_read_text(spark, args.merges))]
-            df = read_table(spark, args.input, fmt=args.format)
-            write_table(
-                bpe_segment(df, merges, text_col=args.textField),
-                args.output,
-                mode="overwrite",
-            )
-        elif args.command == "tfidfDedup":
-            from ratatool_spark.operators.dedup import tfidf_cosine_pairs
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = tfidf_cosine_pairs(
-                df,
-                text_col=args.textField,
-                id_col=args.idField,
-                threshold=args.threshold,
-                max_doc_freq=args.maxDocFreq,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "quantileSketch":
-            from pyspark.sql import functions as F
-
-            from ratatool_spark.operators.timeagg import (
-                build_quantile_sketches,
-                estimate_quantiles,
-                merge_quantile_sketches,
-            )
-
-            if args.mode == "build":
-                if not args.input or not args.keyFields:
-                    raise SystemExit("build mode needs --input and --keyFields")
-                df = read_table(spark, args.input, fmt=args.format)
-                if args.groupBy == ["__all__"]:
-                    df = df.withColumn("__all__", F.lit("all"))
-                out = build_quantile_sketches(
-                    df, args.groupBy, args.valueField, args.keyFields, k=args.k
-                )
-            elif args.mode == "merge":
-                if not args.inputs or len(args.inputs) < 2:
-                    raise SystemExit("merge mode needs --inputs a,b[,...]")
-                fmt = args.format or "parquet"
-                out = merge_quantile_sketches(
-                    *(read_table(spark, p, fmt=fmt) for p in args.inputs)
-                )
-            else:
-                if not args.input:
-                    raise SystemExit("estimate mode needs --input (a sketch table)")
-                out = estimate_quantiles(
-                    read_table(spark, args.input, fmt=args.format or "parquet"),
-                    [float(q) for q in args.quantiles],
-                )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "dsirSelect":
-            from ratatool_spark.operators.corpus import dsir_select
-
-            out = dsir_select(
-                read_table(spark, args.input, fmt=args.format),
-                read_table(spark, args.targetFreqs, fmt="parquet"),
-                read_table(spark, args.rawFreqs, fmt="parquet"),
-                args.n,
-                text_col=args.textField,
-                id_col=args.idField,
-                smoothing=args.smoothing,
-                seed=args.seed,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "fuzzyJoin":
-            from ratatool_spark.operators.fuzzy import fuzzy_join
-
-            pairs = []
-            for spec in args.compare:
-                lc, sep, rc = spec.partition(":")
-                pairs.append((lc, rc if sep else lc))
-            out = fuzzy_join(
-                read_table(spark, args.leftInput, fmt=args.format),
-                read_table(spark, args.rightInput, fmt=args.format),
-                args.leftId,
-                args.rightId,
-                args.blockField,
-                pairs,
-                method=args.method,
-                threshold=args.threshold,
-                keep_best=args.keepBest,
-                max_block_size=args.maxBlockSize,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "freqSketch":
-            from pyspark.sql import functions as F
-
-            from ratatool_spark.operators.freq import (
-                build_freq_sketches,
-                estimate_freqs,
-                merge_freq_sketches,
-            )
-
-            if args.mode == "build":
-                if not args.input:
-                    raise SystemExit("build mode needs --input")
-                df = read_table(spark, args.input, fmt=args.format)
-                if args.groupBy == ["__all__"]:
-                    df = df.withColumn("__all__", F.lit("all"))
-                out = build_freq_sketches(
-                    df,
-                    args.groupBy,
-                    args.keyField,
-                    depth=args.depth,
-                    width=args.width,
-                    seed=args.seed,
-                )
-            elif args.mode == "merge":
-                if not args.inputs or len(args.inputs) < 2:
-                    raise SystemExit("merge mode needs --inputs a,b[,...]")
-                fmt = args.format or "parquet"
-                out = merge_freq_sketches(
-                    *(read_table(spark, p, fmt=fmt) for p in args.inputs)
-                )
-            else:
-                if not args.input or not args.keys:
-                    raise SystemExit(
-                        "estimate mode needs --input (a sketch table) and --keys"
-                    )
-                keys_df = spark.createDataFrame(
-                    [(k,) for k in args.keys], f"{args.keyField} string"
-                )
-                out = estimate_freqs(
-                    read_table(spark, args.input, fmt=args.format or "parquet"),
-                    keys_df,
-                    args.keyField,
-                    seed=args.seed,
-                )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "heavyHitters":
-            from ratatool_spark.operators.freq import heavy_hitters
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = heavy_hitters(df, args.groupBy, args.keyField, k=args.k)
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "skewReport":
-            from ratatool_spark.operators.freq import skew_report
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = skew_report(df, args.columns, top_k=args.topK)
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "capPerGroup":
-            from ratatool_spark.operators.corpus import cap_per_group
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = cap_per_group(
-                df,
-                group_col=args.groupField,
-                max_rows=args.maxRows,
-                dice_cols=args.diceFields,
-                seed=args.seed,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "profilePii":
-            from ratatool_spark.operators.profile import profile_pii
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = profile_pii(
-                df,
-                columns=args.columns,
-                sample_fraction=args.sampleFraction,
-                seed=args.seed,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "mixtureSample":
-            from ratatool_spark.operators.corpus import mixture_sample
-
-            shares = {}
-            for kv in _csv(args.shares):
-                k, _, v = kv.partition("=")
-                shares[k] = float(v)
-            df = read_table(spark, args.input, fmt=args.format)
-            out = mixture_sample(
-                df,
-                shares,
-                source_col=args.sourceField,
-                dice_cols=args.diceFields,
-                seed=args.seed,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "contamination":
-            from ratatool_spark.operators.corpus import contamination
-
-            df = read_table(spark, args.input, fmt=args.format)
-            bench = read_table(spark, args.benchmark, fmt=args.format)
-            out = contamination(
-                df,
-                bench,
-                text_col=args.textField,
-                id_col=args.idField,
-                n=args.shingleN,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "dedupAgainst":
-            from ratatool_spark.operators.dedup import filter_against, load_signatures
-
-            new = read_table(spark, args.input, fmt=args.format)
-            corpus = read_table(spark, args.corpus, fmt=args.format)
-            corpus_sigs = None
-            if args.corpusSigs:
-                corpus_sigs, meta = load_signatures(spark, args.corpusSigs)
-                for cli_v, meta_k in (
-                    (args.numHashes, "num_hashes"),
-                    (args.shingleN, "shingle_n"),
-                    (args.hasher, "hasher"),
-                ):
-                    if meta.get(meta_k) != cli_v:
-                        raise SystemExit(
-                            f"--corpusSigs was saved with {meta_k}="
-                            f"{meta.get(meta_k)!r} but the command asks for "
-                            f"{cli_v!r}; align the flags or resave"
-                        )
-            out = filter_against(
-                new,
-                corpus,
-                threshold=args.threshold,
-                text_col=args.textField,
-                id_col=args.idField,
-                num_hashes=args.numHashes,
-                bands=args.bands,
-                shingle_n=args.shingleN,
-                hasher=args.hasher,
-                corpus_sigs=corpus_sigs,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "exactDedupAgainst":
-            from ratatool_spark.operators.dedup import exact_filter_against
-
-            new = read_table(spark, args.input, fmt=args.format)
-            corpus = read_table(spark, args.corpus, fmt=args.format)
-            out = exact_filter_against(
-                new,
-                corpus,
-                cols=args.keyFields,
-                fpp=args.fpp,
-                use_bloom=not args.noBloom,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "saveSignatures":
-            from ratatool_spark.operators.dedup import save_signatures
-
-            df = read_table(spark, args.input, fmt=args.format)
-            save_signatures(
-                df,
-                args.output,
-                text_col=args.textField,
-                id_col=args.idField,
-                num_hashes=args.numHashes,
-                shingle_n=args.shingleN,
-                hasher=args.hasher,
-                mode="overwrite",
-            )
-        elif args.command == "profile":
-            from ratatool_spark.operators.profile import profile_table
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = profile_table(
-                df, cols=args.columns, exact_distinct=args.exactDistinct
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "runChecks":
-            import json as _json
-
-            from ratatool_spark.operators.checks import run_checks
-
-            with open(args.checks) as f:
-                suite = _json.load(f)
-            # foreign_key refs come as paths in the JSON form
-            for c in suite:
-                if c.get("kind") == "foreign_key" and isinstance(c.get("ref"), str):
-                    c["ref"] = read_table(spark, c["ref"])
-            df = read_table(spark, args.input, fmt=args.format)
-            report = run_checks(df, suite)
-            # the report is one row per check — collect it ONCE, then both
-            # write and derive the exit status from the collected rows
-            # (write_table(report) + a second .count() would re-execute
-            # the whole suite: full scan, unique groupBy, FK anti-join)
-            rows = report.collect()
-            write_table(
-                spark.createDataFrame(rows, report.schema),
-                args.output,
-                mode="overwrite",
-            )
-            if any(not r["passed"] for r in rows):
-                return 1
-        elif args.command == "writeShards":
-            from ratatool_spark.sources.shards import (
-                verify_shards,
-                write_training_shards,
-            )
-
-            df = read_table(spark, args.input, fmt=args.format)
-            write_training_shards(
-                df, args.output, args.numShards, args.keyFields,
-                mode="overwrite",
-            )
-            if args.verify and not verify_shards(spark, args.output)["ok"]:
-                return 1
-        elif args.command == "compact":
-            from ratatool_spark.sources.io import compact_files
-
-            compact_files(
-                spark,
-                args.input,
-                args.output,
-                sort_cols=args.sortBy,
-                zorder_cols=args.zorderBy,
-                target_file_mb=args.targetFileMb,
-                fmt=args.format,
-                mode="overwrite",
-            )
-        elif args.command == "dedupSpans":
-            from ratatool_spark.operators.corpus import remove_duplicate_spans
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = remove_duplicate_spans(
-                df,
-                text_col=args.textField,
-                id_col=args.idField,
-                span_tokens=args.spanTokens,
-                max_occurrences=args.maxOccurrences,
-                scope=args.scope,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "semanticDedup":
-            from pyspark.sql import functions as F
-
-            from ratatool_spark.operators.dedup import semantic_dedup
-
-            df = read_table(spark, args.input, fmt=args.format)
-            rep = semantic_dedup(
-                df,
-                tau=args.tau,
-                n_centroids=args.nCentroids,
-                id_col=args.idField,
-                vec_col=args.vecField,
-                train_iters=args.trainIters,
-                seed=args.seed,
-            )
-            if args.keptOnly:
-                out = df.join(
-                    rep.where(F.col("kept")).select(args.idField),
-                    args.idField,
-                    "left_semi",
-                )
-            else:
-                out = rep
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "nbClassify":
-            from ratatool_spark.operators.corpus import (
-                nb_classify,
-                train_nb_class_weights,
-            )
-
-            train_df = read_table(spark, args.train, fmt=args.format)
-            w, pri = train_nb_class_weights(
-                train_df,
-                args.labelField,
-                text_col=args.textField,
-                n=args.n,
-                n_buckets=args.nBuckets,
-                smoothing=args.smoothing,
-                seed=args.seed,
-            )
-            df = read_table(spark, args.input, fmt=args.format)
-            out = nb_classify(
-                df,
-                w,
-                pri,
-                args.nBuckets,
-                text_col=args.textField,
-                id_col=args.idField,
-                n=args.n,
-                seed=args.seed,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "qualityClassify":
-            from ratatool_spark.operators.corpus import (
-                build_hashed_ngram_freqs,
-                quality_classifier_score,
-                train_quality_weights,
-            )
-
-            pos = build_hashed_ngram_freqs(
-                read_table(spark, args.posInput, fmt=args.format),
-                text_col=args.textField,
-                n=args.n,
-                n_buckets=args.nBuckets,
-                seed=args.seed,
-            )
-            neg = build_hashed_ngram_freqs(
-                read_table(spark, args.negInput, fmt=args.format),
-                text_col=args.textField,
-                n=args.n,
-                n_buckets=args.nBuckets,
-                seed=args.seed,
-            )
-            w = train_quality_weights(pos, neg, n_buckets=args.nBuckets)
-            df = read_table(spark, args.input, fmt=args.format)
-            out = quality_classifier_score(
-                df,
-                w,
-                n_buckets=args.nBuckets,
-                text_col=args.textField,
-                id_col=args.idField,
-                n=args.n,
-                bias=args.bias,
-                seed=args.seed,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "imageDedup":
-            from ratatool_spark.operators.multimodal import image_near_dup_pairs
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = image_near_dup_pairs(
-                df,
-                max_hamming=args.maxHamming,
-                rows=args.gridRows,
-                cols=args.gridCols,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "chunkDocs":
-            from ratatool_spark.operators.corpus import chunk_documents
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = chunk_documents(
-                df,
-                text_col=args.textField,
-                id_col=args.idField,
-                chunk_size=args.chunkSize,
-                overlap=args.overlap,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "vocabCoverage":
-            from ratatool_spark.operators.corpus import vocab_coverage
-
-            df = read_table(spark, args.input, fmt=args.format)
-            vocab = read_table(spark, args.vocab, fmt=args.format)
-            out = vocab_coverage(
-                df,
-                vocab,
-                text_col=args.textField,
-                id_col=args.idField,
-                token_col=args.tokenField,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "kAnonymity":
-            from ratatool_spark.operators.profile import (
-                k_anonymity,
-                k_anonymity_summary,
-            )
-
-            df = read_table(spark, args.input, fmt=args.format)
-            fn = k_anonymity_summary if args.summary else k_anonymity
-            out = fn(df, args.quasiFields, k=args.k)
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "bm25Search":
-            from ratatool_spark.operators.retrieval import (
-                bm25_topk,
-                bm25_topk_index,
-                save_bm25_index,
-            )
-
-            q = read_table(spark, args.queries, fmt=args.format)
-            if args.index and not args.corpus:
-                out = bm25_topk_index(
-                    spark, args.index, q,
-                    k=args.k, k1=args.k1, b=args.b, max_df=args.maxDf,
-                )
-            else:
-                if not args.corpus:
-                    raise SystemExit("bm25Search needs --corpus or --index")
-                docs = read_table(spark, args.corpus, fmt=args.format)
-                if args.saveIndex:
-                    save_bm25_index(
-                        docs, args.saveIndex,
-                        id_col=args.idField, text_col=args.textField,
-                    )
-                    out = bm25_topk_index(
-                        spark, args.saveIndex, q,
-                        k=args.k, k1=args.k1, b=args.b, max_df=args.maxDf,
-                    )
-                else:
-                    out = bm25_topk(
-                        docs, q, k=args.k, k1=args.k1, b=args.b,
-                        id_col=args.idField, text_col=args.textField,
-                        max_df=args.maxDf,
-                    )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "rrfFuse":
-            from ratatool_spark.operators.retrieval import rrf_fuse
-
-            rankings = [
-                read_table(spark, p, fmt=args.format) for p in args.inputs
-            ]
-            out = rrf_fuse(rankings, k_rrf=args.kRrf, topk=args.topk)
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "c4Filter":
-            from ratatool_spark.operators.corpus import c4_page_filter
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = c4_page_filter(
-                df,
-                id_col=args.idField,
-                text_col=args.textField,
-                min_words_per_line=args.minWordsPerLine,
-                min_kept_lines=args.minKeptLines,
-                badwords=tuple(args.badwords),
-            )
-            if args.keepOnly:
-                out = out.where("keep")
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "normalizeText":
-            from ratatool_spark.operators.corpus import normalize_text
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = normalize_text(
-                df,
-                text_col=args.textField,
-                form=None if args.form == "none" else args.form,
-                strip_controls=not args.keepControls,
-                squash_whitespace=not args.keepWhitespace,
-                lowercase=args.lowercase,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "pageRank":
-            from ratatool_spark.operators.graph import pagerank
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = pagerank(
-                df,
-                src=args.srcField,
-                dst=args.dstField,
-                iterations=args.iterations,
-                damping_num=args.dampingNum,
-                damping_den=args.dampingDen,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "urlNormalize":
-            from pyspark.sql import functions as F
-
-            from ratatool_spark.functions.urls import (
-                normalize_url,
-                registered_domain,
-                url_host,
-            )
-
-            df = read_table(spark, args.input, fmt=args.format)
-            u = F.col(args.urlField)
-            out = df.withColumns(
-                {
-                    "url_norm": normalize_url(u),
-                    "host": url_host(u),
-                    "domain": registered_domain(url_host(u)),
-                }
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "mutualInfo":
-            from ratatool_spark.operators.profile import mutual_information
-
-            pairs = []
-            for p_ in args.pairs:
-                x, sep, y = p_.partition(":")
-                if not sep or not x or not y:
-                    raise SystemExit(
-                        f"--pairs expects colon-separated pairs, got {p_!r}"
-                    )
-                pairs.append((x, y))
-            df = read_table(spark, args.input, fmt=args.format)
-            write_table(
-                mutual_information(df, pairs), args.output, mode="overwrite"
-            )
-        elif args.command == "madOutliers":
-            from ratatool_spark.operators.profile import mad_outliers
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = mad_outliers(
-                df,
-                args.valueField,
-                args.groupBy or None,
-                k=args.cutoff,
-                approx=not args.exact,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "sketchJoinSize":
-            from ratatool_spark.operators.freq import sketch_join_size
-
-            sa = spark.read.parquet(args.sketchA)
-            sb = spark.read.parquet(args.sketchB)
-            write_table(
-                sketch_join_size(sa, sb), args.output, mode="overwrite"
-            )
-        elif args.command == "driftReport":
-            from ratatool_spark.operators.profile import drift_report
-
-            lhs = read_table(spark, args.lhs, fmt=args.format)
-            rhs = read_table(spark, args.rhs, fmt=args.format)
-            out = drift_report(
-                lhs,
-                rhs,
-                categorical=args.categorical or None,
-                numeric=args.numeric or None,
-                n_buckets=args.buckets,
-                top_k=args.topK,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "updateIvfIndex":
-            import json
-
-            from ratatool_spark.operators.similarity import update_ivf_index
-
-            df = read_table(spark, args.input, fmt=args.format)
-            stats = update_ivf_index(spark, args.index, df)
-            print(json.dumps(stats))
-        elif args.command == "neymanSampler":
-            from ratatool_spark.operators.sampler import sample_neyman
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = sample_neyman(
-                df,
-                total_n=args.totalN,
-                value_col=args.valueField,
-                strata=args.strata,
-                fields=args.fields,
-                seed=args.seed,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "zorderWrite":
-            from ratatool_spark.operators.layout import (
-                hilbert_repartition,
-                zorder_repartition,
-            )
-
-            df = read_table(spark, args.input, fmt=args.format)
-            rep = (hilbert_repartition if args.curve == "hilbert"
-                   else zorder_repartition)
-            out = rep(
-                df, args.by, bits=args.bits, num_partitions=args.numPartitions
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "rendezvousShard":
-            from pyspark.sql import functions as F
-
-            from ratatool_spark.operators.layout import rendezvous_shard
-
-            df = read_table(spark, args.input, fmt=args.format)
-            out = df.withColumn(
-                "shard",
-                rendezvous_shard(F.col(args.keyField), args.shards, args.seed),
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "recordLinkage":
-            from ratatool_spark.operators.fuzzy import fellegi_sunter_links
-
-            compares = []
-            for spec in args.compare:
-                col, m, u = spec.rsplit(":", 2)
-                compares.append((col, col, float(m), float(u)))
-            lhs = read_table(spark, args.lhs, fmt=args.format)
-            rhs = read_table(spark, args.rhs, fmt=args.format)
-            out = fellegi_sunter_links(
-                lhs,
-                rhs,
-                args.lhsId,
-                args.rhsId,
-                args.blockField,
-                compares,
-                threshold=args.threshold,
-                max_block_size=args.maxBlockSize,
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "linkage":
-            import json as _json
-
-            from ratatool_spark.operators.fuzzy import (
-                fellegi_sunter_em,
-                fellegi_sunter_links,
-            )
-            from ratatool_spark.sources.shards import _read_text, _write_text
-
-            left = read_table(spark, args.leftInput, fmt=args.format)
-            right = read_table(spark, args.rightInput, fmt=args.format)
-            if args.mode in ("train", "auto"):
-                pairs = []
-                for spec in args.compare:
-                    lc, sep, rc = spec.partition(":")
-                    pairs.append((lc, rc if sep else lc))
-                model = fellegi_sunter_em(
-                    left, right, args.leftId, args.rightId,
-                    args.blockField, pairs, n_iters=args.iters,
-                    max_block_size=args.maxBlockSize,
-                )
-                if args.mode == "train":
-                    _write_text(
-                        spark, args.output,
-                        _json.dumps({
-                            "lam": model["lam"],
-                            "fields": [
-                                {"left": lc, "right": rc, "m": m, "u": u}
-                                for (lc, rc), (m, u) in zip(
-                                    pairs, model["fields"]
-                                )
-                            ],
-                        }),
-                    )
-                else:
-                    compares = [
-                        (lc, rc, m, u)
-                        for (lc, rc), (m, u) in zip(pairs, model["fields"])
-                    ]
-                    out = fellegi_sunter_links(
-                        left, right, args.leftId, args.rightId,
-                        args.blockField, compares,
-                        threshold=args.threshold,
-                        max_block_size=args.maxBlockSize,
-                    )
-                    write_table(out, args.output, mode="overwrite")
-            else:  # score
-                if args.model:
-                    meta = _json.loads(_read_text(spark, args.model))
-                    compares = [
-                        (f["left"], f["right"], f["m"], f["u"])
-                        for f in meta["fields"]
-                    ]
-                else:
-                    compares = []
-                    for spec in args.compare:
-                        parts = spec.split(":")
-                        if len(parts) != 4:
-                            raise SystemExit(
-                                "--compare in score mode expects "
-                                f"left:right:m:u, got {spec!r}"
-                            )
-                        compares.append(
-                            (parts[0], parts[1], float(parts[2]), float(parts[3]))
-                        )
-                out = fellegi_sunter_links(
-                    left, right, args.leftId, args.rightId,
-                    args.blockField, compares,
-                    threshold=args.threshold,
-                    max_block_size=args.maxBlockSize,
-                )
-                write_table(out, args.output, mode="overwrite")
-        elif args.command == "zorderAudit":
-            import json as _json
-
-            from ratatool_spark.operators.layout import (
-                row_group_skip_audit,
-                row_group_stats,
-            )
-
-            box = {}
-            for spec in args.box:
-                parts = spec.split(":")
-                if len(parts) != 3:
-                    raise SystemExit(
-                        f"--box expects col:lo:hi triples, got {spec!r}"
-                    )
-                box[parts[0]] = (float(parts[1]), float(parts[2]))
-            stats = row_group_stats(args.input, list(box))
-            n_groups, n_scanned = row_group_skip_audit(stats, box)
-            print(_json.dumps({
-                "n_row_groups": n_groups,
-                "n_scanned": n_scanned,
-                "n_pruned": n_groups - n_scanned,
-            }))
-        elif args.command == "scd2":
-            from ratatool_spark.operators.scd2 import scd2_apply, scd2_history
-
-            changes = read_table(spark, args.input, fmt=args.format)
-            kwargs = dict(
-                change_id=args.changeId,
-                collapse=not args.noCollapse,
-                keep_change_id=args.keepChangeId,
-            )
-            if args.mode == "history":
-                out = scd2_history(changes, args.key, args.ts, args.attrs, **kwargs)
-            else:
-                if not args.history:
-                    raise SystemExit("--history is required with --mode apply")
-                hist = read_table(spark, args.history, fmt=args.format)
-                out = scd2_apply(hist, changes, args.key, args.ts, args.attrs, **kwargs)
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "compactionPlan":
-            from ratatool_spark.operators.layout import compaction_plan
-
-            manifest = read_table(spark, args.input, fmt=args.format)
-            out = compaction_plan(
-                manifest, args.sizeField, args.orderField, args.targetBytes
-            )
-            write_table(out, args.output, mode="overwrite")
-        elif args.command == "logreg":
-            import json as _json
-
-            from ratatool_spark.operators.linear import (
-                lr_score,
-                train_lr_fixed_point,
-            )
-            from ratatool_spark.sources.shards import _read_text, _write_text
-
-            df = read_table(spark, args.input, fmt=args.format)
-            scales = (
-                [float(x) for x in args.scales] if args.scales else None
-            )
-            if args.mode == "train":
-                if not args.label:
-                    raise SystemExit("--label is required with --mode train")
-                w = train_lr_fixed_point(
-                    df, args.features, args.label, scales=scales,
-                    lr=args.lr, n_iters=args.iters,
-                )
-                _write_text(spark, args.model, _json.dumps({
-                    "version": 1, "features": args.features,
-                    "scales": scales or [1.0] * len(args.features),
-                    "weights": w,
-                }))
-                print(_json.dumps({"weights": w}))
-            else:
-                if not args.output:
-                    raise SystemExit("--output is required with --mode score")
-                meta = _json.loads(_read_text(spark, args.model))
-                out = lr_score(
-                    df, meta["features"], meta["scales"], meta["weights"]
-                )
-                write_table(out, args.output, mode="overwrite")
-        elif args.command == "snapshot":
-            import json as _json
-
-            from ratatool_spark.operators import snapshots as snap
-
-            def _where_box():
-                box = {}
-                for trip in args.where or []:
-                    c, lo, hi = trip.split(":")
-                    try:
-                        box[c] = (int(lo), int(hi))
-                    except ValueError:
-                        box[c] = (float(lo), float(hi))
-                return box or None
-
-            def _parse_spec(items):
-                spec = []
-                for item in items:
-                    parts = item.split(":")
-                    d = {"col": parts[0],
-                         "transform": parts[1] if len(parts) > 1
-                         else "identity"}
-                    if len(parts) > 2:
-                        d["param"] = int(parts[2])
-                    spec.append(d)
-                return spec
-
-            if args.mode == "append":
-                if not args.input:
-                    raise SystemExit("--input is required with --mode append")
-                df = read_table(spark, args.input, fmt=args.format)
-                spec = _parse_spec(args.partitionBy) if args.partitionBy \
-                    else None
-                sid = snap.commit_append(df, args.table, partition_spec=spec)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "rename-column":
-                if not args.column or not args.to:
-                    raise SystemExit(
-                        "--column and --to are required with "
-                        "--mode rename-column"
-                    )
-                sid = snap.rename_column(args.table, args.column, args.to)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "widen-column":
-                if not args.column or not args.to:
-                    raise SystemExit(
-                        "--column and --to are required with "
-                        "--mode widen-column"
-                    )
-                sid = snap.widen_column_type(args.table, args.column, args.to)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "evolve-spec":
-                if not args.spec:
-                    raise SystemExit(
-                        "--spec is required with --mode evolve-spec")
-                sid = snap.evolve_partition_spec(
-                    args.table, _parse_spec(args.spec))
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "create-branch":
-                if not args.branch:
-                    raise SystemExit(
-                        "--branch is required with --mode create-branch")
-                base = snap.create_branch(args.table, args.branch,
-                                          snapshot_id=args.snapshotId)
-                print(_json.dumps({"branch": args.branch, "base": base}))
-            elif args.mode == "append-branch":
-                if not args.input or not args.branch:
-                    raise SystemExit(
-                        "--input and --branch are required with "
-                        "--mode append-branch")
-                df = read_table(spark, args.input, fmt=args.format)
-                k = snap.commit_append_branch(df, args.table, args.branch)
-                print(_json.dumps({"branch": args.branch,
-                                   "branch_snapshot_id": k}))
-            elif args.mode == "read-branch-snapshot":
-                if not args.branch or not args.output:
-                    raise SystemExit(
-                        "--branch and --output are required with "
-                        "--mode read-branch-snapshot")
-                out = snap.read_branch_snapshot(
-                    spark, args.table, args.branch,
-                    snapshot_id=args.snapshotId)
-                write_table(out, args.output, fmt=args.format)
-                print(_json.dumps({"rows": out.count(),
-                                   "output": args.output}))
-            elif args.mode == "fast-forward":
-                if not args.branch:
-                    raise SystemExit(
-                        "--branch is required with --mode fast-forward")
-                sid = snap.fast_forward_branch(
-                    args.table, args.branch, spark=spark)
-                print(_json.dumps({"branch": args.branch,
-                                   "snapshot_id": sid}))
-            elif args.mode == "delete-branch":
-                if not args.branch:
-                    raise SystemExit(
-                        "--branch is required with --mode delete-branch")
-                existed = snap.delete_branch(args.table, args.branch)
-                print(_json.dumps({"branch": args.branch,
-                                   "existed": existed}))
-            elif args.mode == "branches":
-                print(_json.dumps(snap.table_branches(args.table)))
-            elif args.mode == "metadata":
-                if not args.metadataKind:
-                    raise SystemExit(
-                        "--metadataKind is required with --mode metadata")
-                out = snap.metadata_table(
-                    spark, args.table, args.metadataKind,
-                    snapshot_id=args.snapshotId, branch=args.branch)
-                if args.output:
-                    write_table(out, args.output, fmt=args.format)
-                    print(_json.dumps({"rows": out.count(),
-                                       "output": args.output}))
-                else:
-                    for r in out.collect():
-                        print(_json.dumps(r.asDict(), default=str))
-            elif args.mode == "tag":
-                if not args.tagName:
-                    raise SystemExit("--tagName is required with --mode tag")
-                sid = snap.create_tag(args.table, args.tagName,
-                                      snapshot_id=args.snapshotId)
-                print(_json.dumps({"tag": args.tagName, "snapshot_id": sid}))
-            elif args.mode == "untag":
-                if not args.tagName:
-                    raise SystemExit("--tagName is required with --mode untag")
-                existed = snap.delete_tag(args.table, args.tagName)
-                print(_json.dumps({"tag": args.tagName, "existed": existed}))
-            elif args.mode == "tags":
-                print(_json.dumps(snap.table_tags(args.table)))
-            elif args.mode == "count":
-                sid = args.snapshotId
-                if args.tagName is not None and sid is None:
-                    sid = snap.read_tag(args.table, args.tagName)
-                n = snap.snapshot_rowcount(args.table, sid)
-                print(_json.dumps({"rows": n, "snapshot_id":
-                                   sid or snap.current_snapshot_id(
-                                       args.table)}))
-            elif args.mode == "agg":
-                where = None
-                if args.whereEq:
-                    where = dict(
-                        p.split(":", 1) for p in args.whereEq)
-                out, md = snap.scan_aggregate(
-                    spark,
-                    args.table,
-                    minmax_cols=tuple(args.minmaxCols or ()),
-                    snapshot_id=args.snapshotId,
-                    where=where,
-                )
-                row = out.collect()[0].asDict()
-                row["from_metadata"] = md
-                print(_json.dumps(row))
-            elif args.mode == "set-bloom":
-                if not args.bloomCols:
-                    raise SystemExit(
-                        "--bloomCols is required with --mode set-bloom")
-                import os as _os
-
-                _os.makedirs(args.table, exist_ok=True)
-                snap.set_bloom_filter(
-                    args.table, args.bloomCols,
-                    bits_per_key=args.bitsPerKey)
-                print(_json.dumps(snap.table_properties(args.table)))
-            elif args.mode == "stage":
-                if not args.input or not args.branch:
-                    raise SystemExit(
-                        "--input and --branch are required with --mode stage"
-                    )
-                df = read_table(spark, args.input, fmt=args.format)
-                parent = snap.stage_append(df, args.table, args.branch)
-                print(_json.dumps({"staged_on": parent,
-                                   "branch": args.branch}))
-            elif args.mode == "read-branch":
-                if not args.branch or not args.output:
-                    raise SystemExit(
-                        "--branch and --output are required with "
-                        "--mode read-branch"
-                    )
-                out = snap.read_branch(spark, args.table, args.branch)
-                write_table(out, args.output, mode="overwrite")
-            elif args.mode == "publish":
-                if not args.branch:
-                    raise SystemExit(
-                        "--branch is required with --mode publish"
-                    )
-                sid = snap.publish_branch(spark, args.table, args.branch)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "discard":
-                if not args.branch:
-                    raise SystemExit(
-                        "--branch is required with --mode discard"
-                    )
-                existed = snap.discard_branch(args.table, args.branch)
-                print(_json.dumps({"discarded": existed}))
-            elif args.mode == "add-constraint":
-                if not args.name or not args.expr:
-                    raise SystemExit(
-                        "--name and --expr are required with "
-                        "--mode add-constraint"
-                    )
-                snap.add_constraint(spark, args.table, args.name, args.expr)
-                print(_json.dumps({"added": args.name}))
-            elif args.mode == "drop-constraint":
-                if not args.name:
-                    raise SystemExit(
-                        "--name is required with --mode drop-constraint"
-                    )
-                existed = snap.drop_constraint(args.table, args.name)
-                print(_json.dumps({"dropped": existed}))
-            elif args.mode == "delete-rows":
-                if not args.predicate:
-                    raise SystemExit(
-                        "--predicate is required with --mode delete-rows"
-                    )
-                sid = snap.delete_snapshot_rows_mor(
-                    spark, args.table, args.predicate
-                )
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "drop-partition":
-                if not args.partition:
-                    raise SystemExit(
-                        "--partition is required with --mode drop-partition"
-                    )
-                vals = {}
-                for pair in args.partition:
-                    k, v = pair.split("=", 1)
-                    vals[k] = None if v == "null" else v
-                sid = snap.drop_partition(spark, args.table, vals)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "read":
-                if args.tagName is not None and args.snapshotId is None:
-                    args.snapshotId = snap.read_tag(args.table, args.tagName)
-                if not args.output:
-                    raise SystemExit("--output is required with --mode read")
-                out = snap.read_snapshot(
-                    spark, args.table, args.snapshotId, where=_where_box()
-                )
-                write_table(out, args.output, mode="overwrite")
-            elif args.mode == "merge":
-                if not args.input or not args.keys:
-                    raise SystemExit(
-                        "--input and --keys are required with --mode merge"
-                    )
-                df = read_table(spark, args.input, fmt=args.format)
-                if args.branch:
-                    sid = snap.merge_branch(
-                        spark, args.table, args.branch, df, args.keys)
-                else:
-                    sid = snap.merge_snapshot(
-                        spark, args.table, df, args.keys)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "merge-mor":
-                if not args.input or not args.keys:
-                    raise SystemExit(
-                        "--input and --keys are required with --mode merge-mor"
-                    )
-                df = read_table(spark, args.input, fmt=args.format)
-                if args.branch:
-                    sid = snap.merge_branch_mor(
-                        spark, args.table, args.branch, df, args.keys)
-                else:
-                    sid = snap.merge_snapshot_mor(
-                        spark, args.table, df, args.keys)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "fold":
-                if args.branch:
-                    sid = snap.fold_branch_deletes(
-                        spark, args.table, args.branch)
-                else:
-                    sid = snap.fold_deletes(spark, args.table)
-                print(_json.dumps({"snapshot_id": sid,
-                                   "folded": sid is not None}))
-            elif args.mode == "changes":
-                if args.fromId is None or not args.output:
-                    raise SystemExit(
-                        "--fromId and --output are required with --mode changes"
-                    )
-                out = snap.snapshot_change_feed(
-                    spark, args.table, args.fromId, args.snapshotId
-                )
-                write_table(out, args.output, mode="overwrite")
-            elif args.mode == "mirror":
-                if not args.source or not args.checkpoint:
-                    raise SystemExit(
-                        "--source and --checkpoint are required with "
-                        "--mode mirror"
-                    )
-                from ratatool_spark.streaming.snapshots import (
-                    stream_snapshot_mirror,
-                )
-
-                q = stream_snapshot_mirror(
-                    spark, args.source, args.table, args.checkpoint
-                )
-                q.awaitTermination()
-                print(_json.dumps(
-                    {"snapshot_id": snap.current_snapshot_id(args.table)}
-                ))
-            elif args.mode == "delete":
-                box = _where_box()
-                if not box:
-                    raise SystemExit("--where is required with --mode delete")
-                if args.branch:
-                    sid = snap.delete_branch_where(
-                        spark, args.table, args.branch, box)
-                else:
-                    sid = snap.delete_snapshot_where(spark, args.table, box)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "delete-mor":
-                box = _where_box()
-                if not box:
-                    raise SystemExit(
-                        "--where is required with --mode delete-mor"
-                    )
-                if args.branch:
-                    sid = snap.delete_branch_where_mor(
-                        spark, args.table, args.branch, box)
-                else:
-                    sid = snap.delete_snapshot_where_mor(
-                        spark, args.table, box)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "cluster":
-                if not args.zorderBy:
-                    raise SystemExit("--zorderBy is required with --mode cluster")
-                if args.branch:
-                    sid = snap.cluster_branch(
-                        spark, args.table, args.branch, args.zorderBy,
-                        curve=args.curve)
-                else:
-                    sid = snap.cluster_snapshot(
-                        spark, args.table, args.zorderBy, curve=args.curve)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "compact":
-                if args.branch:
-                    sid = snap.compact_branch(
-                        spark, args.table, args.branch, args.targetBytes)
-                else:
-                    sid = snap.compact_snapshot(
-                        spark, args.table, args.targetBytes)
-                print(_json.dumps({"snapshot_id": sid,
-                                   "compacted": sid is not None}))
-            elif args.mode == "rollback":
-                if args.snapshotId is None:
-                    raise SystemExit(
-                        "--snapshotId is required with --mode rollback"
-                    )
-                sid = snap.rollback_snapshot(args.table, args.snapshotId)
-                print(_json.dumps({"snapshot_id": sid}))
-            elif args.mode == "expire":
-                dead = snap.expire_snapshots(
-                    args.table, keep_last=args.keepLast, delete=not args.dryRun
-                )
-                print(_json.dumps({"n_removed": len(dead), "removed": dead}))
-            elif args.mode == "vacuum":
-                dead = snap.vacuum_orphans(
-                    args.table,
-                    delete=not args.dryRun,
-                    older_than=args.olderThan,
-                )
-                print(_json.dumps({"n_removed": len(dead), "removed": dead}))
-            else:
-                out = snap.snapshot_log(spark, args.table)
-                if args.output:
-                    write_table(out, args.output, mode="overwrite")
-                else:
-                    for r in out.orderBy("snapshot_id").collect():
-                        print(_json.dumps(r.asDict()))
-        elif args.command == "decontaminate":
-            from pyspark.sql import functions as F
-
-            from ratatool_spark.operators.dedup import minhash_lsh_cross_pairs
-
-            df = read_table(spark, args.input, fmt=args.format)
-            bench = read_table(spark, args.benchmark, fmt=args.format)
-            flagged = (
-                minhash_lsh_cross_pairs(
-                    df,
-                    bench,
-                    text_col=args.textField,
-                    id_col=args.idField,
-                    num_hashes=args.numHashes,
-                    bands=args.bands,
-                    min_est_jaccard=args.minEstJaccard,
-                )
-                .select(F.col("left_id").alias(args.idField))
-                .distinct()
-            )
-            out = df.join(flagged, args.idField, "left_anti")
-            write_table(out, args.output, mode="overwrite")
-        return 0
+        out = _COMMANDS[args.command][2](spark, args)
+        if isinstance(out, DataFrame):
+            _write(out, args.output)
+            return 0
+        return out or 0
     finally:
         if not preexisting:  # don't tear down a session we joined
             spark.stop()

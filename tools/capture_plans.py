@@ -8,9 +8,11 @@ Produces OUTDIR/<query><SUFFIX>.txt (e.g. plans/r11/snapshot_mor_merge_before.tx
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:

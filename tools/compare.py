@@ -20,9 +20,11 @@ only works under our builder's confs must fail here too.
 from __future__ import annotations
 
 import math
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def norm_cell(v):

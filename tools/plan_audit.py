@@ -11,10 +11,12 @@ PERF.md — regenerate after plan-affecting changes:
 
 from __future__ import annotations
 
+import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def strip_initial_plans(plan: str) -> str:
@@ -126,6 +128,31 @@ def audit(plan: str) -> dict:
     }
 
 
+def unpartitioned_windows(jvm, plan) -> int:
+    """``WindowExec`` nodes with an empty partition spec (each one a
+    single-task stage) in a Java physical plan: the tree under AQE, query
+    stages, subqueries and cached builds, each cached build counted once."""
+    n, seen, stack = 0, set(), [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif name == "InMemoryTableScanExec":
+            build = node.relation().cacheBuilder()
+            if jvm.System.identityHashCode(build) not in seen:
+                seen.add(jvm.System.identityHashCode(build))
+                stack.append(build.cachedPlan())
+        else:
+            if name == "WindowExec":
+                n += node.partitionSpec().isEmpty()
+            for seq in (node.children(), node.subqueries()):
+                stack.extend(seq.apply(i) for i in range(seq.size()))
+    return n
+
+
 def main() -> None:
     import __spark_entry__ as entry_mod
     from ratatool_spark.session import get_spark
@@ -136,8 +163,9 @@ def main() -> None:
     for name, fn in entry_mod.queries().items():
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            a = audit(plan)
+            jplan = df._jdf.queryExecution().executedPlan()
+            a = audit(jplan.toString())
+            a["win1"] = unpartitioned_windows(spark._jvm, jplan)
             a["out_cols"] = len(df.schema)
             a["out_heavy"] = sum(
                 1
@@ -155,18 +183,28 @@ def main() -> None:
         "shuffle exchanges / broadcast exchanges / join strategies /",
         "scan column counts (pruning evidence) / scans with pushed filters /",
         "Python-boundary operators (Arrow-batched; 0 = fully JVM) /",
-        "whole-stage-codegen span count.",
+        "whole-stage-codegen span count. `win` counts window operators;",
+        "`win1` counts those with no partition spec.",
         "",
-        "| query | shuffles | bcast | BHJ | SMJ | NLJ | win | scan cols | pushed | py | wscg |",
-        "|---|---|---|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | bcast | BHJ | SMJ | NLJ | win | win1 | scan cols "
+        "| pushed | py | wscg |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, a in rows:
         scans = ",".join(str(c) for c in a["scans"]) or "-"
         lines.append(
             f"| {name} | {a['shuffles']} | {a['broadcasts']} | {a['bhj']} | "
-            f"{a['smj']} | {a['nested_loop']} | {a['windows']} | {scans} | "
-            f"{a['pushed']} | {a['python']} | {a['codegen']} |"
+            f"{a['smj']} | {a['nested_loop']} | {a['windows']} | {a['win1']} | "
+            f"{scans} | {a['pushed']} | {a['python']} | {a['codegen']} |"
         )
+    w1 = [f"`{n}` ({a['win1']})" for n, a in rows if a["win1"]]
+    lines += [
+        "",
+        "**Unpartitioned windows** (`win1`): a `WindowExec` with no "
+        "partition spec moves all its input to one task (Spark logs "
+        "`No Partition Defined for Window operation`). Queries with one: "
+        f"{', '.join(w1) or 'none'}.",
+    ]
     nl = [(n, a["nested_loop"]) for n, a in rows if a["nested_loop"]]
     lines += [
         "",
@@ -211,7 +249,7 @@ def main() -> None:
     ] + [
         f"| {n} | {a['out_cols']} | {a['out_heavy']} |" for n, a in wide
     ] + [""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(rows)} queries)")
     spark.stop()
