@@ -30,11 +30,13 @@ def _csv(s: str) -> list[str]:
 
 
 def _split(spec: str, n: int, flag: str, shape: str, sep: str = ":",
-           maxsplit: int = -1, blanks: bool = False) -> list[str]:
+           maxsplit: int = -1, blanks: bool = False,
+           right: bool = False) -> list[str]:
     """One ``flag`` value as ``n`` fields (``maxsplit=1``: the last field
-    keeps further separators; ``blanks``: empty fields allowed), or exit 1
-    naming the flag and the shape it expects."""
-    parts = spec.split(sep, maxsplit)
+    keeps further separators, the first one with ``right``; ``blanks``:
+    empty fields allowed), or exit 1 naming the flag and the shape it
+    expects."""
+    parts = (spec.rsplit if right else spec.split)(sep, maxsplit)
     if len(parts) != n or not (blanks or all(parts)):
         raise SystemExit(f"{flag} expects {shape}, got {spec!r}")
     return parts
@@ -717,8 +719,9 @@ _command(
     _arg("--seed", type=int, default=0),
     _FMT,
     run=_op("operators.corpus:mixture_sample",
-            lambda a: {k: float(v) for k, _, v in
-                       (kv.partition("=") for kv in _csv(a.shares))},
+            lambda a: {k: float(v) for k, v in
+                       (_split(kv, 2, "--shares", "source=share pairs", sep="=",
+                               maxsplit=1, blanks=True) for kv in _csv(a.shares))},
             source_col="sourceField", dice_cols="diceFields", seed="seed"),
 )
 
@@ -1338,7 +1341,8 @@ _command(
     _FMT,
     run=_op("operators.fuzzy:fellegi_sunter_links", "lhsId", "rhsId", "blockField",
             lambda a: [(col, col, float(m), float(u)) for col, m, u in
-                       (spec.rsplit(":", 2) for spec in a.compare)],
+                       (_split(spec, 3, "--compare", "field:m:u", maxsplit=2,
+                               blanks=True, right=True) for spec in a.compare)],
             inputs=("lhs", "rhs"), threshold="threshold",
             max_block_size="maxBlockSize"),
 )

@@ -22,6 +22,14 @@ Each operator keeps only its own index build and score. Python also runs
 in the Bloom filter build/probe and the embedding GEMM blocks; everything
 else is built-in expressions.
 
+The MinHash operators (self and cross pairs, the persisted signature
+tables and their queries, incremental and streaming dedup) share one
+pipeline: :func:`_shingle_hashes` (explode word shingles → one 64-bit
+hash each) → :func:`_signatures` (k universal-hash ``min`` aggregates in
+one groupBy) → :func:`_band_pairs` (the equi-join on (band, band-hash),
+then the matching-signature fraction ``est_jaccard``). Their exact
+verify step is :func:`_shingle_sets` → :func:`_verified`.
+
 At 100 TB the shape that matters: every strategy reduces to
 (shuffle-by-small-key, aggregate) or (explode, shuffle-by-token, count) —
 no cross joins except within LSH buckets, and bucket width is tunable.
@@ -85,6 +93,38 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
+def _shingle_hashes(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, hasher: str
+) -> DataFrame:
+    """(``id_col``, ``__h``): one row per doc shingle with its 64-bit
+    string hash — the input of the MinHash signatures, the exact-Jaccard
+    verify sets, the n-gram Jaccard index and SimHash."""
+    return df.select(
+        F.col(id_col),
+        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
+    ).select(F.col(id_col), text_hash64(F.col("__s"), hasher).alias("__h"))
+
+
+def _signatures(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
+    """(``id_col``, sig_0..sig_{k-1}) from a :func:`_shingle_hashes`
+    frame: ``h mod p`` projected once, then k ``min`` aggregates of
+    universal-hash permutations in a single groupBy."""
+    # F.expr per signature, not nested F.* builders: each F.* call is a
+    # py4j round-trip, so k sigs × ~8 builder calls dominate warm plan
+    # CONSTRUCTION (the _adc_dist pathology; ~0.5 s at k=64). One SQL
+    # string per sig parses JVM-side into the identical Catalyst tree —
+    # int×bigint promotion and % match the Column operators exactly.
+    aggs = [
+        F.expr(f"min(({a} * __h + {b}) % {MINHASH_P}) AS sig_{i}")
+        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+    ]
+    return (
+        sh.select(F.col(id_col), (F.col("__h") % MINHASH_P).alias("__h"))
+        .groupBy(id_col)
+        .agg(*aggs)
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -98,22 +138,8 @@ def minhash_signatures(
     the Spark-native fast path), then k ``min`` aggregates of
     universal-hash permutations in a single groupBy — the default is
     fully reproducible in any SQL engine."""
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s")
-    ).select(
-        F.col(id_col),
-        (text_hash64(F.col("__s"), hasher) % MINHASH_P).alias("__h"),
-    )
-    # F.expr per signature, not nested F.* builders: each F.* call is a
-    # py4j round-trip, so k sigs × ~8 builder calls dominate warm plan
-    # CONSTRUCTION (the _adc_dist pathology; ~0.5 s at k=64). One SQL
-    # string per sig parses JVM-side into the identical Catalyst tree —
-    # int×bigint promotion and % match the Column operators exactly.
-    aggs = [
-        F.expr(f"min(({a} * __h + {b}) % {MINHASH_P}) AS sig_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    sh = _shingle_hashes(df, text_col, id_col, shingle_n, hasher)
+    return _signatures(sh, id_col, num_hashes)
 
 
 def _banded(
@@ -122,9 +148,7 @@ def _banded(
     """Explode a signature frame into (id, sig_*, band, bh) LSH-band rows.
 
     ``bh`` hashes the band's signature slice; colliding (band, bh) keys
-    are the LSH candidates. Shared by the within-corpus self-join
-    (:func:`minhash_lsh_pairs`) and the cross-corpus incremental join
-    (:func:`dedup_against`)."""
+    are the LSH candidates of :func:`_band_pairs`."""
     rows_per_band = num_hashes // bands
     # one F.expr per band (not ~10 F.* py4j round-trips per band): the
     # SQL parses into the identical struct(band, portable-hash64) tree —
@@ -150,6 +174,56 @@ def _banded(
     ).select(id_col, *[f"sig_{i}" for i in range(num_hashes)], "__b.band", "__b.bh")
 
 
+def _band_pairs(
+    ls: DataFrame,
+    rs: DataFrame | None,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    a: str,
+    b: str,
+    min_est_jaccard: float,
+) -> DataFrame:
+    """(``a``, ``b``, est_jaccard): banded LSH candidates between two
+    signature frames — docs colliding on ≥1 (band, band-hash) key, with
+    ``est_jaccard`` = the fraction of the k signatures that match, kept
+    at ≥ ``min_est_jaccard`` when that is > 0. ``rs=None`` self-joins
+    ``ls`` with ``l.id < r.id`` inside the join condition (each unordered
+    pair once, no self pairs); otherwise ids may overlap between sides."""
+    if num_hashes % bands != 0:
+        raise ValueError("bands must divide num_hashes")
+    on = (F.col("l.band") == F.col("r.band")) & (F.col("l.bh") == F.col("r.bh"))
+    if rs is None:
+        # persist: the two self-join sides have different physical shapes
+        # (broadcast vs probe), so without caching the whole
+        # shingle→md5→k-min signature pipeline runs once per side.
+        # n×(k+1) longs — tiny at any corpus scale, spills rather than OOMs.
+        ls = _persist(ls)
+        on = on & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    lb = _banded(ls, id_col, num_hashes, bands)
+    rb = lb if rs is None else _banded(rs, id_col, num_hashes, bands)
+    pairs = (
+        lb.alias("l")
+        .join(rb.alias("r"), on)
+        .select(
+            F.col(f"l.{id_col}").alias(a),
+            F.col(f"r.{id_col}").alias(b),
+            *[
+                F.expr(f"CAST((l.sig_{i} = r.sig_{i}) AS INT) AS m_{i}")
+                for i in range(num_hashes)
+            ],
+        )
+        .distinct()
+    )
+    est = F.expr(
+        "0 + " + " + ".join(f"m_{i}" for i in range(num_hashes))
+    ) / F.lit(float(num_hashes))
+    out = pairs.select(a, b, est.alias("est_jaccard"))
+    if min_est_jaccard > 0:
+        out = out.where(F.col("est_jaccard") >= min_est_jaccard)
+    return out
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -167,83 +241,10 @@ def minhash_lsh_pairs(
     self-join is on (band_index, band_hash) — each band is a tiny key, so
     this is shuffle-by-band-hash, never a cross join.
     """
-    if num_hashes % bands != 0:
-        raise ValueError("bands must divide num_hashes")
-    rows_per_band = num_hashes // bands
-    # persist: the two self-join sides have different physical shapes
-    # (broadcast vs probe), so without caching the whole shingle→md5→k-min
-    # signature pipeline runs once per side. n×(k+1) longs — tiny at any
-    # corpus scale, spills rather than OOMs.
-    sigs = _persist(
-        minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, hasher)
+    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, hasher)
+    return _band_pairs(
+        sigs, None, id_col, num_hashes, bands, "id_a", "id_b", min_est_jaccard
     )
-    banded = _banded(sigs, id_col, num_hashes, bands)
-
-    l = banded.alias("l")
-    r = banded.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            *[
-                F.expr(f"CAST((l.sig_{i} = r.sig_{i}) AS INT) AS m_{i}")
-                for i in range(num_hashes)
-            ],
-        )
-        .distinct()
-    )
-    est = F.expr(
-        "0 + " + " + ".join(f"m_{i}" for i in range(num_hashes))
-    ) / F.lit(float(num_hashes))
-    out = pairs.select("id_a", "id_b", est.alias("est_jaccard"))
-    if min_est_jaccard > 0:
-        out = out.where(F.col("est_jaccard") >= min_est_jaccard)
-    return out
-
-
-def _cross_pairs_from_sigs(
-    ls: DataFrame,
-    rs: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    min_est_jaccard: float,
-) -> DataFrame:
-    """(left_id, right_id, est_jaccard) from two SIGNATURE frames — the
-    banded cross-join core shared by :func:`minhash_lsh_cross_pairs`
-    (signatures computed inline) and :func:`query_minhash_index`
-    (right-side signatures loaded from a persisted artifact)."""
-    lb = _banded(ls, id_col, num_hashes, bands).alias("l")
-    rb = _banded(rs, id_col, num_hashes, bands).alias("r")
-    pairs = (
-        lb.join(
-            rb,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("left_id"),
-            F.col(f"r.{id_col}").alias("right_id"),
-            *[
-                F.expr(f"CAST((l.sig_{i} = r.sig_{i}) AS INT) AS m_{i}")
-                for i in range(num_hashes)
-            ],
-        )
-        .distinct()
-    )
-    est = F.expr(
-        "0 + " + " + ".join(f"m_{i}" for i in range(num_hashes))
-    ) / F.lit(float(num_hashes))
-    out = pairs.select("left_id", "right_id", est.alias("est_jaccard"))
-    if min_est_jaccard > 0:
-        out = out.where(F.col("est_jaccard") >= min_est_jaccard)
-    return out
 
 
 def minhash_lsh_cross_pairs(
@@ -272,13 +273,50 @@ def minhash_lsh_cross_pairs(
     and cross- variants); no ``a < b`` constraint — ids live in
     different namespaces. Filter ``est_jaccard`` and anti-join the left
     corpus against the flagged ids to decontaminate."""
-    if num_hashes % bands != 0:
-        raise ValueError("bands must divide num_hashes")
     ls = minhash_signatures(left, text_col, id_col, num_hashes, shingle_n, hasher)
     rs = minhash_signatures(right, text_col, id_col, num_hashes, shingle_n, hasher)
-    return _cross_pairs_from_sigs(
-        ls, rs, id_col, num_hashes, bands, min_est_jaccard
+    return _band_pairs(
+        ls, rs, id_col, num_hashes, bands, "left_id", "right_id", min_est_jaccard
     )
+
+
+def _reject_duplicate_ids(df: DataFrame, id_col: str, op: str) -> None:
+    """Raise when two rows of ``df`` share an id: signatures group
+    shingles by id, so distinct docs sharing one would silently merge
+    into one combined-shingle signature. One count job."""
+    got = df.agg(
+        F.count(F.col(id_col)).alias("n"),
+        F.count_distinct(F.col(id_col)).alias("nd"),
+    ).first()
+    if got["nd"] < got["n"]:
+        raise ValueError(
+            f"{op}: {got['n'] - got['nd']} duplicate id row(s) in "
+            f"{id_col!r} — distinct docs sharing an id would merge into one "
+            "combined-shingle signature; dedup the input first"
+        )
+
+
+def _write_signature_table(
+    df: DataFrame, path: str, mode: str, op: str, sidecar: str, meta: dict,
+    sort_keys: bool = False,
+) -> None:
+    """The signature-table writer of :func:`build_minhash_index` and
+    :func:`save_signatures`: reject duplicate ids, write parquet rows
+    (id, sig_0..sig_{k-1}) under ``meta``'s parameters, then the JSON
+    ``sidecar`` holding ``meta``."""
+    import json
+
+    from ratatool_spark.sources.shards import _join, _write_text
+
+    id_col = meta["id_col"]
+    _reject_duplicate_ids(df, id_col, op)
+    sigs = minhash_signatures(
+        df, meta["text_col"], id_col, meta["num_hashes"], meta["shingle_n"],
+        meta["hasher"],
+    )
+    sigs.write.mode(mode).parquet(path)
+    text = json.dumps(meta, sort_keys=sort_keys)
+    _write_text(df.sparkSession, _join(path, sidecar), text)
 
 
 def build_minhash_index(
@@ -298,29 +336,30 @@ def build_minhash_index(
     batch or candidate corpus joins against the stored (n × (k+1)-long)
     table without ever rescanning the reference text. Parquet rows
     (id, sig_0..sig_{k-1}) plus a ``_minhash.json`` sidecar pinning the
-    parameters, so a query can never band differently than the build."""
-    import json
-
-    from ratatool_spark.sources.shards import _join, _write_text
-
+    parameters, so a query can never band differently than the build.
+    Rows of ``df`` sharing an id raise ``ValueError``."""
     if num_hashes % bands != 0:
         raise ValueError("bands must divide num_hashes")
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, hasher)
-    sigs.write.mode(mode).parquet(path)
-    _write_text(
-        df.sparkSession,
-        _join(path, "_minhash.json"),
-        json.dumps(
-            {
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "shingle_n": shingle_n,
-                "hasher": hasher,
-                "id_col": id_col,
-                "text_col": text_col,
-            }
-        ),
+    meta = {
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "shingle_n": shingle_n,
+        "hasher": hasher,
+        "id_col": id_col,
+        "text_col": text_col,
+    }
+    _write_signature_table(
+        df, path, mode, "build_minhash_index", "_minhash.json", meta
     )
+
+
+def _load_index_meta(spark, path: str) -> dict:
+    """The ``_minhash.json`` sidecar of the index at ``path``."""
+    import json
+
+    from ratatool_spark.sources.shards import _join, _read_text
+
+    return json.loads(_read_text(spark, _join(path, "_minhash.json")))
 
 
 def update_minhash_index(spark, path: str, new_docs: DataFrame) -> dict:
@@ -335,23 +374,9 @@ def update_minhash_index(spark, path: str, new_docs: DataFrame) -> dict:
     otherwise silently collapse into one bogus combined-shingle
     signature. ``update(A); update(B)`` is row-identical to one build
     over the union — pinned by the ``minhash_index_incremental`` gate."""
-    import json
-
-    from ratatool_spark.sources.shards import _join, _read_text
-
-    meta = json.loads(_read_text(spark, _join(path, "_minhash.json")))
+    meta = _load_index_meta(spark, path)
     id_col = meta["id_col"]
-    intra = new_docs.agg(
-        F.count(F.col(id_col)).alias("n"),
-        F.count_distinct(F.col(id_col)).alias("nd"),
-    ).first()
-    if intra["nd"] < intra["n"]:
-        raise ValueError(
-            "update_minhash_index: new_docs contains "
-            f"{intra['n'] - intra['nd']} duplicate id row(s) — distinct "
-            "docs sharing an id would merge into one combined-shingle "
-            "signature; dedup the batch first"
-        )
+    _reject_duplicate_ids(new_docs, id_col, "update_minhash_index")
     sigs = minhash_signatures(
         new_docs,
         meta["text_col"],
@@ -402,22 +427,14 @@ def query_minhash_index(
     fresh under the sidecar parameters; the reference side is the stored
     signature table (the reference TEXT is never rescanned). Identical
     output to :func:`minhash_lsh_cross_pairs` over the original corpora."""
-    import json
-
-    from ratatool_spark.sources.shards import _join, _read_text
-
-    meta = json.loads(_read_text(spark, _join(path, "_minhash.json")))
+    meta = _load_index_meta(spark, path)
+    k, id_col = meta["num_hashes"], meta["id_col"]
     qs = minhash_signatures(
-        queries,
-        meta["text_col"],
-        meta["id_col"],
-        meta["num_hashes"],
-        meta["shingle_n"],
-        meta["hasher"],
+        queries, meta["text_col"], id_col, k, meta["shingle_n"], meta["hasher"]
     )
-    rs = spark.read.parquet(path)
-    return _cross_pairs_from_sigs(
-        qs, rs, meta["id_col"], meta["num_hashes"], meta["bands"], min_est_jaccard
+    return _band_pairs(
+        qs, spark.read.parquet(path), id_col, k, meta["bands"],
+        "left_id", "right_id", min_est_jaccard,
     )
 
 
@@ -448,10 +465,9 @@ def ngram_jaccard_pairs(
     the affected pairs (per-doc sizes still count pruned shingles as
     non-shared), so it never promotes a pair across the threshold —
     pruning can only drop candidates, never invent them."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
-    ).select("id", text_hash64(F.col("__s"), hasher).alias("s"))
+    sh = _shingle_hashes(df, text_col, id_col, shingle_n, hasher).select(
+        F.col(id_col).alias("id"), F.col("__h").alias("s")
+    )
     # grouping on the 60-bit shingle hash instead of the shingle string:
     # same pairs (collisions are identical on both sides of any comparison
     # because the hash is deterministic), ~3x narrower shuffle.
@@ -723,27 +739,39 @@ def jaccard_verify(
     joins the sets onto the candidates — cost O(|candidates|·doc_len), so
     at 100 TB the quadratic term is confined to whatever LSH emitted.
     Set size is bounded by document length, so rows stay executor-sized."""
+    sh = _shingle_hashes(df, text_col, id_col, shingle_n, hasher)
     # persisted: joined twice (a and b side of every candidate pair)
-    sets = _persist(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
-        )
-        .select("id", text_hash64(F.col("__s"), hasher).alias("s"))
+    sets = _persist(_shingle_sets(sh, id_col))
+    return _verified(pairs.select("id_a", "id_b"), "id_a", "id_b", sets, sets)
+
+
+def _shingle_sets(
+    sh: DataFrame, id_col: str, ids: DataFrame | None = None
+) -> DataFrame:
+    """(id, ss): each doc's distinct shingle-hash set from a
+    :func:`_shingle_hashes` frame — only the docs in ``ids`` (a left-semi
+    join before the aggregate) when given."""
+    if ids is not None:
+        sh = sh.join(ids, id_col, "left_semi")
+    return (
+        sh.select(F.col(id_col).alias("id"), F.col("__h").alias("s"))
         .groupBy("id")
         .agg(F.collect_set("s").alias("ss"))
     )
+
+
+def _verified(
+    pairs: DataFrame, a: str, b: str, sets_a: DataFrame, sets_b: DataFrame,
+    *keep: str,
+) -> DataFrame:
+    """(``a``, ``b``, ``*keep``, jaccard): exact Jaccard of each candidate
+    pair, from the :func:`_shingle_sets` of its ``a`` and ``b`` docs."""
     inter = F.size(F.array_intersect(F.col("a.ss"), F.col("b.ss")))
     union = F.size(F.col("a.ss")) + F.size(F.col("b.ss")) - inter
     return (
-        pairs.select("id_a", "id_b")
-        .join(sets.alias("a"), F.col("id_a") == F.col("a.id"))
-        .join(sets.alias("b"), F.col("id_b") == F.col("b.id"))
-        .select(
-            "id_a",
-            "id_b",
-            (inter / union.cast("double")).alias("jaccard"),
-        )
+        pairs.join(sets_a.alias("a"), F.col(a) == F.col("a.id"))
+        .join(sets_b.alias("b"), F.col(b) == F.col("b.id"))
+        .select(a, b, *keep, (inter / union.cast("double")).alias("jaccard"))
     )
 
 
@@ -763,22 +791,8 @@ def save_signatures(
     once per arriving batch). Writes parquet (id, sig_0..sig_{k-1}) plus
     a ``_signatures.json`` sidecar pinning (num_hashes, shingle_n,
     hasher, text/id cols) so a mismatched reuse fails loudly instead of
-    silently degrading recall. Returns the meta dict."""
-    import json
-
-    from ratatool_spark.sources.shards import _join, _write_text
-
-    sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
-    ).select(F.col(id_col), text_hash64(F.col("__s"), hasher).alias("__sh"))
-    aggs = [
-        F.min(
-            (F.lit(a) * (F.col("__sh") % MINHASH_P) + F.lit(b)) % F.lit(MINHASH_P)
-        ).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    sh.groupBy(id_col).agg(*aggs).write.mode(mode).parquet(path)
+    silently degrading recall. Rows of ``df`` sharing an id raise
+    ``ValueError``. Returns the meta dict."""
     meta = {
         "num_hashes": num_hashes,
         "shingle_n": shingle_n,
@@ -786,7 +800,10 @@ def save_signatures(
         "text_col": text_col,
         "id_col": id_col,
     }
-    _write_text(df.sparkSession, _join(path, "_signatures.json"), json.dumps(meta, sort_keys=True))
+    _write_signature_table(
+        df, path, mode, "save_signatures", "_signatures.json", meta,
+        sort_keys=True,
+    )
     return meta
 
 
@@ -836,28 +853,10 @@ def dedup_against(
     def shingled(df):
         # one shingle+hash pass per side, shared by the signature AND the
         # verify-set aggregations (the two heaviest subplans)
-        return _persist(
-            df.select(
-                F.col(id_col),
-                F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
-            ).select(F.col(id_col), text_hash64(F.col("__s"), hasher).alias("__sh"))
-        )
+        return _persist(_shingle_hashes(df, text_col, id_col, shingle_n, hasher))
 
     sh_new = shingled(new_df)
-
-    def sigs_of(sh):
-        # F.expr per signature — one py4j call instead of ~9 (see
-        # minhash_signatures); parses into the identical Catalyst tree
-        aggs = [
-            F.expr(
-                f"min(({a} * (__sh % {MINHASH_P}) + {b}) % {MINHASH_P})"
-                f" AS sig_{i}"
-            )
-            for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-        ]
-        return sh.groupBy(id_col).agg(*aggs)
-
-    sigs_new = _persist(sigs_of(sh_new))
+    sigs_new = _persist(_signatures(sh_new, id_col, num_hashes))
     if corpus_sigs is not None:
         want = {f"sig_{i}" for i in range(num_hashes)} | {id_col}
         have = set(corpus_sigs.columns)
@@ -871,66 +870,29 @@ def dedup_against(
         sigs_corp = corpus_sigs
     else:
         sh_corp = shingled(corpus_df)
-        sigs_corp = _persist(sigs_of(sh_corp))
-    ln = _banded(sigs_new, id_col, num_hashes, bands).alias("l")
-    rc = _banded(sigs_corp, id_col, num_hashes, bands).alias("r")
-    cand = (
-        ln.join(
-            rc,
-            (F.col("l.band") == F.col("r.band")) & (F.col("l.bh") == F.col("r.bh")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_new"),
-            F.col(f"r.{id_col}").alias("id_corpus"),
-            *[
-                F.expr(f"CAST((l.sig_{i} = r.sig_{i}) AS INT) AS m_{i}")
-                for i in range(num_hashes)
-            ],
-        )
-        .distinct()
+        sigs_corp = _persist(_signatures(sh_corp, id_col, num_hashes))
+    out = _band_pairs(
+        sigs_new, sigs_corp, id_col, num_hashes, bands, "id_new", "id_corpus",
+        0.0 if verify else threshold,
     )
-    est = F.expr(
-        "0 + " + " + ".join(f"m_{i}" for i in range(num_hashes))
-    ) / F.lit(float(num_hashes))
-    out = cand.select("id_new", "id_corpus", est.alias("est_jaccard"))
     if not verify:
-        return out.where(F.col("est_jaccard") >= threshold) if threshold > 0 else out
+        return out
     # three consumers below (two id-projections + the final join) — persist
     # so the banded join runs once
     out = _persist(out)
-
-    def shingle_sets(sh, cand_ids):
-        # semi-join to the candidate ids BEFORE aggregating: only LSH
-        # candidates need verify sets — without this the corpus side
-        # would shuffle its entire shingle stream into per-doc arrays,
-        # breaking the "cost scales with the new batch" property
-        return (
-            sh.join(cand_ids, id_col, "left_semi")
-            .select(F.col(id_col).alias("id"), F.col("__sh").alias("s"))
-            .groupBy("id")
-            .agg(F.collect_set("s").alias("ss"))
-        )
-
+    # semi-join to the candidate ids BEFORE aggregating: only LSH
+    # candidates need verify sets — without this the corpus side would
+    # shuffle its entire shingle stream into per-doc arrays, breaking the
+    # "cost scales with the new batch" property
     ids_new = out.select(F.col("id_new").alias(id_col)).distinct()
     ids_corp = out.select(F.col("id_corpus").alias(id_col)).distinct()
     if sh_corp is None:
         # precomputed-signature path: shingle ONLY the candidate corpus
         # docs (a semi-joined slice) — the full corpus text is never read
         sh_corp = shingled(corpus_df.join(ids_corp, id_col, "left_semi"))
-    sn = shingle_sets(sh_new, ids_new).alias("a")
-    sc = shingle_sets(sh_corp, ids_corp).alias("b")
-    inter = F.size(F.array_intersect(F.col("a.ss"), F.col("b.ss")))
-    union = F.size(F.col("a.ss")) + F.size(F.col("b.ss")) - inter
-    verified = (
-        out.join(sn, F.col("id_new") == F.col("a.id"))
-        .join(sc, F.col("id_corpus") == F.col("b.id"))
-        .select(
-            "id_new",
-            "id_corpus",
-            "est_jaccard",
-            (inter / union.cast("double")).alias("jaccard"),
-        )
-    )
+    sn = _shingle_sets(sh_new, id_col, ids_new)
+    sc = _shingle_sets(sh_corp, id_col, ids_corp)
+    verified = _verified(out, "id_new", "id_corpus", sn, sc, "est_jaccard")
     return verified.where(F.col("jaccard") >= threshold) if threshold > 0 else verified
 
 
@@ -1314,17 +1276,14 @@ def simhash(
     once; for each bit j, sum ±1 according to bit j of the shingle hash;
     fingerprint bit j = (sum > 0). ``bits`` aggregate expressions in one
     groupBy — entirely JVM-side."""
-    sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
-    ).select(F.col(id_col), text_hash64(F.col("__s"), hasher).alias("h"))
+    sh = _shingle_hashes(df, text_col, id_col, shingle_n, hasher)
     # F.expr strings, not nested F.* builders: `bits` aggregates × ~9
     # py4j round-trips each dominated warm plan CONSTRUCTION (~2 s at
     # 64 bits — the _adc_dist pathology); the SQL parses JVM-side into
     # the identical CASE WHEN / shiftright / & trees
     bit_sums = [
         F.expr(
-            f"sum(CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
+            f"sum(CASE WHEN (shiftright(__h, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
             f" AS b_{j}"
         )
         for j in range(bits)

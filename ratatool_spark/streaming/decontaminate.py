@@ -34,13 +34,15 @@ def stream_decontaminate(
     ``contaminated`` column (audit mode); ``drop=True`` anti-joins the
     flagged ids away (ingest mode). Returns the started StreamingQuery;
     read results with ``spark.read.parquet(output_path)``."""
-    import json
-
     from ratatool_spark.cache import persist_tracked
-    from ratatool_spark.sources.shards import _join, _read_text
+    from ratatool_spark.operators.dedup import (
+        _band_pairs,
+        _load_index_meta,
+        minhash_signatures,
+    )
 
     spark = stream_df.sparkSession
-    meta = json.loads(_read_text(spark, _join(index_path, "_minhash.json")))
+    meta = _load_index_meta(spark, index_path)
     id_col = meta["id_col"]
     # pin the signature table once — foreachBatch re-evaluates referenced
     # lineages per micro-batch, and the index parquet scan is the same
@@ -48,11 +50,6 @@ def stream_decontaminate(
     sigs = persist_tracked(spark.read.parquet(index_path))
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from ratatool_spark.operators.dedup import (
-            _cross_pairs_from_sigs,
-            minhash_signatures,
-        )
-
         qs = minhash_signatures(
             batch_df,
             meta["text_col"],
@@ -62,9 +59,9 @@ def stream_decontaminate(
             meta["hasher"],
         )
         flagged = (
-            _cross_pairs_from_sigs(
+            _band_pairs(
                 qs, sigs, id_col, meta["num_hashes"], meta["bands"],
-                min_est_jaccard,
+                "left_id", "right_id", min_est_jaccard,
             )
             .select(F.col("left_id").alias(id_col))
             .distinct()

@@ -230,6 +230,11 @@ def test_cli_snapshot_maintenance_modes(spark, tmp_path):
     (["snapshot", "--mode", "drop-partition", "--partition", "zz"],
      "--partition"),
     (["snapshot", "--mode", "agg", "--whereEq", "z"], "--whereEq"),
+    (["recordLinkage", "--lhs", "{in}", "--rhs", "{in}", "--output", "{out}",
+      "--lhsId", "id", "--rhsId", "id", "--blockField", "g",
+      "--compare", "phone:0.9"], "--compare"),
+    (["mixtureSample", "--input", "{in}", "--output", "{out}",
+      "--shares", "web"], "--shares"),
 ])
 def test_malformed_pair_flags_exit_with_message(spark, tmp_path, argv, flag):
     """Each malformed ``a:b`` value exits 1 naming the flag and the value,
@@ -242,8 +247,12 @@ def test_malformed_pair_flags_exit_with_message(spark, tmp_path, argv, flag):
     )
     main(["snapshot", "--mode", "append", "--table", tbl,
           "--input", str(tmp_path / "in"), "--partitionBy", "g"])
+    args = [a.replace("{in}", str(tmp_path / "in"))
+            .replace("{out}", str(tmp_path / "out")) for a in argv]
+    if argv[0] == "snapshot":
+        args += ["--table", tbl]
     with pytest.raises(SystemExit) as e:
-        main([*argv, "--table", tbl])
+        main(args)
     assert isinstance(e.value.code, str)
     assert e.value.code.startswith(f"{flag} expects ")
     assert repr(argv[-1]) in e.value.code

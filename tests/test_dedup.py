@@ -1329,6 +1329,85 @@ def test_minhash_index_update_rejects_intra_batch_duplicate_ids(
         update_minhash_index(spark, path, clashing)
 
 
+@pytest.mark.parametrize("builder", ["build_minhash_index", "save_signatures"])
+def test_signature_table_builders_reject_duplicate_ids(spark, tmp_path, builder):
+    """Both signature-table writers refuse two DISTINCT docs sharing an id
+    (grouping by id would store one merged signature for them), naming
+    the operator, before anything is written."""
+    import os
+
+    from ratatool_spark.operators import dedup
+
+    path = str(tmp_path / builder)
+    clashing = spark.createDataFrame(
+        [
+            Row(doc_id=7, text="first document body"),
+            Row(doc_id=7, text="second, entirely different body"),
+            Row(doc_id=8, text="an unrelated third document"),
+        ]
+    )
+    with pytest.raises(ValueError, match=f"{builder}: 1 duplicate id"):
+        getattr(dedup, builder)(clashing, path)
+    assert not os.path.exists(path)
+
+
+def test_minhash_self_pairs_equal_cross_pairs_of_corpus_with_itself(documents):
+    """The self-join (``id_a < id_b`` inside the join) and the cross join
+    of a corpus with itself, restricted to ``left_id < right_id``, emit
+    the same pairs with bit-identical ``est_jaccard``."""
+    from ratatool_spark.operators.dedup import minhash_lsh_cross_pairs
+
+    self_pairs = {
+        (r["id_a"], r["id_b"]): r["est_jaccard"]
+        for r in minhash_lsh_pairs(documents).collect()
+    }
+    cross = {
+        (r["left_id"], r["right_id"]): r["est_jaccard"]
+        for r in minhash_lsh_cross_pairs(documents, documents)
+        .where(F.col("left_id") < F.col("right_id"))
+        .collect()
+    }
+    assert self_pairs == cross and self_pairs
+
+
+def test_dedup_against_candidates_equal_cross_pairs(documents):
+    """dedup_against's unverified candidates are minhash_lsh_cross_pairs
+    of the new batch against the corpus, columns renamed."""
+    from ratatool_spark.operators.dedup import (
+        dedup_against,
+        minhash_lsh_cross_pairs,
+    )
+
+    new_b = documents.where(F.col("doc_id") % 4 == 0)
+    corpus_b = documents.where(F.col("doc_id") % 4 != 0)
+    got = {
+        (r["id_new"], r["id_corpus"]): r["est_jaccard"]
+        for r in dedup_against(new_b, corpus_b, verify=False).collect()
+    }
+    want = {
+        (r["left_id"], r["right_id"]): r["est_jaccard"]
+        for r in minhash_lsh_cross_pairs(new_b, corpus_b).collect()
+    }
+    assert got == want and got
+
+
+def test_saved_signatures_equal_minhash_index_rows(spark, documents, tmp_path):
+    """save_signatures and build_minhash_index write the same signature
+    table for one corpus; each keeps its own sidecar."""
+    from ratatool_spark.operators.dedup import build_minhash_index, save_signatures
+
+    sig_path, idx_path = str(tmp_path / "sigs"), str(tmp_path / "idx")
+    save_signatures(documents, sig_path)
+    build_minhash_index(documents, idx_path)
+    saved = spark.read.parquet(sig_path)
+    index = spark.read.parquet(idx_path)
+    assert saved.dtypes == index.dtypes
+    rows = saved.collect()
+    assert sorted(rows) == sorted(index.collect()) and rows
+    assert (tmp_path / "sigs" / "_signatures.json").exists()
+    assert (tmp_path / "idx" / "_minhash.json").exists()
+
+
 def test_lsh_bucket_pandas_matches_expression_on_zero_vectors(spark):
     """The Arrow-batched hyperplane bucketing must use the same strict
     proj > 0 bit rule as similarity.lsh_bucket: an all-zero vector

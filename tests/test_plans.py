@@ -74,7 +74,9 @@ def test_diffy_single_key_shuffle(spark):
 def test_dedup_joins_are_equi_joins(spark):
     # every dedup family candidate join must be an equi-join on a block
     # key (band hash / simhash half / shingle) — never all-pairs
-    for q in ("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_pairs"):
+    for q in ("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_pairs",
+              "dedup_incremental", "contamination_lsh_cross",
+              "pipeline_decontaminate", "minhash_index_incremental"):
         p = plan_of(spark, q)
         assert "CartesianProduct" not in p, q
         assert "BroadcastNestedLoopJoin" not in p, q
