@@ -280,10 +280,16 @@ def minhash_lsh_cross_pairs(
     )
 
 
-def _reject_duplicate_ids(df: DataFrame, id_col: str, op: str) -> None:
-    """Raise when two rows of ``df`` share an id: signatures group
-    shingles by id, so distinct docs sharing one would silently merge
-    into one combined-shingle signature. One count job."""
+def _reject_duplicate_ids(
+    df: DataFrame,
+    id_col: str,
+    op: str,
+    why: str = "distinct docs sharing an id would merge into one "
+    "combined-shingle signature; dedup the input first",
+) -> None:
+    """Raise when two rows of ``df`` share an id: by default, signatures
+    group shingles by id, so distinct docs sharing one would silently
+    merge into one combined-shingle signature. One id-count aggregate."""
     got = df.agg(
         F.count(F.col(id_col)).alias("n"),
         F.count_distinct(F.col(id_col)).alias("nd"),
@@ -291,8 +297,7 @@ def _reject_duplicate_ids(df: DataFrame, id_col: str, op: str) -> None:
     if got["nd"] < got["n"]:
         raise ValueError(
             f"{op}: {got['n'] - got['nd']} duplicate id row(s) in "
-            f"{id_col!r} — distinct docs sharing an id would merge into one "
-            "combined-shingle signature; dedup the input first"
+            f"{id_col!r} — {why}"
         )
 
 
@@ -1791,29 +1796,21 @@ def semantic_dedup(
     Σ|cell|² ≤ max_cell_size · n. Rerun with more centroids (or trained
     ones) to actually examine an over-dense region."""
     from ratatool_spark.operators.similarity import (
-        _seed_centroids,
-        train_centroids,
+        _centroids,
+        _cos_scored_entries,
     )
 
     if not (0.0 < tau <= 1.0):
         raise ValueError(f"tau must be in (0, 1], got {tau}")
-    if centroids is not None:
-        # bring-your-own centroids — the composition seam for
-        # similarity.train_centroids_exact (bit-reproducible training →
-        # engine-replayable dedup) or an externally-trained codebook
-        pass
-    elif train_iters > 0:
-        centroids = train_centroids(
-            emb_df, n_centroids, train_iters, vec_col, id_col, seed
-        )
-    else:
-        centroids = _seed_centroids(emb_df, n_centroids, vec_col, id_col, seed)
+    # centroids given: bring-your-own — the composition seam for
+    # similarity.train_centroids_exact (bit-reproducible training →
+    # engine-replayable dedup) or an externally-trained codebook
+    if centroids is None:
+        centroids = _centroids(emb_df, n_centroids, train_iters, vec_col, id_col, seed)
     # argmax-cosine assignment over centroid literals; ties break to the
     # SMALLEST cell id (the ivf oracle convention: cos DESC, cell ASC) —
     # struct sort on (c, -cell) reversed. Per-row fold count k+1, not 3k,
     # cosines bit-identical (similarity._cos_scored_entries).
-    from ratatool_spark.operators.similarity import _cos_scored_entries
-
     scored = _cos_scored_entries(
         vec_col,
         centroids,

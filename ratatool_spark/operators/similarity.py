@@ -1,19 +1,30 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-Two tiers:
+Every top-k operator is a candidate stage followed by one shared exact
+tail, :func:`_topk`: drop self-matches, score, rank per query (ties by
+neighbor id) and keep rank <= k. The operators differ only in which
+(query, neighbor) pairs they hand to it. The query side
+(:func:`_queries`) is always broadcast; the corpus side
+(:func:`_corpus`) never moves.
 
-  - **brute-force top-k** (the baseline + verifier): broadcast the query
-    set, join against the corpus, cosine via higher-order functions, rank
-    per query. Exact; cost |Q|·n — fine when |Q| is small or as the
+  - **brute force** (:func:`brute_force_topk`,
+    :func:`brute_force_topk_l2`, :func:`hard_negatives`): every query
+    against every corpus row. Exact; cost |Q|·n — the verifier and the
     re-rank stage.
-  - **LSH-bucketed top-k** (the scale path): random-hyperplane signatures
-    assign each vector a bucket; candidates come only from the query's
-    bucket(s); exact cosine re-ranks within. Hyperplanes are derived from
-    the portable hash (seed, plane, dim) → ±1, so signatures are
-    deterministic and reproducible in SQL.
-
-An IVF variant is the same shape with learned centroids instead of random
-hyperplanes — swap ``lsh_bucket`` for an argmin-over-centroids join.
+  - **LSH** (:func:`lsh_topk`, :func:`multiprobe_lsh_topk`):
+    random-hyperplane bucket ids (:func:`_bucket_id`); candidates share
+    the query's bucket(s). Hyperplane signs come from the portable hash
+    (seed, plane, dim) → ±1, so buckets are reproducible in SQL.
+  - **IVF** (:func:`ivf_topk` and the persisted
+    :func:`build_ivf_index` / :func:`update_ivf_index` /
+    :func:`query_ivf_index`): centroids are hash-sampled or Lloyd-trained
+    (:func:`_centroids`), corpus rows land in their nearest cell
+    (:func:`_cells`) and queries fan out over their ``n_probe`` nearest
+    cells (:func:`_probes`); the join is cell-to-cell.
+  - **quantized** (:func:`sq8_topk`, :func:`pq_topk`,
+    :func:`ivfpq_topk`): the corpus is scanned as int8 codes (SQ8,
+    cosine) or as product-quantization codes scored by asymmetric
+    distance (PQ, optionally behind the IVF cells).
 """
 
 from __future__ import annotations
@@ -79,6 +90,47 @@ def _cos_scored_entries(vec_col: str, centroids, entry_fn) -> Column:
     return _bind(norm2(F.col(vec_col)), _entries)
 
 
+def _topk(
+    cands: DataFrame,
+    k: int,
+    score: Column | None = None,
+    name: str = "cosine",
+    distinct: bool = False,
+) -> DataFrame:
+    """The exact top-k tail of every ANN operator: (query_id,
+    neighbor_id, ``name``, rank) from candidate pairs. Drops
+    self-matches, scores (default: the qv/cv cosine), optionally
+    deduplicates (a neighbor reached via several probed cells), then
+    ranks per query — cosine highest first, the distances (``l2_dist``,
+    ``adc_dist``) lowest first, ties by neighbor id — and keeps rank <=
+    k. The window plans as a WindowGroupLimit on both sides of its
+    query_id shuffle."""
+    if score is None:
+        score = cosine_sim(F.col("qv"), F.col("cv"))
+    out = cands.where(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", score.alias(name)
+    )
+    if distinct:
+        out = out.distinct()
+    order = F.col(name).desc() if name == "cosine" else F.col(name)
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return out.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _queries(df: DataFrame, vec_col: str, id_col: str, *extra) -> DataFrame:
+    """The query side of a candidate join: (query_id, qv, *extra)."""
+    return df.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), *extra
+    )
+
+
+def _corpus(df: DataFrame, vec_col: str, id_col: str, *extra) -> DataFrame:
+    """The corpus side of a candidate join: (neighbor_id, cv, *extra)."""
+    return df.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), *extra
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -91,19 +143,8 @@ def brute_force_topk(
     (query_id, neighbor_id, cosine, rank), self-matches excluded. Ties
     broken by neighbor id for determinism. The query side is broadcast —
     corpus never moves, so this scales with corpus size linearly."""
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    sim = cosine_sim(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    q = _queries(queries, vec_col, id_col)
+    return _topk(_corpus(corpus, vec_col, id_col).crossJoin(F.broadcast(q)), k)
 
 
 def brute_force_topk_l2(
@@ -121,22 +162,9 @@ def brute_force_topk_l2(
     broadcast-queries/corpus-never-moves shape as
     :func:`brute_force_topk`. Distance is the order-pinned
     :func:`_sq_l2` fold, so a SQL replay ranks identically."""
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("l2_dist"), F.col("neighbor_id")
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _sq_l2(F.col("qv"), F.col("cv")).alias("l2_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    q = _queries(queries, vec_col, id_col)
+    cands = _corpus(corpus, vec_col, id_col).crossJoin(F.broadcast(q))
+    return _topk(cands, k, _sq_l2(F.col("qv"), F.col("cv")), "l2_dist")
 
 
 def hard_negatives(
@@ -158,30 +186,10 @@ def hard_negatives(
     into the join, so same-label pairs are dropped BEFORE ranking. For
     corpora past brute-force scale, pre-bucket with the IVF/LSH paths
     and apply the same predicate inside each bucket."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.col(label_col).alias("q_label"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.col(label_col).alias("c_label"),
-    )
-    sim = cosine_sim(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .where(
-            (F.col("query_id") != F.col("neighbor_id"))
-            & (F.col("q_label") != F.col("c_label"))
-        )
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    q = _queries(queries, vec_col, id_col, F.col(label_col).alias("q_label"))
+    c = _corpus(corpus, vec_col, id_col, F.col(label_col).alias("c_label"))
+    mismatch = F.col("q_label") != F.col("c_label")
+    return _topk(c.join(F.broadcast(q), mismatch, "cross"), k)
 
 
 def _hyperplane_sign(plane: int, dim: int, seed: int) -> float:
@@ -250,7 +258,7 @@ def lsh_bucket(
     hashing in the data path at all. Without ``dim``, signs are hashed at
     runtime per element — same values, ~50x slower (an md5 per
     plane × dim × row)."""
-    bits = []
+    projs = []
     for p in range(num_planes):
         if dim is not None:
             # one array Literal, not dim scalar Literals wrapped in
@@ -276,12 +284,18 @@ def lsh_bucket(
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )
-        bits.append(
-            F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sum(bits[1:], bits[0]).alias("bucket")
+        projs.append(proj)
+    return _bucket_id(projs).alias("bucket")
+
+
+def _bucket_id(projs: list[Column]) -> Column:
+    """Σ_p 2^p·[proj_p > 0] as a long, summed left to right: plane p's
+    projection sign is bucket bit p."""
+    bits = [
+        F.when(pr > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
+        for p, pr in enumerate(projs)
+    ]
+    return sum(bits[1:], bits[0])
 
 
 def ivf_assign_cells(
@@ -317,7 +331,57 @@ def _seed_centroids(
         .select(id_col, vec_col)
         .collect()
     )
+    if not cents:
+        raise ValueError("empty corpus: nothing to sample centroids from")
     return [(i, list(r[vec_col])) for i, r in enumerate(cents)]
+
+
+def _centroids(
+    corpus: DataFrame,
+    n_centroids: int,
+    train_iters: int,
+    vec_col: str,
+    id_col: str,
+    seed: int,
+) -> list[tuple[int, list[float]]]:
+    """IVF centroids: ``train_iters`` Lloyd's iterations
+    (:func:`train_centroids`), or the train-free hash-sample when 0."""
+    if train_iters > 0:
+        return train_centroids(corpus, n_centroids, train_iters, vec_col, id_col, seed)
+    return _seed_centroids(corpus, n_centroids, vec_col, id_col, seed)
+
+
+def _cells(
+    df: DataFrame, centroids: list[tuple[int, list[float]]], vec_col: str, id_col: str
+) -> DataFrame:
+    """The corpus side of an IVF join: (neighbor_id, cv, cell), each row
+    in its nearest cell."""
+    assigned = _gemm_assign(df, centroids, vec_col, id_col, 1)
+    return _corpus(assigned, "v", "id", F.col("cells")[0].alias("cell"))
+
+
+def _probes(
+    queries: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    vec_col: str,
+    id_col: str,
+    n_probe: int,
+) -> DataFrame:
+    """The query side of an IVF join: (query_id, qv, cell), one row per
+    probed cell — the query's ``n_probe`` nearest."""
+    assigned = _gemm_assign(queries, centroids, vec_col, id_col, n_probe)
+    return _queries(assigned, "v", "id", F.explode("cells").alias("cell"))
+
+
+def _ivf_meta(spark, path: str) -> tuple[dict, list[tuple[int, list[float]]]]:
+    """The ``_ivf.json`` sidecar of a :func:`build_ivf_index` index and
+    its centroids."""
+    import json
+
+    from ratatool_spark.sources.shards import _join, _read_text
+
+    meta = json.loads(_read_text(spark, _join(path, "_ivf.json")))
+    return meta, [(int(c), v) for c, v in meta["centroids"]]
 
 
 def _gemm_assign(
@@ -471,6 +535,9 @@ def train_centroids_exact(
     return centroids
 
 
+_IVF_DUP = "two vectors under one id would both be indexed; dedup the input first"
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -486,22 +553,17 @@ def build_ivf_index(
     one corpus scan + optional Lloyd's training here, NEVER per query
     batch) plus an ``_ivf.json`` sidecar holding the centroids and
     parameters. Cell is a low-cardinality partition column, so a probe
-    of n_probe cells prunes the index scan to those directories."""
+    of n_probe cells prunes the index scan to those directories. A
+    corpus with repeated ids is rejected (one id-count aggregate) before
+    anything is written."""
     import json
 
+    from ratatool_spark.operators.dedup import _reject_duplicate_ids
     from ratatool_spark.sources.shards import _join, _write_text
 
-    if train_iters > 0:
-        centroids = train_centroids(
-            corpus, n_centroids, train_iters, vec_col, id_col, seed
-        )
-    else:
-        centroids = _seed_centroids(corpus, n_centroids, vec_col, id_col, seed)
-    cb = _gemm_assign(corpus, centroids, vec_col, id_col, 1).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("cells")[0].alias("cell"),
-    )
+    _reject_duplicate_ids(corpus, id_col, "build_ivf_index", _IVF_DUP)
+    centroids = _centroids(corpus, n_centroids, train_iters, vec_col, id_col, seed)
+    cb = _cells(corpus, centroids, vec_col, id_col)
     cb.write.mode(mode).partitionBy("cell").parquet(path)
     meta = {
         "n_centroids": n_centroids,
@@ -527,32 +589,10 @@ def query_ivf_index(
     cells only. The cell equi-join prunes the partitioned index scan to
     the probed cells; identical results to :func:`ivf_topk` with the
     same parameters (parity-tested)."""
-    import json
-
-    from ratatool_spark.sources.shards import _join, _read_text
-
-    meta = json.loads(_read_text(spark, _join(path, "_ivf.json")))
-    centroids = [(int(c), v) for c, v in meta["centroids"]]
-    cb = spark.read.parquet(path)
-    qb = _gemm_assign(
-        queries, centroids, meta["vec_col"], meta["id_col"], n_probe
-    ).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.explode("cells").alias("cell"),
-    )
-    sim = cosine_sim(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cb.join(F.broadcast(qb), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    meta, centroids = _ivf_meta(spark, path)
+    qb = _probes(queries, centroids, meta["vec_col"], meta["id_col"], n_probe)
+    cands = spark.read.parquet(path).join(F.broadcast(qb), "cell")
+    return _topk(cands, k, distinct=True)
 
 
 def update_ivf_index(
@@ -576,22 +616,13 @@ def update_ivf_index(
     feed the duplicate-id guard — which rides the appended rows'
     ``cv`` payload (existing-id ∩ new-id set, small by construction,
     broadcast onto the new batch + ``raise_error``; no separate count
-    action). The append job stages files under ``_temporary`` until job
-    commit, so a mid-write crash leaves the index readable and the
-    retry clean. Returns ``{"n_added": ..., "n_cells_touched": ...}``
-    from one aggregate of the assigned batch."""
-    import json
-
-    from ratatool_spark.sources.shards import _join, _read_text
-
-    meta = json.loads(_read_text(spark, _join(path, "_ivf.json")))
-    centroids = [(int(c), v) for c, v in meta["centroids"]]
-    vec_col, id_col = meta["vec_col"], meta["id_col"]
-    assigned = _gemm_assign(new_vectors, centroids, vec_col, id_col, 1).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("cells")[0].alias("cell"),
-    )
+    action). Ids repeated inside the batch are counted by the same stats
+    aggregate and rejected before the write. The append job stages files
+    under ``_temporary`` until job commit, so a mid-write crash leaves
+    the index readable and the retry clean. Returns ``{"n_added": ...,
+    "n_cells_touched": ...}`` from one aggregate of the assigned batch."""
+    meta, centroids = _ivf_meta(spark, path)
+    assigned = _cells(new_vectors, centroids, meta["vec_col"], meta["id_col"])
     new_ids = assigned.select("neighbor_id").distinct()
     dups = (
         spark.read.parquet(path)
@@ -617,7 +648,13 @@ def update_ivf_index(
         stats = guarded.agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct("cell").alias("c"),
+            F.countDistinct("neighbor_id").alias("ids"),
         ).collect()[0]
+        if stats["ids"] < stats["n"]:
+            raise ValueError(
+                f"update_ivf_index: {stats['n'] - stats['ids']} duplicate id "
+                f"row(s) in the batch — {_IVF_DUP}"
+            )
         guarded.write.mode("append").partitionBy("cell").parquet(path)
     finally:
         guarded.unpersist()
@@ -645,35 +682,10 @@ def ivf_topk(
     same n_probe. Same scale profile as LSH either way: the join is
     cell-to-cell on a small integer key. Recall is tuned by n_probe /
     n_centroids."""
-    if train_iters > 0:
-        centroids = train_centroids(
-            corpus, n_centroids, train_iters, vec_col, id_col, seed
-        )
-    else:
-        centroids = _seed_centroids(corpus, n_centroids, vec_col, id_col, seed)
-
-    cb = _gemm_assign(corpus, centroids, vec_col, id_col, 1).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("cells")[0].alias("cell"),
-    )
-    qb = _gemm_assign(queries, centroids, vec_col, id_col, n_probe).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.explode("cells").alias("cell"),
-    )
-    sim = cosine_sim(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cb.join(F.broadcast(qb), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .distinct()  # a neighbor can appear via several probed cells
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    centroids = _centroids(corpus, n_centroids, train_iters, vec_col, id_col, seed)
+    cb = _cells(corpus, centroids, vec_col, id_col)
+    qb = _probes(queries, centroids, vec_col, id_col, n_probe)
+    return _topk(cb.join(F.broadcast(qb), "cell"), k, distinct=True)
 
 
 def lsh_topk(
@@ -691,27 +703,10 @@ def lsh_topk(
     bigger buckets → higher recall, more compute). Join is bucket-to-bucket
     — shuffle on a small integer key, no cross join. Pass ``dim`` to bake
     plane signs into the plan (see lsh_bucket)."""
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        lsh_bucket(corpus, vec_col, num_planes, seed, dim=dim),
-    )
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        lsh_bucket(queries, vec_col, num_planes, seed, dim=dim),
-    )
-    sim = cosine_sim(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cb.join(F.broadcast(qb), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    bucket = lsh_bucket(corpus, vec_col, num_planes, seed, dim=dim)
+    cb = _corpus(corpus, vec_col, id_col, bucket)
+    qb = _queries(queries, vec_col, id_col, bucket)
+    return _topk(cb.join(F.broadcast(qb), "bucket"), k)
 
 
 def multiprobe_lsh_topk(
@@ -743,21 +738,11 @@ def multiprobe_lsh_topk(
         raise ValueError("multiprobe_lsh_topk requires dim")
     if not 1 <= n_probe <= num_planes + 1:
         raise ValueError(f"n_probe must be in [1, {num_planes + 1}]")
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        lsh_bucket(corpus, vec_col, num_planes, seed, dim=dim),
-    )
     projs = [
         _proj_expr(vec_col, p, num_planes, dim, seed)
         for p in range(num_planes)
     ]
-    base = None
-    for p, pr in enumerate(projs):
-        term = F.when(pr > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        base = term if base is None else base + term
+    base = _bucket_id(projs)
     margins = F.array_sort(
         F.array(
             *[
@@ -775,22 +760,10 @@ def multiprobe_lsh_topk(
         )
         for i in range(n_probe - 1)
     ]
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(F.array(*probes)).alias("bucket"),
-    )
-    sim = cosine_sim(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cb.join(F.broadcast(qb), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    cb = _corpus(corpus, vec_col, id_col, base.alias("bucket"))
+    probed = F.explode(F.array(*probes)).alias("bucket")
+    qb = _queries(queries, vec_col, id_col, probed)
+    return _topk(cb.join(F.broadcast(qb), "bucket"), k)
 
 
 def sq8_encode(
@@ -848,20 +821,7 @@ def sq8_topk(
         F.col("id").alias("neighbor_id"),
         dequantize(F.col("codes"), F.col("scale")).alias("cv"),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    sim = cosine_sim(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(c.crossJoin(F.broadcast(_queries(queries, vec_col, id_col))), k)
 
 
 def topk_recall(
@@ -924,8 +884,6 @@ def train_pq_codebooks(
     mean update) — the production path, deterministic for a fixed
     (corpus, seed). Vector length must be divisible by ``m``."""
     rows = _seed_centroids(corpus, k, vec_col, id_col, seed)
-    if not rows:
-        raise ValueError("empty corpus: nothing to sample codebooks from")
     d = len(rows[0][1])
     if d % m != 0:
         raise ValueError(f"vector dim {d} not divisible by m={m}")
@@ -991,71 +949,46 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    kernel: bool = True,
 ) -> DataFrame:
     """(id, codes array<int>) — each vector's per-subspace argmin-
     squared-L2 centroid index (ties to the smaller index).
 
-    Default path: one numpy GEMM per Arrow batch per subspace (the
-    `_gemm_assign` discipline — codebooks ride in the closure; m·k
-    interpreted HOF folds per ROW measured ~4x the whole gate's wall).
-    ``kernel=False`` is the expression twin: codebooks as plan LITERALS
-    (m·k·sub doubles), a narrow zero-shuffle map that any SQL engine
-    replays fold-for-fold — the oracle pins both paths agree (argmin can
-    only differ on exact distance ties, measure-zero for real
-    embeddings; ties break to the smaller index in both)."""
+    One numpy GEMM per Arrow batch per subspace (the `_gemm_assign`
+    discipline — codebooks ride in the closure; m·k interpreted HOF
+    folds per ROW measured ~4x the whole gate's wall). The tests pin it
+    against a plan-literal expression twin that any SQL engine replays
+    fold-for-fold (argmin can only differ on exact distance ties,
+    measure-zero for real embeddings; ties break to the smaller index in
+    both)."""
+    import numpy as np
+    import pandas as pd
+
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    if kernel:
-        import numpy as np
-        import pandas as pd
+    cmats = [np.asarray(book, dtype=np.float64) for book in codebooks]
+    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    id_t = base.schema["id"].dataType.simpleString()
 
-        cmats = [np.asarray(book, dtype=np.float64) for book in codebooks]
-        base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        id_t = base.schema["id"].dataType.simpleString()
-
-        def gen(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                x = np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
-                codes = np.empty((len(x), m), dtype=np.int32)
-                for j, cmat in enumerate(cmats):
-                    s = x[:, j * sub : (j + 1) * sub]
-                    # ||s-c||² per centroid; argmin ties -> smaller index
-                    d = (
-                        (s * s).sum(axis=1)[:, None]
-                        - 2.0 * (s @ cmat.T)
-                        + (cmat * cmat).sum(axis=1)[None, :]
-                    )
-                    codes[:, j] = np.argmin(d, axis=1)  # first min = smallest c
-                yield pd.DataFrame({"id": pdf["id"], "codes": list(codes)})
-
-        return base.mapInPandas(gen, schema=f"id {id_t}, codes array<int>").select(
-            F.col("id").alias(id_col), "codes"
-        )
-    import json
-
-    code_cols = []
-    for j, book in enumerate(codebooks):
-        s = F.slice(F.col(vec_col), j * sub + 1, sub)
-        # one constant-folded literal per subspace instead of a lit()
-        # py4j round-trip per scalar (see _adc_dist)
-        lut = F.from_json(
-            F.lit(json.dumps([[float(x) for x in cent] for cent in book])),
-            "array<array<double>>",
-        )
-        scored = F.array(
-            *[
-                F.struct(
-                    _sq_l2(s, F.element_at(lut, c + 1)).alias("d"),
-                    F.lit(c).alias("c"),
+    def gen(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            x = np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
+            codes = np.empty((len(x), m), dtype=np.int32)
+            for j, cmat in enumerate(cmats):
+                s = x[:, j * sub : (j + 1) * sub]
+                # ||s-c||² per centroid; argmin ties -> smaller index
+                d = (
+                    (s * s).sum(axis=1)[:, None]
+                    - 2.0 * (s @ cmat.T)
+                    + (cmat * cmat).sum(axis=1)[None, :]
                 )
-                for c in range(len(book))
-            ]
-        )
-        code_cols.append(F.array_min(scored)["c"])
-    return df.select(F.col(id_col), F.array(*code_cols).alias("codes"))
+                codes[:, j] = np.argmin(d, axis=1)  # first min = smallest c
+            yield pd.DataFrame({"id": pdf["id"], "codes": list(codes)})
+
+    return base.mapInPandas(gen, schema=f"id {id_t}, codes array<int>").select(
+        F.col("id").alias(id_col), "codes"
+    )
 
 
 def pq_topk(
@@ -1075,25 +1008,9 @@ def pq_topk(
     smaller neighbor id. Re-rank the result's ids against raw vectors
     when exact order matters (the standard PQ + re-rank pipeline);
     measure with :func:`topk_recall`."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    dist = _adc_dist(codebooks, "qv", "codes")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        corpus_codes.select(
-            F.col(id_col).alias("neighbor_id"), F.col("codes")
-        )
-        .crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", dist.alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    c = corpus_codes.select(F.col(id_col).alias("neighbor_id"), F.col("codes"))
+    cands = c.crossJoin(F.broadcast(_queries(queries, vec_col, id_col)))
+    return _topk(cands, k, _adc_dist(codebooks, "qv", "codes"), "adc_dist")
 
 
 def _adc_dist(codebooks, qv_col: str, codes_col: str) -> Column:
@@ -1160,43 +1077,15 @@ def ivfpq_topk(
     residual vectors — kept out of the oracle path for replayability.
     Re-rank the returned ids against raw vectors when exact order
     matters; measure with :func:`topk_recall`."""
-    if train_iters > 0:
-        centroids = train_centroids(
-            corpus, n_centroids, train_iters, vec_col, id_col, seed
-        )
-    else:
-        centroids = _seed_centroids(corpus, n_centroids, vec_col, id_col, seed)
+    centroids = _centroids(corpus, n_centroids, train_iters, vec_col, id_col, seed)
     books = train_pq_codebooks(
         corpus, m, pq_k, vec_col, id_col, seed, pq_train_iters
     )
     codes = pq_encode(corpus, books, vec_col, id_col)
-    cb = (
-        _gemm_assign(corpus, centroids, vec_col, id_col, 1)
-        .select(F.col("id").alias("neighbor_id"), F.col("cells")[0].alias("cell"))
-        .join(
-            codes.select(
-                F.col(id_col).alias("neighbor_id"), F.col("codes")
-            ),
-            "neighbor_id",
-        )
+    cb = _cells(corpus, centroids, vec_col, id_col).join(
+        codes.select(F.col(id_col).alias("neighbor_id"), F.col("codes")),
+        "neighbor_id",
     )
-    qb = _gemm_assign(queries, centroids, vec_col, id_col, n_probe).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.explode("cells").alias("cell"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        cb.join(F.broadcast(qb), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc_dist(books, "qv", "codes").alias("adc_dist"),
-        )
-        .distinct()  # a neighbor can appear via several probed cells
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    qb = _probes(queries, centroids, vec_col, id_col, n_probe)
+    dist = _adc_dist(books, "qv", "codes")
+    return _topk(cb.join(F.broadcast(qb), "cell"), k, dist, "adc_dist", True)

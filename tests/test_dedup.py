@@ -245,6 +245,123 @@ def test_ivf_index_incremental_update(spark, embeddings, tmp_path):
         update_ivf_index(spark, p_incr, b.limit(1))
 
 
+def test_ivf_index_rejects_duplicate_ids(spark, embeddings, tmp_path):
+    """Two vectors under one id never enter the IVF index: the build
+    rejects a corpus with repeated ids, and the update rejects a batch
+    with repeated ids (fresh to the index) before appending anything."""
+    from ratatool_spark.operators.similarity import (
+        build_ivf_index,
+        update_ivf_index,
+    )
+
+    a = embeddings.where(F.col("vec_id") % 2 == 0)
+    dup = a.unionByName(a.limit(1))
+    with pytest.raises(ValueError, match="build_ivf_index: 1 duplicate id"):
+        build_ivf_index(dup, str(tmp_path / "dup"), n_centroids=4)
+
+    path = str(tmp_path / "ivf")
+    build_ivf_index(a, path, n_centroids=4)
+    before = spark.read.parquet(path).count()
+    # one fresh id carrying two different vectors
+    b = embeddings.where(F.col("vec_id").isin(1, 3)).withColumn(
+        "vec_id", F.lit(1).cast("long")
+    )
+    with pytest.raises(ValueError, match="update_ivf_index: 1 duplicate id"):
+        update_ivf_index(spark, path, b)
+    assert spark.read.parquet(path).count() == before
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["ivf_topk", "build_ivf_index", "train_centroids_exact", "train_pq_codebooks"],
+)
+def test_empty_corpus_raises_message(embeddings, tmp_path, op):
+    """Every centroid/codebook sampler names an empty corpus instead of
+    failing inside numpy or list indexing."""
+    from ratatool_spark.operators import similarity as sim
+
+    empty = embeddings.limit(0)
+    calls = {
+        "ivf_topk": lambda: sim.ivf_topk(empty, embeddings),
+        "build_ivf_index": lambda: sim.build_ivf_index(empty, str(tmp_path / "i")),
+        "train_centroids_exact": lambda: sim.train_centroids_exact(empty),
+        "train_pq_codebooks": lambda: sim.train_pq_codebooks(empty),
+    }
+    with pytest.raises(ValueError, match="empty corpus: nothing to sample"):
+        calls[op]()
+
+
+def _query_ivf_index(s, c, path):
+    s.build_ivf_index(c, path, n_centroids=2)
+    return s.query_ivf_index(c.sparkSession, c, path, k=5, n_probe=2)
+
+
+def _pq_topk(s, c, path):
+    books = s.train_pq_codebooks(c, m=2, k=4)
+    return s.pq_topk(s.pq_encode(c, books), c, books, k=5)
+
+
+# op name -> (similarity module, corpus, scratch path) -> top-k frame;
+# the IVF calls probe every cell and k=5 keeps every candidate
+_TOPK_OPS = {
+    "brute_force_topk": lambda s, c, p: s.brute_force_topk(c, c, k=5),
+    "brute_force_topk_l2": lambda s, c, p: s.brute_force_topk_l2(c, c, k=5),
+    "hard_negatives": lambda s, c, p: s.hard_negatives(c, c, k=5),
+    "query_ivf_index": _query_ivf_index,
+    "ivf_topk": lambda s, c, p: s.ivf_topk(c, c, k=5, n_centroids=2, n_probe=2),
+    "lsh_topk": lambda s, c, p: s.lsh_topk(c, c, k=5, num_planes=2, dim=4),
+    "multiprobe_lsh_topk": lambda s, c, p: s.multiprobe_lsh_topk(
+        c, c, k=5, num_planes=2, dim=4, n_probe=3
+    ),
+    "sq8_topk": lambda s, c, p: s.sq8_topk(c, c, k=5),
+    "pq_topk": _pq_topk,
+    "ivfpq_topk": lambda s, c, p: s.ivfpq_topk(
+        c, c, k=5, n_centroids=2, n_probe=2, m=2, pq_k=4
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_TOPK_OPS))
+def test_topk_ranking_contract(spark, tmp_path, op):
+    """The shared rank tail of all ten top-k operators: no self-match,
+    ranks 1..n without gaps, cosine descending and the distances
+    ascending, and a tied score ranks the lower neighbor id first. Ids 2
+    and 3 hold the same vector and id 4 holds twice it, so query 4 sees
+    2 and 3 tied under every metric, bucket, cell and code."""
+    from ratatool_spark.operators import similarity as sim
+
+    vecs = {
+        1: [1.0, 0.2, 0.1, 0.3],
+        2: [0.5, 0.9, 0.2, 0.1],
+        3: [0.5, 0.9, 0.2, 0.1],
+        4: [1.0, 1.8, 0.4, 0.2],
+        5: [0.1, 0.3, 1.0, 0.7],
+        6: [0.9, 0.1, 0.8, 0.2],
+    }
+    labels = {1: "a", 2: "a", 3: "a", 4: "b", 5: "b", 6: "a"}
+    corpus = spark.createDataFrame(
+        [(i, v, labels[i]) for i, v in vecs.items()],
+        "vec_id long, embedding array<double>, label string",
+    )
+    out = _TOPK_OPS[op](sim, corpus, str(tmp_path / "ivf"))
+    score = out.columns[2]
+    assert score in ("cosine", "l2_dist", "adc_dist")
+    sign = -1 if score == "cosine" else 1
+    by_query = {}
+    for r in out.collect():
+        assert r["query_id"] != r["neighbor_id"]
+        by_query.setdefault(r["query_id"], []).append(r)
+    assert 4 in by_query
+    for rows in by_query.values():
+        rows.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+        keys = [(sign * r[score], r["neighbor_id"]) for r in rows]
+        assert keys == sorted(keys)
+    q4 = {r["neighbor_id"]: r for r in by_query[4]}
+    assert q4[2][score] == q4[3][score]
+    assert q4[3]["rank"] == q4[2]["rank"] + 1
+
+
 def test_kmeans_ivf_training(embeddings):
     """Lloyd's iterations are deterministic and keep IVF results exact
     (cosines still true pairwise values); trained cells at equal probe
@@ -1044,6 +1161,36 @@ def test_pq_adc_recall_on_clustered_vectors(spark):
         train_pq_codebooks(emb, m=5, k=4)
 
 
+def _pq_encode_expr(df, codebooks, vec_col="embedding", id_col="vec_id"):
+    """The plan-literal expression twin of ``pq_encode``: codebooks as
+    one constant-folded literal per subspace, argmin-squared-L2 over
+    ``_sq_l2`` folds (ties to the smaller index) — the form any SQL
+    engine replays fold-for-fold."""
+    import json
+
+    from ratatool_spark.operators.similarity import _sq_l2
+
+    sub = len(codebooks[0][0])
+    code_cols = []
+    for j, book in enumerate(codebooks):
+        s = F.slice(F.col(vec_col), j * sub + 1, sub)
+        lut = F.from_json(
+            F.lit(json.dumps([[float(x) for x in cent] for cent in book])),
+            "array<array<double>>",
+        )
+        scored = F.array(
+            *[
+                F.struct(
+                    _sq_l2(s, F.element_at(lut, c + 1)).alias("d"),
+                    F.lit(c).alias("c"),
+                )
+                for c in range(len(book))
+            ]
+        )
+        code_cols.append(F.array_min(scored)["c"])
+    return df.select(F.col(id_col), F.array(*code_cols).alias("codes"))
+
+
 def test_pq_encode_kernel_matches_expression_twin(embeddings):
     """The GEMM encode kernel and the plan-literal expression twin give
     identical codes on real embeddings (argmin can differ only on exact
@@ -1052,9 +1199,9 @@ def test_pq_encode_kernel_matches_expression_twin(embeddings):
 
     books = train_pq_codebooks(embeddings, m=8, k=16, seed=13)
     kern = {r["vec_id"]: list(r["codes"])
-            for r in pq_encode(embeddings, books, kernel=True).collect()}
+            for r in pq_encode(embeddings, books).collect()}
     expr = {r["vec_id"]: list(r["codes"])
-            for r in pq_encode(embeddings, books, kernel=False).collect()}
+            for r in _pq_encode_expr(embeddings, books).collect()}
     assert kern == expr and len(kern) > 0
 
 

@@ -629,6 +629,27 @@ def test_sq8_topk_corpus_never_shuffles(spark):
     assert "mapInPandas" not in p and "BatchEvalPython" not in p
 
 
+@pytest.mark.parametrize("q", [
+    "ann_brute_force_topk", "hard_negatives_topk", "ann_sq8_topk",
+    "ann_pq_topk", "ann_lsh_topk", "ann_multiprobe_topk", "ann_ivf_topk",
+    "ann_ivfpq_topk", "ivf_index_incremental",
+])
+def test_topk_rank_tail_limits_before_shuffle(spark, q):
+    """The shared top-k tail: the query side is broadcast (no
+    SortMergeJoin), and the rank window's limit runs on both sides of
+    its query_id shuffle — a Partial WindowGroupLimit under the
+    Exchange, so each task ships at most k rows per query."""
+    p = plan_of(spark, q)
+    assert "BroadcastExchange" in p
+    assert "SortMergeJoin" not in p
+    nodes = [line.split("- ", 1)[-1] for line in p.splitlines()]
+    i = next(i for i, n in enumerate(nodes) if n.startswith("Window [row_number()"))
+    final, _, exchange, partial = nodes[i + 1 : i + 5]
+    assert final.startswith("WindowGroupLimit") and final.endswith("Final")
+    assert exchange.startswith("Exchange hashpartitioning(query_id")
+    assert partial.startswith("WindowGroupLimit") and partial.endswith("Partial")
+
+
 def test_neyman_no_global_sort_and_broadcast_alloc(spark):
     """sample_neyman_allocation: membership is a per-stratum window rank
     (never a global orderBy/limit); the allocation table joins in as a
