@@ -29,6 +29,7 @@ shards. All pure DataFrame ops — the shapes below are the 100 TB designs:
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -399,31 +400,15 @@ def bpe_pair_counts(
 ) -> DataFrame:
     """Corpus-wide adjacent character-pair frequencies — the inner loop of
     BPE tokenizer training (the statistic a merge step maximizes),
-    distributed: tokenize → collapse to DISTINCT words with frequencies
-    (the standard BPE corpus compression — pair work scales with
-    |vocabulary|, not corpus size) → explode each word's adjacent char
-    pairs → weight by word frequency → one keyed sum.
+    distributed: the tokenizer core's distinct-word table
+    (:func:`_word_table` — pair work scales with |vocabulary|, not corpus
+    size) and its one frequency-weighted pair count (:func:`_pair_counts`).
 
     Output: (``pair``, ``cnt``), optionally top-``top_k`` by count with a
-    deterministic (cnt desc, pair asc) tiebreak. Pure expressions
-    (``substr`` over a ``sequence``) — engine-portable, no UDFs."""
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("__w"))
-    wf = words.groupBy("__w").agg(F.count(F.lit(1)).alias("__freq"))
-    pairs = wf.select(
-        "__freq",
-        F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("__w") - 1, F.lit(1))
-                ),
-                lambda i: F.col("__w").substr(i, F.lit(2)),
-            )
-        ).alias("pair"),
-    )
-    out = (
-        pairs.where(F.length("pair") == 2)
-        .groupBy("pair")
-        .agg(F.sum("__freq").alias("cnt"))
+    deterministic (cnt desc, pair asc) tiebreak. Pure expressions —
+    engine-portable, no UDFs."""
+    out = _pair_counts(_word_table(df, text_col, _chars)).select(
+        F.concat("a", "b").alias("pair"), "cnt"
     )
     if top_k is not None:
         out = out.orderBy(F.col("cnt").desc(), F.col("pair").asc()).limit(top_k)
@@ -431,7 +416,7 @@ def bpe_pair_counts(
 
 
 def _select_compatible_merges(
-    cands: list[tuple[str, str]], k: int, merged=None
+    cands: list[tuple[str, str]], k: int, merged=operator.add
 ) -> list[tuple[str, str]]:
     """Greedy prefix of ``cands`` (already in cnt DESC, lhs, rhs order)
     of up to ``k`` pairwise-compatible merges: a pair is admitted iff
@@ -447,8 +432,6 @@ def _select_compatible_merges(
     ``merged`` maps (a, b) to the pair's output symbol — plain
     concatenation (BPE) by default; WordPiece folds the right side's
     continuation marker away (``operators/wordpiece._wp_merged``)."""
-    if merged is None:
-        merged = lambda a, b: a + b  # noqa: E731
     used: set[str] = set()
     chosen: list[tuple[str, str]] = []
     for a, b in cands:
@@ -462,6 +445,231 @@ def _select_compatible_merges(
     return chosen
 
 
+# ---------------------------------------------------------------------------
+# Subword-tokenizer core. BPE (Sennrich et al. 2016) and WordPiece
+# (operators/wordpiece) are one algorithm: a distinct-word table of symbol
+# arrays, a ranked adjacent-pair statistic, batched disjoint merges applied
+# by one fold, and the same fold replayed to segment. They differ only in
+# how a word splits into symbols (``split``), how a pair ranks
+# (``ranked``) and what a merge outputs (``merged``).
+# ---------------------------------------------------------------------------
+
+
+def _chars(w: Column) -> Column:
+    """A word as its characters (BPE's initial symbols)."""
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(w), F.lit(1))),
+        lambda i: w.substr(i, F.lit(1)),
+    )
+
+
+def _word_table(
+    df: DataFrame, text_col: str, split, byte_level: bool = False
+) -> DataFrame:
+    """The corpus collapsed to its DISTINCT words → (``__freq``,
+    ``__sym``): each word's count and its ``split`` symbol array. The
+    standard BPE corpus compression — every later stage scales with
+    |vocabulary|, not corpus bytes. ``byte_level`` maps each word onto
+    the GPT-2 byte alphabet (:func:`byte_encode_expr`) first."""
+    # drop empty tokens (double/leading spaces): they are not words, and
+    # would add a '' symbol to the learner's statistics
+    words = df.select(F.explode(tokens(F.col(text_col))).alias("__w")).where(
+        F.length("__w") > 0
+    )
+    if byte_level:
+        words = words.select(byte_encode_expr(F.col("__w")).alias("__w"))
+    return (
+        words.groupBy("__w")
+        .agg(F.count(F.lit(1)).alias("__freq"))
+        .select("__freq", split(F.col("__w")).alias("__sym"))
+    )
+
+
+def _pair_counts(wf: DataFrame) -> DataFrame:
+    """Adjacent symbol pairs of a word table, weighted by word frequency
+    → (``a``, ``b``, ``cnt``): one explode and one keyed sum. A
+    one-symbol word zips two empty slices and yields no pair."""
+    n = F.size("__sym") - 1
+    z = F.arrays_zip(
+        F.slice(F.col("__sym"), 1, n).alias("a"),
+        F.slice(F.col("__sym"), 2, n).alias("b"),
+    )
+    return (
+        wf.select("__freq", F.explode(z).alias("__p"))
+        .groupBy(F.col("__p.a").alias("a"), F.col("__p.b").alias("b"))
+        .agg(F.sum("__freq").alias("cnt"))
+    )
+
+
+def _learn_merges(
+    wf: DataFrame,
+    n_merges: int,
+    batch: int,
+    pool: int,
+    rounds: int | None,
+    ranked,
+    merged=operator.add,
+) -> list[tuple[str, str]]:
+    """The one merge-learning loop. Per round, ``ranked(wf)`` scores the
+    candidate pairs (``a``, ``b``, ``score``); the top-``pool`` by
+    (score DESC, a, b) are collected (top-1 when ``batch`` is 1), up to
+    ``batch`` symbol-disjoint ones are admitted
+    (:func:`_select_compatible_merges`) and applied in one fused fold.
+    The word table is ``localCheckpoint``-ed per round so the plan does
+    not grow with iterations. Runs ``rounds`` rounds (default
+    ``ceil(n_merges / batch)``) and truncates to ``n_merges``."""
+    if batch < 1:
+        raise ValueError(f"batch must be >= 1, got {batch}")
+    if batch > 1 and pool < batch:
+        raise ValueError(f"pool ({pool}) must be >= batch ({batch})")
+    if rounds is None:
+        rounds = -(-n_merges // batch)  # ceil: full-yield schedule
+    wf = wf.localCheckpoint(eager=False)
+    merges: list[tuple[str, str]] = []
+    for _ in range(rounds):
+        cand = (
+            ranked(wf)
+            .orderBy(F.col("score").desc(), F.col("a").asc(), F.col("b").asc())
+            .limit(1 if batch == 1 else pool)
+            .collect()
+        )
+        if not cand:
+            break
+        chosen = _select_compatible_merges(
+            [(r["a"], r["b"]) for r in cand], batch, merged
+        )
+        merges.extend(chosen)
+        # the SAME fold the segmenter replays, so re-encoding the training
+        # corpus reproduces the learner's final symbol state
+        wf = wf.select(
+            "__freq", _fold_expr(F.col("__sym"), chosen, merged).alias("__sym")
+        ).localCheckpoint(eager=False)
+    return merges[:n_merges]
+
+
+def _fold_expr(
+    sym: Column, rules: Sequence[tuple[str, str]], merged=operator.add
+) -> Column:
+    """One greedy left-to-right pass applying a SET of symbol-disjoint
+    merges as a single ``aggregate`` fold; ``merged(a, b)`` is the output
+    symbol. Because no symbol (or merge output) is shared between rules,
+    at most one rule can match at any position and the fused pass equals
+    applying each rule in its own pass, in any order — which is what lets
+    the learner apply a whole batch in one expression and the segmenter
+    replay the learned list one merge at a time."""
+    if not rules:
+        return sym
+
+    def step(acc: Column, s: Column) -> Column:
+        last = F.element_at(acc, -1)
+        out = None
+        for a, b in rules:
+            hit = (F.size(acc) > 0) & (last == F.lit(a)) & (s == F.lit(b))
+            val = F.concat(
+                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged(a, b)))
+            )
+            out = F.when(hit, val) if out is None else out.when(hit, val)
+        return out.otherwise(F.concat(acc, F.array(s)))
+
+    return F.aggregate(sym, F.array().cast("array<string>"), step)
+
+
+def _replay(
+    syms: list[str], merges: Sequence[tuple[str, str]], merged=operator.add
+) -> list[str]:
+    """Driver-side twin of the fold: apply each merge in order, greedy
+    left-to-right."""
+    for a, b in merges:
+        out: list[str] = []
+        for s in syms:
+            if out and out[-1] == a and s == b:
+                out[-1] = merged(a, b)
+            else:
+                out.append(s)
+        syms = out
+    return syms
+
+
+def _word_udf(encode_word):
+    """Arrow-batched kernel: a text column → the concatenation of
+    ``encode_word`` over its space-separated words, NULL staying NULL.
+    Each distinct word of a batch is encoded once (work scales with
+    distinct words, not tokens); ``encode_word`` ships once per executor
+    via the closure."""
+    import pandas as pd
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
+
+    def _encode(texts):
+        cache: dict[str, list[str]] = {}
+
+        def enc(text):
+            if text is None:
+                return None
+            out: list[str] = []
+            # strip(' ') — SPACES ONLY, the exact twin of F.trim (which
+            # strips 0x20 only); Python's default strip() would also eat
+            # tabs/newlines and silently diverge from the expression path
+            for w in text.strip(" ").split(" "):
+                got = cache.get(w)
+                if got is None:
+                    got = cache[w] = encode_word(w)
+                out.extend(got)
+            return out
+
+        return texts.map(enc)
+
+    # real annotation objects (module-wide `from __future__ import
+    # annotations` would stringify inline hints, which pyspark's
+    # signature inspection cannot resolve for a local import)
+    _encode.__annotations__ = {"texts": pd.Series, "return": pd.Series}
+    return pandas_udf(T.ArrayType(T.StringType()))(_encode)
+
+
+def _segment(
+    df: DataFrame,
+    text_col: str,
+    name: str,
+    merges: Sequence[tuple[str, str]],
+    expr_threshold: int,
+    split,
+    encode_word,
+    merged=operator.add,
+    byte_level: bool = False,
+) -> DataFrame:
+    """Replay a learned merge list over a corpus: adds ``{name}_syms``
+    (per-document subword array, words segmented independently) and
+    ``n_{name}_tokens``. Up to ``expr_threshold`` merges, each merge is
+    one JVM-side :func:`_fold_expr` chained in the plan over ``split``
+    symbols; beyond it the expression tree would grow too large, and the
+    :func:`_word_udf` kernel runs ``encode_word(word, merges)`` instead.
+    ``byte_level`` maps words onto the GPT-2 byte alphabet on both
+    paths."""
+    rules = [tuple(m) for m in merges]
+    if len(rules) > expr_threshold:
+
+        def enc(w: str) -> list[str]:
+            if byte_level:
+                w = "".join(_BYTE_MAP[b] for b in w.encode("utf-8"))
+            return encode_word(w, rules)
+
+        syms = _word_udf(enc)(F.col(text_col))
+    else:
+        toks = tokens(F.col(text_col))
+        if byte_level:
+            toks = F.transform(toks, byte_encode_expr)
+        empty = F.array().cast("array<string>")
+        # empty token (consecutive spaces) -> [], as in the kernel path
+        sym = F.transform(
+            toks, lambda w: F.when(F.length(w) == 0, empty).otherwise(split(w))
+        )
+        for rule in rules:
+            sym = F.transform(sym, lambda ws: _fold_expr(ws, [rule], merged))
+        syms = F.flatten(sym)
+    out = df.withColumn(f"{name}_syms", syms)
+    return out.withColumn(f"n_{name}_tokens", F.size(f"{name}_syms"))
+
+
 def bpe_learn(
     df: DataFrame,
     text_col: str = "text",
@@ -473,14 +681,14 @@ def bpe_learn(
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges over the corpus — the full iterative
     tokenizer-training loop, distributed like the IVF k-means trainer
-    (``operators/similarity.train_centroids``): per round, one keyed
-    aggregation ranks adjacent symbol pairs (deterministic
-    max-count/lexicographic tiebreak), and a pure ``aggregate`` fold
-    greedily merges the chosen pair(s) left-to-right inside every word's
-    symbol array. State (distinct words × symbol arrays × frequencies)
-    is ``localCheckpoint``-ed per round so the plan doesn't grow with
-    iterations — the same guard as ``connected_components``. Returns the
-    merge list in order.
+    (``operators/similarity.train_centroids``): the tokenizer core's
+    :func:`_learn_merges` over the character word table, ranking pairs by
+    raw count (deterministic max-count/lexicographic tiebreak) and
+    merging by plain concatenation. Per round, one keyed aggregation
+    ranks adjacent symbol pairs, and a pure ``aggregate`` fold greedily
+    merges the chosen pair(s) left-to-right inside every word's symbol
+    array; the state is ``localCheckpoint``-ed per round — the same
+    guard as ``connected_components``. Returns the merge list in order.
 
     ``batch`` > 1 is the batched-merge-selection throughput path for
     real vocabularies: strict BPE runs ONE Spark job (a corpus-wide
@@ -507,62 +715,14 @@ def bpe_learn(
     UTF-8 text becomes learnable byte sequences and nothing is OOV.
     Downstream is IDENTICAL machinery; learned merges are strings over
     the mapped alphabet (decode with :func:`byte_decode_expr`)."""
-    # drop empty tokens (double/leading spaces): Spark's sequence(1, 0)
-    # DESCENDS, so an empty word would otherwise materialize ['', '']
-    # symbol arrays and let the degenerate ('','') pair win a merge
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("__w")).where(
-        F.length("__w") > 0
+    return _learn_merges(
+        _word_table(df, text_col, _chars, byte_level),
+        n_merges,
+        batch,
+        pool,
+        rounds,
+        lambda wf: _pair_counts(wf).withColumnRenamed("cnt", "score"),
     )
-    if byte_level:
-        words = words.select(byte_encode_expr(F.col("__w")).alias("__w"))
-    wf = (
-        words.groupBy("__w")
-        .agg(F.count(F.lit(1)).alias("__freq"))
-        .select(
-            "__freq",
-            F.transform(
-                F.sequence(F.lit(1), F.length("__w")),
-                lambda i: F.col("__w").substr(i, F.lit(1)),
-            ).alias("__sym"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    if batch > 1 and pool < batch:
-        raise ValueError(f"pool ({pool}) must be >= batch ({batch})")
-    merges: list[tuple[str, str]] = []
-    if rounds is None:
-        rounds = -(-n_merges // batch)  # ceil: full-yield schedule
-    for _ in range(rounds):
-        z = F.arrays_zip(
-            F.slice(F.col("__sym"), 1, F.greatest(F.size("__sym") - 1, F.lit(1))).alias("a"),
-            F.slice(F.col("__sym"), 2, F.greatest(F.size("__sym") - 1, F.lit(1))).alias("b"),
-        )
-        pc = (
-            wf.where(F.size("__sym") >= 2)
-            .select("__freq", F.explode(z).alias("__p"))
-            .where(F.col("__p.b").isNotNull())
-            .groupBy(F.col("__p.a").alias("a"), F.col("__p.b").alias("b"))
-            .agg(F.sum("__freq").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(1 if batch == 1 else pool)
-            .collect()
-        )
-        if not pc:
-            break
-        chosen = _select_compatible_merges([(r["a"], r["b"]) for r in pc], batch)
-        merges.extend(chosen)
-        # the SAME fold bpe_segment encodes with — one definition, so the
-        # "re-encoding reproduces the learner's state" contract is
-        # enforced structurally, not by parallel-maintained copies
-        # (the fused multi-rule pass equals the per-merge passes because
-        # the batch is symbol-disjoint)
-        wf = wf.select(
-            "__freq",
-            _merge_fold_multi_expr(F.col("__sym"), chosen).alias("__sym"),
-        ).localCheckpoint(eager=False)
-    return merges[:n_merges]
 
 
 def assign_splits(
@@ -1114,57 +1274,6 @@ def corpus_report(
     )
 
 
-def _merge_fold_expr(sym: Column, a: str, b: str) -> Column:
-    """One greedy left-to-right merge pass as a pure ``aggregate`` fold —
-    the exact expression ``bpe_learn`` trains with."""
-    la, lb = F.lit(a), F.lit(b)
-    empty = F.array().cast("array<string>")
-    return F.aggregate(
-        sym,
-        empty,
-        lambda acc, s: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == la) & (s == lb),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(F.element_at(acc, -1), s)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def _merge_fold_multi_expr(
-    sym: Column, rules: Sequence[tuple[str, str]]
-) -> Column:
-    """One greedy left-to-right pass applying a SET of symbol-disjoint
-    merges as a single ``aggregate`` fold. Because no symbol (or merge
-    output) is shared between rules, at most one rule can match at any
-    position and the fused pass is exactly equivalent to applying each
-    rule in its own pass, in any order — which is what lets
-    ``bpe_learn(batch=k)`` apply a whole round in one expression, and
-    lets ``bpe_segment`` replay the learned list per-merge. A 1-rule
-    call is :func:`_merge_fold_expr` exactly."""
-    if not rules:
-        return sym
-    if len(rules) == 1:
-        return _merge_fold_expr(sym, rules[0][0], rules[0][1])
-    empty = F.array().cast("array<string>")
-
-    def step(acc: Column, s: Column) -> Column:
-        last = F.element_at(acc, -1)
-        hit = None
-        for a, b in rules:
-            c = (last == F.lit(a)) & (s == F.lit(b))
-            hit = c if hit is None else (hit | c)
-        merged = F.concat(
-            F.slice(acc, 1, F.size(acc) - 1), F.array(F.concat(last, s))
-        )
-        return F.when((F.size(acc) > 0) & hit, merged).otherwise(
-            F.concat(acc, F.array(s))
-        )
-
-    return F.aggregate(sym, empty, step)
-
-
 def save_bpe_tokenizer(
     spark,
     path: str,
@@ -1203,12 +1312,16 @@ def load_bpe_tokenizer(
     ``expect_byte_level`` asserts the artifact's alphabet mode matches
     the caller's intended ``bpe_segment(byte_level=...)`` — a mode
     mismatch raises instead of mis-segmenting. Artifacts written before
-    the flag existed read as char-level."""
+    the flag existed read as char-level. Artifacts of another algorithm
+    (a WordPiece model carries ``algo``; BPE artifacts never do) are
+    refused — their merges replayed as BPE segment silently wrong."""
     import json
 
     from ratatool_spark.sources.shards import _read_text
 
     meta = json.loads(_read_text(spark, path))
+    if meta.get("algo", "bpe") != "bpe":
+        raise ValueError(f"not a bpe artifact: algo={meta.get('algo')!r}")
     if meta.get("version") != 1:
         raise ValueError(f"unsupported tokenizer version: {meta.get('version')}")
     if expect_byte_level is not None and bool(
@@ -1227,16 +1340,7 @@ def bpe_apply_merges(word: str, merges: Sequence[tuple[str, str]]) -> list[str]:
     """Driver-side twin of the merge fold: apply each learned merge in
     order, greedy left-to-right — the reference implementation the Spark
     paths are tested against, and the per-word kernel of the UDF path."""
-    syms = list(word)
-    for a, b in merges:
-        out: list[str] = []
-        for s in syms:
-            if out and out[-1] == a and s == b:
-                out[-1] = a + b
-            else:
-                out.append(s)
-        syms = out
-    return syms
+    return _replay(list(word), merges)
 
 
 def bpe_segment(
@@ -1249,9 +1353,10 @@ def bpe_segment(
     """Apply a learned BPE merge list to a corpus: adds ``bpe_syms``
     (per-document subword array, words segmented independently) and
     ``n_bpe_tokens``. Completes the tokenizer story: ``bpe_learn`` trains
-    the merges, this encodes with them — identical greedy left-to-right
-    fold semantics, so re-encoding the training corpus reproduces the
-    learner's final symbol state.
+    the merges, this encodes with them — the tokenizer core's
+    :func:`_segment`, the learner's greedy left-to-right fold, so
+    re-encoding the training corpus reproduces the learner's final
+    symbol state.
 
     Two physical paths, same semantics (equality is test-pinned):
 
@@ -1259,11 +1364,11 @@ def bpe_segment(
       ``aggregate`` fold chained in the plan — zero Python, but the
       expression tree grows linearly with the merge count, so it is only
       the right shape for short lists.
-    - beyond that: an Arrow-batched pandas UDF running the per-word
-      kernel with a per-batch word cache (BPE's standard vocabulary
-      compression — work scales with DISTINCT words per batch, not
-      tokens). This is the 32k-merge production path; the merge list
-      ships once per executor via the closure.
+    - beyond that: an Arrow-batched pandas UDF running
+      :func:`bpe_apply_merges` with a per-batch word cache (BPE's
+      standard vocabulary compression — work scales with DISTINCT words
+      per batch, not tokens). This is the 32k-merge production path; the
+      merge list ships once per executor via the closure.
 
     ``byte_level=True`` encodes over the GPT-2 byte alphabet — MUST
     match the ``bpe_learn(byte_level=...)`` the merges came from.
@@ -1272,66 +1377,10 @@ def bpe_segment(
     on spaces, so the round-trip is per-word/space-normalized, same as
     the char mode).
     """
-    toks = tokens(F.col(text_col))
-    if byte_level:
-        toks = F.transform(toks, byte_encode_expr)
-    if len(merges) <= expr_threshold:
-        empty_arr = F.array().cast("array<string>")
-        chars = F.transform(
-            toks,
-            # empty token (consecutive spaces) -> [] — matches list("") in
-            # the kernel path
-            lambda w: F.when(F.length(w) == 0, empty_arr).otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.length(w), F.lit(1))),
-                    lambda i: w.substr(i, F.lit(1)),
-                )
-            ),
-        )
-        sym = chars
-        for a, b in merges:
-            sym = F.transform(sym, lambda ws: _merge_fold_expr(ws, a, b))
-        out = df.withColumn("bpe_syms", F.flatten(sym))
-        return out.withColumn("n_bpe_tokens", F.size("bpe_syms"))
-
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    merge_list = [tuple(m) for m in merges]
-    bmap = dict(_BYTE_MAP) if byte_level else None
-
-    def _encode(texts):
-        cache: dict[str, list[str]] = {}
-
-        def enc(text):
-            if text is None:
-                return None  # matches the expression path's null propagation
-            out: list[str] = []
-            # strip(' ') — SPACES ONLY, the exact twin of F.trim (which
-            # strips 0x20 only); Python's default strip() would also eat
-            # tabs/newlines and silently diverge from the expression path
-            for w in text.strip(" ").split(" "):
-                got = cache.get(w)
-                if got is None:
-                    ww = (
-                        "".join(bmap[b] for b in w.encode("utf-8"))
-                        if bmap is not None else w
-                    )
-                    got = cache[w] = bpe_apply_merges(ww, merge_list)
-                out.extend(got)
-            return out
-
-        return texts.map(enc)
-
-    # real annotation objects (module-wide `from __future__ import
-    # annotations` would stringify inline hints, which pyspark's
-    # signature inspection cannot resolve for a local import)
-    _encode.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    _encode = pandas_udf(T.ArrayType(T.StringType()))(_encode)
-
-    out = df.withColumn("bpe_syms", _encode(F.col(text_col)))
-    return out.withColumn("n_bpe_tokens", F.size("bpe_syms"))
+    return _segment(
+        df, text_col, "bpe", merges, expr_threshold, _chars,
+        bpe_apply_merges, byte_level=byte_level,
+    )
 
 
 def build_token_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -13,21 +13,23 @@ merged non-initial pieces stay ``##``-marked (the merge output of
 ``(l, ##r)`` is ``l`` + ``r`` — the marker never duplicates inside a
 token).
 
-Scale shape — identical to the batched BPE trainer: the corpus first
-collapses to its DISTINCT-word frequency table (pair statistics scale
-with |vocabulary|, not corpus bytes — the 100 TB property), each round
-is TWO keyed aggregations (pair counts + symbol counts; the ranking
-join is aggregate-sized), and up to ``batch`` pairwise symbol-disjoint
-merges apply in ONE fused JVM-side fold pass
-(``corpus._select_compatible_merges``'s admission rule, extended with
-the WordPiece merge output). Zero Python UDFs in training.
+Scale shape — WordPiece has no trainer of its own: it runs the
+subword-tokenizer core of ``operators/corpus`` that BPE runs, with three
+hooks. ``_marked_symbols`` splits words for ``_word_table`` (the
+DISTINCT-word frequency table — pair statistics scale with |vocabulary|,
+not corpus bytes, the 100 TB property); :func:`_likelihood` ranks pairs
+for ``_learn_merges`` (the core's pair count plus one symbol-count
+aggregation; the ranking join is aggregate-sized); ``_wp_merged`` names
+the merge output for the batch admission rule
+(``_select_compatible_merges``), the fused ``_fold_expr`` pass and the
+driver replay ``_replay``. Zero Python UDFs in training.
 
 Two segmentation surfaces:
 
 * :func:`wordpiece_segment` — MERGE REPLAY: applies the learned merge
-  list in training order (same fold), so re-encoding the training
-  corpus reproduces the trainer's final symbol state exactly; fully
-  SQL-replayable (the oracle gate's contract).
+  list in training order (the core's ``_segment``, same fold), so
+  re-encoding the training corpus reproduces the trainer's final symbol
+  state exactly; fully SQL-replayable (the oracle gate's contract).
 * :func:`wordpiece_match_segment` — the canonical BERT INFERENCE:
   greedy longest-match-first against a frozen vocabulary with
   ``[UNK]`` fallback (Arrow-batched kernel; the per-word result is
@@ -45,8 +47,14 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ratatool_spark.functions.text import tokens
-from ratatool_spark.operators.corpus import _select_compatible_merges
+from ratatool_spark.operators.corpus import (
+    _learn_merges,
+    _pair_counts,
+    _replay,
+    _segment,
+    _word_table,
+    _word_udf,
+)
 
 
 def _wp_merged(l: str, r: str) -> str:  # noqa: E741
@@ -66,78 +74,26 @@ def _marked_symbols(w: Column) -> Column:
     )
 
 
-def _wp_fold_expr(sym: Column, rules: Sequence[tuple[str, str]]) -> Column:
-    """One greedy left-to-right pass applying a set of symbol-disjoint
-    WordPiece merges as a single ``aggregate`` fold — the BPE fold
-    (``corpus._merge_fold_multi_expr``) with the WordPiece merge
-    output (:func:`_wp_merged`) instead of plain concatenation."""
-    if not rules:
-        return sym
-    empty = F.array().cast("array<string>")
-
-    def step(acc: Column, s: Column) -> Column:
-        last = F.element_at(acc, -1)
-        out = F.concat(acc, F.array(s))
-        for a, b in rules:
-            hit = (F.size(acc) > 0) & (last == F.lit(a)) & (s == F.lit(b))
-            out = F.when(
-                hit,
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(F.lit(_wp_merged(a, b))),
-                ),
-            ).otherwise(out)
-        return out
-
-    return F.aggregate(sym, empty, step)
-
-
-def _word_freq_syms(df: DataFrame, text_col: str) -> DataFrame:
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("__w")).where(
-        F.length("__w") > 0
-    )
-    return (
-        words.groupBy("__w")
-        .agg(F.count(F.lit(1)).alias("__freq"))
-        .select("__freq", _marked_symbols(F.col("__w")).alias("__sym"))
-        .localCheckpoint(eager=False)
-    )
-
-
-def _round_stats(wf: DataFrame) -> tuple[DataFrame, DataFrame]:
-    z = F.arrays_zip(
-        F.slice(
-            F.col("__sym"), 1, F.greatest(F.size("__sym") - 1, F.lit(1))
-        ).alias("a"),
-        F.slice(
-            F.col("__sym"), 2, F.greatest(F.size("__sym") - 1, F.lit(1))
-        ).alias("b"),
-    )
-    pc = (
-        wf.where(F.size("__sym") >= 2)
-        .select("__freq", F.explode(z).alias("__p"))
-        .where(F.col("__p.b").isNotNull())
-        .groupBy(F.col("__p.a").alias("a"), F.col("__p.b").alias("b"))
-        .agg(F.sum("__freq").alias("cnt_pair"))
-    )
+def _likelihood(wf: DataFrame) -> DataFrame:
+    """WordPiece's merge objective over a word table: the core's pair
+    counts joined to both symbols' counts → (``a``, ``b``, ``score``),
+    ``score = cnt / (cnt_a · cnt_b)`` in double precision (the exact
+    expression the oracle replays)."""
     sc = (
         wf.select("__freq", F.explode("__sym").alias("s"))
         .groupBy("s")
         .agg(F.sum("__freq").alias("cnt_sym"))
     )
-    return pc, sc
-
-
-def _score_join(pc: DataFrame, sc: DataFrame) -> DataFrame:
     ca = sc.select(F.col("s").alias("a"), F.col("cnt_sym").alias("cnt_a"))
     cb = sc.select(F.col("s").alias("b"), F.col("cnt_sym").alias("cnt_b"))
     return (
-        pc.join(ca, "a")
+        _pair_counts(wf)
+        .join(ca, "a")
         .join(cb, "b")
         .select(
-            "a", "b", "cnt_pair", "cnt_a", "cnt_b",
+            "a", "b",
             (
-                F.col("cnt_pair").cast("double")
+                F.col("cnt").cast("double")
                 / (F.col("cnt_a").cast("double")
                    * F.col("cnt_b").cast("double"))
             ).alias("score"),
@@ -154,42 +110,17 @@ def wordpiece_learn(
     rounds: int | None = None,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` WordPiece merges — the BPE training loop
-    (``corpus.bpe_learn``, including the batched disjoint-admission
+    (``corpus._learn_merges``, including the batched disjoint-admission
     throughput path) with the likelihood objective: candidates rank by
     ``cnt_pair / (cnt_a · cnt_b)`` DESC (double-precision — the exact
     expression the oracle replays), ties by (a, b) ascending. Returns
     the ordered merge list over BERT-marked symbols (apply with
     :func:`wordpiece_segment`; derive each merge's output token with
     ``_wp_merged``)."""
-    wf = _word_freq_syms(df, text_col)
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    if batch > 1 and pool < batch:
-        raise ValueError(f"pool ({pool}) must be >= batch ({batch})")
-    merges: list[tuple[str, str]] = []
-    if rounds is None:
-        rounds = -(-n_merges // batch)
-    for _ in range(rounds):
-        pc, sc = _round_stats(wf)
-        cand = (
-            _score_join(pc, sc)
-            .orderBy(F.col("score").desc(), F.col("a").asc(),
-                     F.col("b").asc())
-            .limit(1 if batch == 1 else pool)
-            .collect()
-        )
-        if not cand:
-            break
-        chosen = _select_compatible_merges(
-            [(r["a"], r["b"]) for r in cand],
-            batch,
-            merged=_wp_merged,
-        )
-        merges.extend(chosen)
-        wf = wf.select(
-            "__freq", _wp_fold_expr(F.col("__sym"), chosen).alias("__sym")
-        ).localCheckpoint(eager=False)
-    return merges[:n_merges]
+    return _learn_merges(
+        _word_table(df, text_col, _marked_symbols),
+        n_merges, batch, pool, rounds, _likelihood, _wp_merged,
+    )
 
 
 def wordpiece_vocab(
@@ -204,7 +135,7 @@ def wordpiece_vocab(
     distinct over exploded marked chars — vocabulary-scale."""
     alpha = [
         r["s"]
-        for r in _word_freq_syms(df, text_col)
+        for r in _word_table(df, text_col, _marked_symbols)
         .select(F.explode("__sym").alias("s"))
         .distinct()
         .orderBy("s")
@@ -230,50 +161,14 @@ def wordpiece_segment(
     in training order, greedy left-to-right per word — adds ``wp_syms``
     (##-marked subword array) and ``n_wp_tokens``. Re-encoding the
     training corpus reproduces the trainer's final state (same fold).
-    Dual path like ``corpus.bpe_segment``: chained JVM folds for short
-    lists, an Arrow-batched kernel with a per-batch word cache
-    beyond ``expr_threshold``."""
-    toks = tokens(F.col(text_col))
-    if len(merges) <= expr_threshold:
-        empty_arr = F.array().cast("array<string>")
-        marked = F.transform(
-            toks,
-            lambda w: F.when(F.length(w) == 0, empty_arr).otherwise(
-                _marked_symbols(w)
-            ),
-        )
-        sym = marked
-        for rule in merges:
-            sym = F.transform(sym, lambda ws: _wp_fold_expr(ws, [rule]))
-        out = df.withColumn("wp_syms", F.flatten(sym))
-        return out.withColumn("n_wp_tokens", F.size("wp_syms"))
-
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    merge_list = [tuple(m) for m in merges]
-
-    def _encode(texts):
-        cache: dict[str, list[str]] = {}
-
-        def enc(text):
-            if text is None:
-                return None
-            out: list[str] = []
-            for w in text.strip(" ").split(" "):
-                got = cache.get(w)
-                if got is None:
-                    got = cache[w] = wordpiece_apply_merges(w, merge_list)
-                out.extend(got)
-            return out
-
-        return texts.map(enc)
-
-    _encode.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    _encode = pandas_udf(T.ArrayType(T.StringType()))(_encode)
-    out = df.withColumn("wp_syms", _encode(F.col(text_col)))
-    return out.withColumn("n_wp_tokens", F.size("wp_syms"))
+    Dual path like ``corpus.bpe_segment`` (the tokenizer core's
+    ``corpus._segment``): chained JVM folds for short lists, an
+    Arrow-batched kernel with a per-batch word cache beyond
+    ``expr_threshold``."""
+    return _segment(
+        df, text_col, "wp", merges, expr_threshold, _marked_symbols,
+        wordpiece_apply_merges, _wp_merged,
+    )
 
 
 def wordpiece_apply_merges(
@@ -281,18 +176,8 @@ def wordpiece_apply_merges(
 ) -> list[str]:
     """Driver-side twin of the replay fold (the reference the Spark
     paths are tested against; the kernel of the UDF path)."""
-    if not word:
-        return []
-    syms = [word[0]] + ["##" + c for c in word[1:]]
-    for a, b in merges:
-        out: list[str] = []
-        for s in syms:
-            if out and out[-1] == a and s == b:
-                out[-1] = _wp_merged(a, b)
-            else:
-                out.append(s)
-        syms = out
-    return syms
+    marked = [("##" if i else "") + c for i, c in enumerate(word)]
+    return _replay(marked, merges, _wp_merged)
 
 
 def wordpiece_match_word(
@@ -337,34 +222,9 @@ def wordpiece_match_segment(
     ``wp_syms`` + ``n_wp_tokens``. Arrow-batched kernel; the vocab set
     ships once per executor via the closure, per-word results cache per
     batch (work scales with distinct words, not tokens)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     vset = set(vocab)
-
-    def _encode(texts):
-        cache: dict[str, list[str]] = {}
-
-        def enc(text):
-            if text is None:
-                return None
-            out: list[str] = []
-            for w in text.strip(" ").split(" "):
-                if not w:
-                    continue
-                got = cache.get(w)
-                if got is None:
-                    got = cache[w] = wordpiece_match_word(
-                        w, vset, unk, max_chars)
-                out.extend(got)
-            return out
-
-        return texts.map(enc)
-
-    _encode.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    _encode = pandas_udf(T.ArrayType(T.StringType()))(_encode)
-    out = df.withColumn("wp_syms", _encode(F.col(text_col)))
+    syms = _word_udf(lambda w: wordpiece_match_word(w, vset, unk, max_chars))
+    out = df.withColumn("wp_syms", syms(F.col(text_col)))
     return out.withColumn("n_wp_tokens", F.size("wp_syms"))
 
 

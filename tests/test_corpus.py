@@ -428,12 +428,20 @@ def test_bpe_segment_paths_agree_on_random_whitespace_corpus(spark):
     """Path equality on a seeded random corpus with adversarial
     whitespace: double spaces, leading/trailing spaces, tabs/newlines
     embedded in tokens (which the space-only tokenizer must NOT split),
-    and null text."""
+    and null text — for BPE and WordPiece replay alike, plus WordPiece
+    longest-match inference against its per-word reference."""
     import random
 
     from pyspark.sql import Row
 
     from ratatool_spark.operators.corpus import bpe_learn, bpe_segment
+    from ratatool_spark.operators.wordpiece import (
+        wordpiece_learn,
+        wordpiece_match_segment,
+        wordpiece_match_word,
+        wordpiece_segment,
+        wordpiece_vocab,
+    )
 
     rng = random.Random(99)
     vocab = ["ab", "abc", "aab", "b\tc", "x\ny", "zz", "a", ""]
@@ -446,18 +454,37 @@ def test_bpe_segment_paths_agree_on_random_whitespace_corpus(spark):
         rows.append(Row(doc_id=i, text=text))
     rows.append(Row(doc_id=100, text=None))
     df = spark.createDataFrame(rows)
-    merges = bpe_learn(df.where(df.text.isNotNull()), n_merges=4)
+    texts = df.where(df.text.isNotNull())
 
-    expr = {
-        r["doc_id"]: r["bpe_syms"]
-        for r in bpe_segment(df, merges, expr_threshold=16).collect()
+    for learn, segment, col in (
+        (bpe_learn, bpe_segment, "bpe_syms"),
+        (wordpiece_learn, wordpiece_segment, "wp_syms"),
+    ):
+        merges = learn(texts, n_merges=4)
+        expr = {
+            r["doc_id"]: r[col]
+            for r in segment(df, merges, expr_threshold=16).collect()
+        }
+        udf = {
+            r["doc_id"]: r[col]
+            for r in segment(df, merges, expr_threshold=0).collect()
+        }
+        assert expr == udf
+        assert expr[100] is None  # null propagates on both paths
+
+    # drop every piece holding a tab so tab-bearing words fall back to [UNK]
+    wp_vocab = [v for v in wordpiece_vocab(texts, merges) if "\t" not in v]
+    got = {
+        r["doc_id"]: r["wp_syms"]
+        for r in wordpiece_match_segment(df, wp_vocab).collect()
     }
-    udf = {
-        r["doc_id"]: r["bpe_syms"]
-        for r in bpe_segment(df, merges, expr_threshold=0).collect()
-    }
-    assert expr == udf
-    assert expr[100] is None  # null propagates on both paths
+    assert got[100] is None
+    for r in rows[:-1]:
+        want = []
+        for w in r.text.strip(" ").split(" "):
+            want.extend(wordpiece_match_word(w, set(wp_vocab)))
+        assert got[r.doc_id] == want
+    assert any("[UNK]" in syms for syms in got.values() if syms)
 
 
 def test_unigram_logprob_score_matches_reference(spark):
@@ -1049,49 +1076,72 @@ def test_bpe_learn_ignores_empty_tokens(spark):
 
 
 def test_bpe_learn_batched_matches_driver_replay(spark, documents):
-    """bpe_learn(batch=k) must equal the pure-Python replay of the same
-    schedule: per round, rank pairs (cnt DESC, lhs, rhs), admit up to
-    batch symbol-disjoint pairs greedily, apply them all, repeat."""
+    """The batched learner must equal the pure-Python replay of the same
+    schedule: per round, rank pairs (score DESC, lhs, rhs), admit up to
+    batch symbol-disjoint pairs greedily, apply them all, repeat. Run for
+    both objectives — BPE (count, plain concatenation) and WordPiece
+    (cnt_ab / (cnt_a * cnt_b) over ##-marked symbols, marker-folding
+    merge output)."""
+    import operator
     from collections import defaultdict
 
     from ratatool_spark.operators.corpus import (
         _select_compatible_merges,
         bpe_learn,
     )
+    from ratatool_spark.operators.wordpiece import _wp_merged, wordpiece_learn
 
     n_merges, batch, pool = 20, 8, 64
-    got = bpe_learn(documents, n_merges=n_merges, batch=batch, pool=pool)
-
     words = defaultdict(int)
     for r in documents.select("text").collect():
         for w in (r["text"] or "").strip().split(" "):
             if w:
                 words[w] += 1
-    state = [(list(w), f) for w, f in words.items()]
-    exp = []
-    for _ in range(-(-n_merges // batch)):
-        pc = defaultdict(int)
-        for syms, f in state:
-            for i in range(len(syms) - 1):
-                pc[(syms[i], syms[i + 1])] += f
-        cands = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[:pool]
-        chosen = _select_compatible_merges([p for p, _ in cands], batch)
-        if not chosen:
-            break
-        exp.extend(chosen)
-        rset = {(a, b) for a, b in chosen}
-        nxt = []
-        for syms, f in state:
-            acc = []
-            for s in syms:
-                if acc and (acc[-1], s) in rset:
-                    acc[-1] = acc[-1] + s
-                else:
-                    acc.append(s)
-            nxt.append((acc, f))
-        state = nxt
-    assert got == exp[:n_merges]
-    assert len(got) == n_merges
+
+    def count(cab, sc, a, b):
+        return cab
+
+    def likelihood(cab, sc, a, b):
+        return float(cab) / (float(sc[a]) * float(sc[b]))
+
+    def marked(w):
+        return [("##" if i else "") + c for i, c in enumerate(w)]
+
+    for learn, split, score, merged in (
+        (bpe_learn, list, count, operator.add),
+        (wordpiece_learn, marked, likelihood, _wp_merged),
+    ):
+        got = learn(documents, n_merges=n_merges, batch=batch, pool=pool)
+        state = [(split(w), f) for w, f in words.items()]
+        exp = []
+        for _ in range(-(-n_merges // batch)):
+            pc = defaultdict(int)
+            sc = defaultdict(int)
+            for syms, f in state:
+                for s in syms:
+                    sc[s] += f
+                for i in range(len(syms) - 1):
+                    pc[(syms[i], syms[i + 1])] += f
+            cands = sorted(
+                pc, key=lambda p: (-score(pc[p], sc, *p), p)
+            )[:pool]
+            chosen = _select_compatible_merges(cands, batch, merged)
+            if not chosen:
+                break
+            exp.extend(chosen)
+            rset = {(a, b) for a, b in chosen}
+            nxt = []
+            for syms, f in state:
+                acc = []
+                for s in syms:
+                    if acc and (acc[-1], s) in rset:
+                        acc[-1] = merged(acc[-1], s)
+                    else:
+                        acc.append(s)
+                nxt.append((acc, f))
+            state = nxt
+        assert got == exp[:n_merges]
+        assert len(got) == n_merges
 
 
 def test_bpe_learn_batch1_is_strict_greedy(spark, documents):

@@ -3899,7 +3899,8 @@ def test_cli_agg_mode(tmp_path):
     import subprocess
     import sys
 
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
     tbl = str(tmp_path / "cliagg")
     r1 = subprocess.run(
         [sys.executable, "-m", "ratatool_spark.cli", "snapshot",

@@ -117,6 +117,14 @@ def test_artifact_roundtrip_and_algo_guard(spark, tmp_path):
     save_bpe_tokenizer(spark, p2, merges)
     with pytest.raises(ValueError, match="not a v1 wordpiece"):
         load_wordpiece_tokenizer(spark, p2)
+    # ...and a WordPiece artifact refused by the BPE loader, in either
+    # alphabet mode (replayed as BPE it would encode "low" as l/o/w)
+    from ratatool_spark.operators.corpus import load_bpe_tokenizer
+
+    for expect in (None, False, True):
+        with pytest.raises(ValueError, match="not a bpe artifact"):
+            load_bpe_tokenizer(spark, p, expect_byte_level=expect)
+    assert load_bpe_tokenizer(spark, p2) == merges
 
 
 def test_batched_admission_uses_wp_output(spark):
